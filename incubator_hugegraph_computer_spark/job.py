@@ -93,7 +93,8 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--method", default="superstep",
                    choices=["superstep", "stride"],
                    help="pagerank/lpa schedule: per-superstep barriers or "
-                   "stride-fused actions (identical output, parity-pinned)")
+                   "stride-fused actions (same per-iteration math; a run "
+                   "that converges may do up to stride-1 extra iterations)")
     p.add_argument("--stride", type=int, default=None,
                    help="iterations fused per action for --method stride "
                    "(default: pagerank 2, lpa 4)")

@@ -4,9 +4,8 @@ The third classic link-graph centrality next to PageRank and HITS:
 
     katz(v) = Σ_{k=1..K} α^k · |walks of length k ending at v|
 
-Computed with the scaled-walk recurrence (no per-step literals, so the
-whole-stage-codegen source is identical every superstep and the Janino
-cache stays hot — same reasoning as pagerank._with_scalars):
+Computed with the scaled-walk recurrence, which needs no driver
+scalars: every superstep runs the same plan with α as its one literal.
 
     y_0(v) = 1
     y_k(v) = α · Σ_{u→v} y_{k-1}(u)          (= α^k · walks_k(v))

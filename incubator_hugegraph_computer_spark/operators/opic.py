@@ -26,8 +26,8 @@ nodes by redistributing their cash uniformly):
 Scale shape: identical to the audited PageRank plan — one co-partitioned
 SHUFFLE_HASH state⋈edges join + map-side-combined groupBy(dst) per
 superstep; the dangling mass is one scalar aggregator (computed in the
-same single agg pass as the engine's other counters) attached back
-in-plan as a broadcast one-row join. V-row state, nothing collected.
+same single agg pass as the engine's other counters) enters the next
+superstep's update as a literal. V-row state, nothing collected.
 Fixed iterations keep the result exactly replayable by an unrolled SQL
 oracle.
 """
@@ -45,18 +45,6 @@ from incubator_hugegraph_computer_spark.plans.bsp import (
     SuperstepContext,
     message_pass,
 )
-
-
-def _with_scalars(state: DataFrame, **scalars: float) -> DataFrame:
-    # broadcast one-row join (the PageRank scalar pattern): keeps the
-    # generated codegen source step-invariant so the Janino cache stays hot
-    spark = state.sparkSession
-    names = sorted(scalars)
-    row = spark.createDataFrame(
-        [tuple(float(scalars[n]) for n in names)],
-        ", ".join(f"{n} double" for n in names),
-    )
-    return state.crossJoin(F.broadcast(row))
 
 
 class OpicProgram(BspProgram):
@@ -89,16 +77,12 @@ class OpicProgram(BspProgram):
         }
 
     def update(self, state: DataFrame, inbox: DataFrame, ctx: SuperstepContext) -> DataFrame:
-        n = ctx.num_vertices
-        return (
-            _with_scalars(state, _dangling_cash=ctx.prev_aggs["dangling"] / n)
-            .join(inbox, "id", "left")
-            .select(
-                "id",
-                "out_deg",
-                (F.coalesce(F.col("msg"), F.lit(0.0)) + F.col("_dangling_cash")).alias("cash"),
-                (F.col("hist") + F.col("cash")).alias("hist"),
-            )
+        dangling_cash = F.lit(float(ctx.prev_aggs["dangling"]) / ctx.num_vertices)
+        return state.join(inbox, "id", "left").select(
+            "id",
+            "out_deg",
+            (F.coalesce(F.col("msg"), F.lit(0.0)) + dangling_cash).alias("cash"),
+            (F.col("hist") + F.col("cash")).alias("hist"),
         )
 
 

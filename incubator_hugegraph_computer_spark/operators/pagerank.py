@@ -34,7 +34,7 @@ from __future__ import annotations
 
 from typing import Any
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from incubator_hugegraph_computer_spark.graph import Graph
 from incubator_hugegraph_computer_spark.plans.bsp import (
@@ -87,6 +87,17 @@ class _PageRankBase(BspProgram):
     def combine(self, messages: DataFrame) -> DataFrame:
         return messages.groupBy(F.col("dst").alias("id")).agg(F.sum("msg").alias("msg"))
 
+    @staticmethod
+    def _next_state(state: DataFrame, inbox: DataFrame, new_rank: Column) -> DataFrame:
+        """The superstep's vertex update: ``new_rank`` over state ⋈ inbox,
+        plus the per-vertex L1 term the convergence aggregator sums."""
+        return state.join(inbox, "id", "left").select(
+            "id",
+            "out_deg",
+            new_rank.alias("rank"),
+            F.abs(new_rank - F.col("rank")).alias("delta"),
+        )
+
     def agg_exprs(self, ctx: SuperstepContext) -> dict[str, Any]:
         # The four PageRank aggregators (PageRank4Master.init registers
         # dangling count/mass, cumulative rank, L1 diff) in one pass.
@@ -95,21 +106,6 @@ class _PageRankBase(BspProgram):
             "dangling": F.sum(F.when(F.col("out_deg") == 0, F.col("rank")).otherwise(0.0)),
             "l1": F.sum("delta"),
         }
-
-
-def _with_scalars(state: DataFrame, **scalars: float) -> DataFrame:
-    """Attach per-superstep driver scalars as a broadcast one-row join
-    instead of literals. Literals are inlined into the whole-stage
-    codegen source, so a step-varying literal forces a Janino
-    recompilation every superstep; a constant-shape join keeps the
-    generated source identical and the codegen cache hot."""
-    spark = state.sparkSession
-    names = sorted(scalars)
-    row = spark.createDataFrame(
-        [tuple(float(scalars[n]) for n in names)],
-        ", ".join(f"{n} double" for n in names),
-    )
-    return state.crossJoin(F.broadcast(row))
 
 
 class PageRankProgram(_PageRankBase):
@@ -122,26 +118,25 @@ class PageRankProgram(_PageRankBase):
         self.alpha = alpha
         self.l1_threshold = l1_threshold
 
-    def update(self, state: DataFrame, inbox: DataFrame, ctx: SuperstepContext) -> DataFrame:
-        n = ctx.num_vertices
+    def _rank_step(
+        self, state: DataFrame, inbox: DataFrame, n: int, dangling_rank: Column, cum: Column
+    ) -> DataFrame:
         new_rank = (
-            (F.col("_dangling_rank") + F.coalesce(F.col("msg"), F.lit(0.0)))
+            (dangling_rank + F.coalesce(F.col("msg"), F.lit(0.0)))
             * F.lit(1.0 - self.alpha)
             + F.lit(self.alpha / n)
-        ) / F.col("_cum")
-        return (
-            _with_scalars(
-                state,
-                _dangling_rank=ctx.prev_aggs["dangling"] / n,
-                _cum=ctx.prev_aggs["cum"],
-            )
-            .join(inbox, "id", "left")
-            .select(
-                "id",
-                "out_deg",
-                new_rank.alias("rank"),
-                F.abs(new_rank - F.col("rank")).alias("delta"),
-            )
+        ) / cum
+        return self._next_state(state, inbox, new_rank)
+
+    def update(self, state: DataFrame, inbox: DataFrame, ctx: SuperstepContext) -> DataFrame:
+        # the previous superstep's aggregators enter the plan as literals
+        n = ctx.num_vertices
+        return self._rank_step(
+            state,
+            inbox,
+            n,
+            F.lit(float(ctx.prev_aggs["dangling"]) / n),
+            F.lit(float(ctx.prev_aggs["cum"])),
         )
 
     def halt(self, ctx: SuperstepContext) -> bool:
@@ -219,20 +214,12 @@ class PageRankStrideProgram(PageRankProgram):
                 F.sum("rank").alias("_cum"),
             )
             inbox2 = self.combine(self.messages(cur, self.graph, ctx))
-            new_rank = (
-                (F.col("_dangling_rank") + F.coalesce(F.col("msg"), F.lit(0.0)))
-                * F.lit(1.0 - self.alpha)
-                + F.lit(self.alpha / n)
-            ) / F.col("_cum")
-            cur = (
-                cur.crossJoin(F.broadcast(scal))
-                .join(inbox2, "id", "left")
-                .select(
-                    "id",
-                    "out_deg",
-                    new_rank.alias("rank"),
-                    F.abs(new_rank - F.col("rank")).alias("delta"),
-                )
+            cur = self._rank_step(
+                cur.crossJoin(F.broadcast(scal)),
+                inbox2,
+                n,
+                F.col("_dangling_rank"),
+                F.col("_cum"),
             )
         return cur
 
@@ -255,18 +242,10 @@ class PageRankClassicProgram(_PageRankBase):
     def update(self, state: DataFrame, inbox: DataFrame, ctx: SuperstepContext) -> DataFrame:
         n = ctx.num_vertices
         new_rank = F.lit((1.0 - self.damping) / n) + F.lit(self.damping) * (
-            F.coalesce(F.col("msg"), F.lit(0.0)) + F.col("_dangling_rank")
+            F.coalesce(F.col("msg"), F.lit(0.0))
+            + F.lit(float(ctx.prev_aggs["dangling"]) / n)
         )
-        return (
-            _with_scalars(state, _dangling_rank=ctx.prev_aggs["dangling"] / n)
-            .join(inbox, "id", "left")
-            .select(
-                "id",
-                "out_deg",
-                new_rank.alias("rank"),
-                F.abs(new_rank - F.col("rank")).alias("delta"),
-            )
-        )
+        return self._next_state(state, inbox, new_rank)
 
     def halt(self, ctx: SuperstepContext) -> bool:
         return ctx.superstep > 1 and ctx.aggs["l1"] <= self.tol

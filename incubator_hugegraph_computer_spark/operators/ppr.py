@@ -38,24 +38,16 @@ class PprProgram(_PageRankBase):
         )
 
     def update(self, state: DataFrame, inbox: DataFrame, ctx: SuperstepContext) -> DataFrame:
-        from incubator_hugegraph_computer_spark.operators.pagerank import _with_scalars
-
         is_src = (F.col("id") == self.source).cast("double")
         new_rank = (
             F.lit(1.0 - self.damping) * is_src
             + F.lit(self.damping)
-            * (F.coalesce(F.col("msg"), F.lit(0.0)) + F.col("_dangling") * is_src)
-        )
-        return (
-            _with_scalars(state, _dangling=ctx.prev_aggs["dangling"])
-            .join(inbox, "id", "left")
-            .select(
-                "id",
-                "out_deg",
-                new_rank.alias("rank"),
-                F.abs(new_rank - F.col("rank")).alias("delta"),
+            * (
+                F.coalesce(F.col("msg"), F.lit(0.0))
+                + F.lit(float(ctx.prev_aggs["dangling"])) * is_src
             )
         )
+        return self._next_state(state, inbox, new_rank)
 
     def halt(self, ctx: SuperstepContext) -> bool:
         return self.tol > 0 and ctx.superstep > 1 and ctx.aggs["l1"] <= self.tol
@@ -326,8 +318,8 @@ def ppr_push(
                     + F.coalesce("dr2", F.lit(0.0))
                 ).alias("r"),
             )
-            # the BSP loop's lineage discipline (plans/bsp.py:300-330):
-            # lazy truncation + persist + RELEASE of the previous round's
+            # the lineage discipline of plans/lineage.advance: lazy
+            # truncation + persist + RELEASE of the previous round's
             # cache. Chained EAGER localCheckpoints accumulate in the
             # driver and hit a measured 2x-per-round wall from ~16
             # rounds (OOM by ~60); this shape stays flat indefinitely.

@@ -54,24 +54,16 @@ class TrustRankProgram(_PageRankBase):
         )
 
     def update(self, state: DataFrame, inbox: DataFrame, ctx: SuperstepContext) -> DataFrame:
-        from incubator_hugegraph_computer_spark.operators.pagerank import _with_scalars
-
         sw = self._seed_weight()
         new_rank = (
             F.lit(1.0 - self.damping) * sw
             + F.lit(self.damping)
-            * (F.coalesce(F.col("msg"), F.lit(0.0)) + F.col("_dangling") * sw)
-        )
-        return (
-            _with_scalars(state, _dangling=ctx.prev_aggs["dangling"])
-            .join(inbox, "id", "left")
-            .select(
-                "id",
-                "out_deg",
-                new_rank.alias("rank"),
-                F.abs(new_rank - F.col("rank")).alias("delta"),
+            * (
+                F.coalesce(F.col("msg"), F.lit(0.0))
+                + F.lit(float(ctx.prev_aggs["dangling"])) * sw
             )
         )
+        return self._next_state(state, inbox, new_rank)
 
     def halt(self, ctx: SuperstepContext) -> bool:
         return self.tol > 0 and ctx.superstep > 1 and ctx.aggs["l1"] <= self.tol

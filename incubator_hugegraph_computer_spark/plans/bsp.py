@@ -32,13 +32,16 @@ A program supplies the Computation/MasterComputation surface
 State DataFrames must carry ``id`` and may carry ``active``; everything
 else is program-defined columns.
 
-Per-superstep cost = exactly two Spark jobs: (1) materialize the
-combined inbox (the shuffle + its row count), (2) one full-state agg
-that materializes the new state into cache AND computes every
-aggregator + the active count. Lineage is truncated with an eager
-localCheckpoint every ``truncate_every`` supersteps (every superstep
-when a durable CheckpointManager is attached — resume needs the write
-anyway).
+Per-superstep cost: one aggregator action over the new state, which is
+the barrier — it materializes the state into its lazy ``localCheckpoint``
+(the one stored copy, lineage truncated) and computes every aggregator
+plus the active count. Under AQE the action's shuffle stages run as
+their own jobs, so a PageRank superstep measures ~6 Spark jobs
+(local[4], 80k edges). The previous state's checkpoint blocks are
+released once the new state has materialized. The combined inbox is
+counted (one more job) only when something reads the count: a durable
+CheckpointManager is attached (metrics.jsonl), the caller asks for it,
+or no vertex is active — the one case the termination rule reads it.
 """
 
 from __future__ import annotations
@@ -52,6 +55,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 from incubator_hugegraph_computer_spark.graph import Graph
 from incubator_hugegraph_computer_spark.plans.checkpoint import CheckpointManager
+from incubator_hugegraph_computer_spark.plans.lineage import release
 
 # Default superstep budget mirrors bsp.max_super_step=10
 # (computer-api/.../config/ComputerOptions.java:521-528).
@@ -195,8 +199,7 @@ class BspEngine:
         checkpoint_dir: str | None = None,
         checkpoint_every: int = 1,
         run_id: str | None = None,
-        truncate_every: int = 1,
-        count_messages: bool = True,
+        count_messages: bool | None = None,
         track_shuffle: bool | None = None,
         checkpoint_messages: bool = False,
         checkpoint_table: str | None = None,
@@ -204,7 +207,6 @@ class BspEngine:
     ):
         self.graph = graph
         self.max_supersteps = max_supersteps
-        self.truncate_every = max(1, truncate_every)
         # Also snapshot the combined inbox each checkpointed superstep
         # (SnapshotManager snapshots message files alongside vertex
         # state) — lets step k's update be REPLAYED from load(k-1) +
@@ -214,10 +216,12 @@ class BspEngine:
         # a per-stage round trip, so only on by default for durable
         # (checkpointed) runs where the metrics row is persisted anyway.
         self.track_shuffle = (checkpoint_dir is not None) if track_shuffle is None else track_shuffle
-        # Counting the combined inbox is one extra (cheap) job per
-        # superstep; it feeds the messages_sent counter and the
-        # no-messages half of the termination rule. Programs that halt
-        # via aggregators/active-count alone can disable it.
+        # messages_sent costs one job per counted superstep. None (the
+        # default) counts only when it is read: every superstep of a
+        # checkpointed run (metrics.jsonl), and any superstep that ends
+        # with no active vertex (the termination rule's no-messages
+        # half). True counts every superstep; False never does, and the
+        # run then halts on the active count alone.
         self.count_messages = count_messages
         # checkpoint_table switches the state backend to a catalog table
         # (Iceberg when such a catalog is configured; see
@@ -237,8 +241,8 @@ class BspEngine:
 
     # ------------------------------------------------------------------
     def _collect_state(self, program: BspProgram, state: DataFrame, ctx: SuperstepContext):
-        """One action: aggregators + active count over the (persisted)
-        state — this is also what materializes the superstep (the BSP
+        """One action: aggregators + active count over the new state —
+        this is also what materializes the superstep (the BSP
         barrier)."""
         exprs = dict(program.agg_exprs(ctx))
         if "active" in state.columns:
@@ -252,27 +256,22 @@ class BspEngine:
     def run(self, program: BspProgram, resume: bool = False) -> tuple[DataFrame, SuperstepContext]:
         g = self.graph.cache()
         ctx = SuperstepContext(num_vertices=g.num_vertices())
+        count_every_step = self.count_messages or (
+            self.count_messages is None and self.ckpt is not None
+        )
 
         start_step = 0
         state: DataFrame | None = None
         if resume and self.ckpt is not None:
             latest = self.ckpt.latest_complete()
             if latest is not None:
-                state, saved = self.ckpt.load(g.spark, latest)
-                state = state.persist()
-                ctx.aggs = saved
+                state, ctx.aggs = self.ckpt.load(g.spark, latest)
                 start_step = latest + 1
         if state is None:
-            state = program.initial_state(g).persist()
+            state = program.initial_state(g).localCheckpoint(eager=False)
             self._collect_state(program, state, ctx)
             if self.ckpt is not None and self.ckpt.should_checkpoint(0):
-                saved = self.ckpt.save(
-                    0, state, ctx.aggs, self._metrics(ctx, wall_ms=0)
-                ).persist()
-                # release the pre-checkpoint initial state (the loop does
-                # the same unpersist-before-swap for later supersteps)
-                state.unpersist()
-                state = saved
+                self.ckpt.save(0, state, ctx.aggs, self._metrics(ctx, wall_ms=0))
             start_step = 1
 
         for step in range(start_step, self.max_supersteps + 1):
@@ -285,26 +284,23 @@ class BspEngine:
             ctx.prev_aggs = ctx.aggs
             ctx.superstep = step
 
-            msgs = program.messages(state, g, ctx)
-            inbox = program.combine(msgs)
-            if self.count_messages:
+            inbox = program.combine(program.messages(state, g, ctx))
+            ctx.messages_sent = -1
+            if count_every_step:
+                # counted up front so the update job reuses the cache
                 inbox = inbox.persist()
                 ctx.messages_sent = inbox.count()
-            else:
-                # inbox is consumed exactly once inside the update job —
-                # persisting it would only add bookkeeping
-                ctx.messages_sent = -1
 
-            # Lazy local checkpoint: the aggregator action below both
-            # materializes the superstep AND truncates lineage in a
-            # single job (an eager checkpoint would be a second job).
-            new_state = program.update(state, inbox, ctx)
-            if step % self.truncate_every == 0 and not (
-                self.ckpt is not None and self.ckpt.should_checkpoint(step)
-            ):
-                new_state = new_state.localCheckpoint(eager=False)
-            new_state = new_state.persist()
+            # The lazy local checkpoint is the superstep's one stored
+            # copy: the aggregator action below materializes it AND
+            # truncates lineage in a single job. Without truncation each
+            # superstep's plan nests the previous one's and Catalyst
+            # re-analysis blows up 5-10x by step 4 (SURVEY §7 hard parts).
+            new_state = program.update(state, inbox, ctx).localCheckpoint(eager=False)
             self._collect_state(program, new_state, ctx)
+            if ctx.active_vertices == 0 and ctx.messages_sent < 0 and self.count_messages is None:
+                # recomputes the inbox from ``state``, so before its release
+                ctx.messages_sent = inbox.count()
 
             if self.track_shuffle and stage_mark is not None:
                 read, write, _ = shuffle_bytes_since(g.spark, stage_mark)
@@ -312,22 +308,16 @@ class BspEngine:
                 ctx.shuffle_write_bytes = write
             wall_ms = int((time.monotonic() - t0) * 1000)
             if self.ckpt is not None and self.ckpt.should_checkpoint(step):
-                persisted = self.ckpt.save(
+                self.ckpt.save(
                     step,
                     new_state,
                     ctx.aggs,
                     self._metrics(ctx, wall_ms),
                     messages=inbox if self.checkpoint_messages else None,
-                ).persist()
-                new_state.unpersist()
-                new_state = persisted
-            # else: lineage already truncated by the lazy localCheckpoint
-            # above (default every superstep) — without truncation each
-            # superstep's plan nests the previous one's and Catalyst
-            # re-analysis blows up 5-10x by step 4 (SURVEY §7 hard parts).
+                )
 
-            state.unpersist()
-            if self.count_messages:
+            release(state)
+            if count_every_step:
                 inbox.unpersist()
             state = new_state
             ctx.stats.append(self._metrics(ctx, wall_ms))

@@ -1,8 +1,8 @@
 """Per-round lineage discipline for driver-loop iterative operators.
 
-The BSP engine (``plans/bsp.py:300-330``) truncates each superstep's
-lineage with a LAZY ``localCheckpoint`` + ``persist`` and RELEASES the
-previous round's cache. Chaining EAGER ``localCheckpoint`` calls
+The BSP engine (``plans/bsp.py``) truncates each superstep's lineage
+with a LAZY ``localCheckpoint`` and RELEASES the previous round's
+blocks. Chaining EAGER ``localCheckpoint`` calls
 instead — which several standalone operator loops originally did —
 accumulates driver-side state that was measured to double per-round
 wall time from roughly round 16 on local[4]/4g and to OOM the driver
@@ -12,11 +12,23 @@ rounds) never feel it; user-raised budgets do.
 ``advance(prev, new)`` is that discipline as a function: returns the
 materialized new state and frees the previous one. Use it for every
 round-parameterized DataFrame loop outside the BSP engine.
+:func:`release` frees a round's state, checkpoint blocks included.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+
+
+def release(df: DataFrame) -> None:
+    """Free what ``df`` stores: its cache entry and, when ``df`` is a
+    ``localCheckpoint``, the checkpoint blocks, which ``unpersist()``
+    leaves to the JVM garbage collector. Call it only once every
+    consumer of ``df`` has materialized."""
+    df.unpersist()
+    plan = df._jdf.queryExecution().logical()
+    if plan.getClass().getSimpleName() == "LogicalRDD":
+        plan.rdd().unpersist(False)
 
 
 def advance(prev: DataFrame | None, new: DataFrame) -> DataFrame:
