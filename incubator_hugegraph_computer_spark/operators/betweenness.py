@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from incubator_hugegraph_computer_spark.graph import Graph
-from incubator_hugegraph_computer_spark.plans.lineage import advance, advance_counted
+from incubator_hugegraph_computer_spark.plans.lineage import barrier, release
 
 
 def betweenness(
@@ -57,7 +57,7 @@ def betweenness(
                 < int(sample_rate * 1_000_000)
             )
     # ---------------- forward phase: BFS layers with path counts
-    layer = advance(
+    layer, _ = barrier(
         None,
         sources.select(
             F.col("id").alias("source"), F.col("id").alias("v"),
@@ -65,18 +65,18 @@ def betweenness(
         ),
     )
     layers = [layer]
-    # visited = lazy union over the per-level frames. Each LEVEL is
-    # advance()-materialized (checkpoint + persist), so the union's plan
-    # is k flat cache scans — no nested lineage, and no O(S·V)
-    # re-materialization of the visited set every depth (the advance()
-    # call the r4 conversion paid here was the measured +34% regression).
-    # One action per depth: advance_counted's count doubles as the
-    # frontier-empty check.
+    # visited = lazy union over the per-level frames. Each LEVEL passes
+    # a barrier (one stored checkpoint copy), so the union's plan is k
+    # flat checkpoint scans — no nested lineage, and no O(S·V)
+    # re-materialization of the visited set every depth (materializing
+    # the union itself, as the r4 conversion did, was the measured +34%
+    # regression). One action per depth: the barrier's row count doubles
+    # as the frontier-empty check.
     visited = layer.select("source", "v")
     depth = 0
     while depth < max_depth:
         depth += 1
-        nxt, n = advance_counted(
+        nxt, (n,) = barrier(
             None,
             layer.join(edges, layer.v == edges.src)
             .groupBy("source", F.col("dst").alias("v"))
@@ -85,7 +85,7 @@ def betweenness(
             .select("source", "v", F.lit(depth).alias("dist"), "sigma"),
         )
         if n == 0:
-            nxt.unpersist()
+            release(nxt)
             break
         layers.append(nxt)
         visited = visited.unionAll(nxt.select("source", "v"))
@@ -124,7 +124,7 @@ def betweenness(
         if per_edge:
             # the per-level credit feeds BOTH the edge accumulation and
             # the vertex delta below — materialize it once
-            credits = advance(None, credits)
+            credits, _ = barrier(None, credits)
             edge_acc.append(credits.select("v", "w", "credit"))
         contrib = credits.groupBy("source", "v").agg(F.sum("credit").alias("delta"))
         delta = (
@@ -132,18 +132,20 @@ def betweenness(
             .join(contrib, ["source", "v"], "left")
             .select("source", "v", F.coalesce(F.col("delta"), F.lit(0.0)).alias("delta"))
             .localCheckpoint(eager=False)
-            .persist()
         )
         # materialize only every 8th level: in between, levels stay lazy
-        # (persisted, so each computes once inside the next action's job)
+        # (each lazy checkpoint stores its blocks once, computed inside
+        # the next action's job)
         # and the final aggregation's plan nests at most 8 deep — one
         # count job per stride instead of per level, without the
         # unbounded-plan-depth hazard on deep graphs
         if (len(layers) - 2 - lvl) % 8 == 7:
             delta.count()
         acc.append(delta.where(F.col("source") != F.col("v")))
-    # every delta level is checkpointed, so the cached edge set is no
-    # longer reachable from the result plan — release it
+    # The result plan still reads the cached edge set through the up to
+    # 7 delta levels after the last counted one: those levels are lazy,
+    # so once the cache is dropped below they recompute the distinct-edge
+    # scan inside the result's job (correct, one extra scan).
     if per_edge:
         if not edge_acc:
             out = edges.select("src", "dst", F.lit(0.0).alias("betweenness"))
@@ -161,7 +163,7 @@ def betweenness(
                 "src", "dst", F.coalesce("betweenness", F.lit(0.0)).alias("betweenness")
             )
         )
-        out = advance(None, out)
+        out, _ = barrier(None, out)
         edges.unpersist()
         return out
     edges.unpersist()

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from incubator_hugegraph_computer_spark.graph import Graph
 from incubator_hugegraph_computer_spark.operators.sssp import sssp
+from incubator_hugegraph_computer_spark.plans.lineage import barrier
 
 
 def bfs_depth(
@@ -171,9 +172,7 @@ def temporal_reachability(
             .groupBy(F.col("dst").alias("id"))
             .agg(F.min(ts_col).cast("long").alias("cand"))
         )
-        from incubator_hugegraph_computer_spark.plans.lineage import advance
-
-        arr = advance(
+        arr, _ = barrier(
             arr,
             arr.join(relax, "id", "full").select(
                 "id",
@@ -236,9 +235,7 @@ def msbfs_reach(
             .groupBy(F.col("dst").alias("id"))
             .agg(F.expr("bit_or(mask)").alias("mask"))
         )
-        from incubator_hugegraph_computer_spark.plans.lineage import advance
-
-        state = advance(
+        state, _ = barrier(
             state,
             state.union(msg)
             .groupBy("id")

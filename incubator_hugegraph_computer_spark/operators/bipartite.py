@@ -19,8 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from incubator_hugegraph_computer_spark.graph import Graph
-from incubator_hugegraph_computer_spark.plans.lineage import advance
 from incubator_hugegraph_computer_spark.operators.wcc import wcc
+from incubator_hugegraph_computer_spark.plans.lineage import barrier, release
 
 
 def bipartite_check(graph: Graph, max_depth: int = 200) -> DataFrame:
@@ -30,7 +30,7 @@ def bipartite_check(graph: Graph, max_depth: int = 200) -> DataFrame:
     comp = wcc(graph, count_messages=False).persist()
 
     # multi-source parity BFS: roots are the component labels themselves
-    labeled = advance(
+    labeled, _ = barrier(
         None,
         comp.where(F.col("comp") == F.col("id")).select(
             "id", F.lit(0).alias("parity")
@@ -51,15 +51,13 @@ def bipartite_check(graph: Graph, max_depth: int = 200) -> DataFrame:
             .groupBy("id")
             .agg(F.min("parity").alias("parity"))
         )
-        nxt = advance(None, nxt)
-        if nxt.isEmpty():
-            nxt.unpersist()
+        nxt, (n,) = barrier(None, nxt)
+        if n == 0:
+            release(nxt)
             break
-        new_labeled = advance(None, labeled.unionAll(nxt))
-        if labeled is not frontier:
-            labeled.unpersist()
+        new_labeled, _ = barrier(labeled, labeled.unionAll(nxt))
         if frontier is not labeled:
-            frontier.unpersist()
+            release(frontier)
         labeled, frontier = new_labeled, nxt
     else:
         # an exhausted depth budget would leave vertices unlabeled and
@@ -85,7 +83,7 @@ def bipartite_check(graph: Graph, max_depth: int = 200) -> DataFrame:
         .join(odd.withColumn("odd", F.lit(True)), "comp", "left")
         .select("comp", "n_vertices", F.coalesce(~F.col("odd"), F.lit(True)).alias("is_bipartite"))
     )
-    result = out.localCheckpoint(eager=True)
+    result, _ = barrier(labeled, out)
     sym.unpersist()
     comp.unpersist()
     return result

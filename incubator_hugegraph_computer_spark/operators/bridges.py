@@ -41,9 +41,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from incubator_hugegraph_computer_spark.graph import Graph
-from incubator_hugegraph_computer_spark.plans.lineage import advance, advance_agg, advance_counted
 from incubator_hugegraph_computer_spark.operators.closeness import multi_source_bfs
 from incubator_hugegraph_computer_spark.operators.wcc import wcc
+from incubator_hugegraph_computer_spark.plans.lineage import barrier, release
 
 
 def _undirected_pairs(graph: Graph) -> DataFrame:
@@ -113,13 +113,13 @@ def bridges(graph: Graph, max_depth: int = 64) -> DataFrame:
     ny = nodes.select(
         F.col("id").alias("y"), F.col("dep").alias("ydep"), F.col("parent").alias("ypar")
     )
-    state, n_live = advance_counted(
+    state, (n_live,) = barrier(
         None,
         nt.select(F.col("a").alias("x"), F.col("b").alias("y"))
         .where(F.col("x") != F.col("y")),
     )
     # Per round, ONE action: the live next-pairs and this round's covered
-    # tree edges ride the same tagged frame, advance_agg materializes it
+    # tree edges ride the same tagged frame, the barrier materializes it
     # and reads the live count off the materializing aggregation. Each
     # round's frame stays pinned until the end (its live=0 rows are the
     # covered edges the final anti-join consumes).
@@ -147,7 +147,7 @@ def bridges(graph: Graph, max_depth: int = 64) -> DataFrame:
             )
             .distinct()
         )
-        frame, row = advance_agg(None, both, F.sum("live"))
+        frame, row = barrier(None, both, F.sum("live"))
         frames.append(frame)
         n_live = row[0] or 0
         state = frame.where(F.col("live") == 1).select("x", "y")
@@ -161,9 +161,9 @@ def bridges(graph: Graph, max_depth: int = 64) -> DataFrame:
         for part in covered_parts[1:]:
             covered = covered.unionAll(part)
         out = tree.join(covered.distinct(), ["a", "b"], "left_anti")
-    result = advance(None, out)
+    result, _ = barrier(None, out)
     for f in frames:
-        f.unpersist()
+        release(f)
     nodes.unpersist()
     tree.unpersist()
     und.unpersist()

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from incubator_hugegraph_computer_spark.graph import Graph
-from incubator_hugegraph_computer_spark.plans.lineage import advance
+from incubator_hugegraph_computer_spark.plans.lineage import barrier
 
 
 def threshold_cascade(
@@ -52,12 +52,14 @@ def threshold_cascade(
                 .groupBy("id")
                 .agg(F.sum("c").alias("c"))
             )
-        counts = advance(prev_counts, plan.join(active, "id", "left_anti"))
+        counts, (n_newly,) = barrier(
+            prev_counts, plan.join(active, "id", "left_anti"), F.count_if(F.col("c") >= k)
+        )
+        if n_newly == 0:
+            break
         newly = counts.where(F.col("c") >= k).select(
             "id", F.lit(rnd).cast("long").alias("round")
         )
-        if newly.isEmpty():
-            break
-        active = advance(active, active.unionByName(newly))
+        active, _ = barrier(active, active.unionByName(newly))
         frontier = newly
     return active

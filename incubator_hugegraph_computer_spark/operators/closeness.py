@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from incubator_hugegraph_computer_spark.graph import Graph
-from incubator_hugegraph_computer_spark.plans.lineage import advance
+from incubator_hugegraph_computer_spark.plans.lineage import barrier, release
 
 
 def closeness(
@@ -112,25 +112,25 @@ def multi_source_bfs(
                 )
                 < int(edge_sample_rate * 1_000_000)
             )
-        nxt = advance(
+        nxt, (n,) = barrier(
             None,
             expanded
             .select(F.col("dst").alias("v"), "source", (F.col("dist") + 1).alias("dist"))
             .distinct()
             .join(visited.select("v", "source"), ["v", "source"], "left_anti"),
         )
-        if nxt.isEmpty():
-            nxt.unpersist()
+        if n == 0:
+            release(nxt)
             break
-        new_visited = advance(None, visited.unionAll(nxt))
+        new_visited, _ = barrier(None, visited.unionAll(nxt))
         # release the superseded round-(k-1) caches — visited is
         # materialized, so nothing downstream re-reads them
         if visited is not frontier:
-            visited.unpersist()
-        frontier.unpersist()
+            release(visited)
+        release(frontier)
         visited, frontier = new_visited, nxt
     if frontier is not visited:
-        frontier.unpersist()
+        release(frontier)
     return visited
 
 
@@ -185,7 +185,7 @@ def _closeness_weighted(
             .groupBy("v", "source")
             .agg(F.min("dist").alias("dist"))
         )
-        improved = advance(
+        improved, (n,) = barrier(
             None,
             cand.join(
                 best.select("v", "source", F.col("dist").alias("_old")),
@@ -194,21 +194,21 @@ def _closeness_weighted(
             .where(F.col("_old").isNull() | (F.col("dist") < F.col("_old")))
             .select("v", "source", "dist"),
         )
-        if improved.isEmpty():
-            improved.unpersist()
+        if n == 0:
+            release(improved)
             break
-        new_best = advance(
+        new_best, _ = barrier(
             None,
             best.join(improved.select("v", "source"), ["v", "source"], "left_anti")
             .unionAll(improved),
         )
         # release superseded caches (round-(k-1) best and frontier)
         if best is not frontier:
-            best.unpersist()
-        frontier.unpersist()
+            release(best)
+        release(frontier)
         best, frontier = new_best, improved
     if frontier is not best:
-        frontier.unpersist()
+        release(frontier)
     return (
         best.where(F.col("dist") > 0)
         .groupBy(F.col("v").alias("id"))

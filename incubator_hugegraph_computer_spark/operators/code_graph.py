@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from incubator_hugegraph_computer_spark.graph import Graph
 from incubator_hugegraph_computer_spark.operators.scc import scc
-from incubator_hugegraph_computer_spark.plans.lineage import advance, advance_counted
+from incubator_hugegraph_computer_spark.plans.lineage import barrier, release
 
 
 def condensation_edges(graph: Graph, labels: DataFrame) -> DataFrame:
@@ -77,15 +77,16 @@ def build_layers(graph: Graph, max_depth: int = 200) -> DataFrame:
             .groupBy(F.col("dst").alias("cid"))
             .agg((F.max("layer") + F.lit(1)).alias("m"))
         )
-        state = advance(
+        state, chg = barrier(
             state,
             state.join(msgs, "cid", "left").select(
                 "cid",
                 F.greatest(F.col("layer"), F.coalesce(F.col("m"), F.col("layer"))).alias("layer"),
                 (F.coalesce(F.col("m"), F.lit(-1)) > F.col("layer")).alias("chg"),
             ),
+            F.sum(F.col("chg").cast("int")),
         )
-        if state.where("chg").isEmpty():
+        if (chg[0] or 0) == 0:
             break
     out = labels.join(
         state.select(F.col("cid").alias("scc"), "layer"), "scc"
@@ -139,7 +140,7 @@ def critical_path(
             .groupBy(F.col("dst").alias("cid"))
             .agg(F.max("finish").alias("m"))
         )
-        state = advance(
+        state, chg = barrier(
             state,
             state.join(msgs, "cid", "left")
             .join(csum, "cid")
@@ -152,12 +153,13 @@ def critical_path(
                     F.coalesce(F.col("m") + F.col("w"), F.lit(-1)) > F.col("finish")
                 ).alias("chg"),
             ),
+            F.sum(F.col("chg").cast("int")),
         )
-        if state.where("chg").isEmpty():
+        if (chg[0] or 0) == 0:
             break
     # materialize before releasing labels/csum — out's lazy checkpoint
     # still reads them until its first action
-    out = advance(
+    out, _ = barrier(
         None,
         labels.join(state.select(F.col("cid").alias("scc"), "finish"), "scc")
         .join(csum.select(F.col("cid").alias("scc"), "w"), "scc")
@@ -168,7 +170,7 @@ def critical_path(
             "finish",
         ),
     )
-    state.unpersist()
+    release(state)
     cedges.unpersist()
     csum.unpersist()
     labels.unpersist()
@@ -212,12 +214,12 @@ def impact_set(graph: Graph, seeds: DataFrame, max_depth: int = 4) -> DataFrame:
         graph.edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         .where(F.col("src") != F.col("dst"))
     )
-    visited = advance(
+    visited, _ = barrier(
         None, seeds.select(F.col("id").alias("seed"), F.col("id").alias("node"))
     )
     frontier = visited
     for _ in range(max_depth):
-        nxt, n = advance_counted(
+        nxt, (n,) = barrier(
             None,
             frontier.join(rev, frontier["node"] == rev["src"])
             .select("seed", F.col("dst").alias("node"))
@@ -225,11 +227,11 @@ def impact_set(graph: Graph, seeds: DataFrame, max_depth: int = 4) -> DataFrame:
             .join(visited, ["seed", "node"], "left_anti"),
         )
         if frontier is not visited:
-            frontier.unpersist()
+            release(frontier)
         if n == 0:
-            nxt.unpersist()
+            release(nxt)
             break
-        visited = advance(visited, visited.unionByName(nxt))
+        visited, _ = barrier(visited, visited.unionByName(nxt))
         frontier = nxt
     out = visited.groupBy("seed").agg(
         (F.count(F.lit(1)) - F.lit(1)).cast("long").alias("impacted")

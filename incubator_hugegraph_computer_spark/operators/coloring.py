@@ -40,7 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from incubator_hugegraph_computer_spark.graph import Graph
-from incubator_hugegraph_computer_spark.plans.lineage import advance
+from incubator_hugegraph_computer_spark.plans.lineage import barrier
 
 
 def _priority(col):
@@ -56,17 +56,19 @@ def greedy_coloring(graph: Graph, max_rounds: int = 20) -> DataFrame:
     runs are unaffected (further rounds are no-ops).
     """
     sym = graph.symmetrized().edges  # (src, dst), both directions
-    state = advance(
+    uncolored = F.count_if(F.col("color").isNull())
+    state, (n_unc,) = barrier(
         None,
         graph.vertices.select(
             "id", F.lit(None).cast("int").alias("color"), _priority(F.col("id")).alias("p")
         ),
+        uncolored,
     )
     empty = F.array().cast("array<int>")
     for _ in range(max_rounds):
-        unc = state.where(F.col("color").isNull())
-        if unc.isEmpty():
+        if n_unc == 0:
             break
+        unc = state.where(F.col("color").isNull())
         # proposal: mex of already-colored neighbors' colors
         colored = state.where(F.col("color").isNotNull()).select(
             F.col("id").alias("dst"), F.col("color").alias("ncolor")
@@ -115,10 +117,11 @@ def greedy_coloring(graph: Graph, max_rounds: int = 20) -> DataFrame:
         winners = cand.join(losers, "id", "left_anti").select(
             "id", F.col("cand").alias("newcolor")
         )
-        state = advance(
+        state, (n_unc,) = barrier(
             state,
             state.join(winners, "id", "left")
             .select("id", F.coalesce("color", "newcolor").alias("color"), "p"),
+            uncolored,
         )
     # state is the live localCheckpoint backing the result — the caller
     # consumes it; Spark reclaims the blocks when the DF is GC'd.

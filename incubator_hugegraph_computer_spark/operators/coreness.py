@@ -32,17 +32,16 @@ from functools import reduce
 from pyspark.sql import DataFrame, functions as F
 
 from incubator_hugegraph_computer_spark.graph import Graph
-from incubator_hugegraph_computer_spark.plans.lineage import advance
+from incubator_hugegraph_computer_spark.plans.lineage import barrier, release
 
 
 def coreness(graph: Graph, k_max: int = 16, rounds_per_k: int = 6) -> DataFrame:
     """(id, coreness) for every vertex (0 for vertices outside the
     1-core, i.e. isolated ones)."""
     spark = graph.spark
-    edges = advance(None, graph.symmetrized().edges)
+    edges, (prev_count,) = barrier(None, graph.symmetrized().edges)
     survivor_levels: list[DataFrame] = []
     for k in range(1, k_max + 1):
-        prev_count = edges.count()
         if prev_count == 0:
             break
         rounds = 0
@@ -51,21 +50,20 @@ def coreness(graph: Graph, k_max: int = 16, rounds_per_k: int = 6) -> DataFrame:
                 F.count(F.lit(1)).alias("degree")
             )
             keep = deg.where(F.col("degree") >= k).persist()
-            edges = advance(
+            edges, (cur_count,) = barrier(
                 edges,
                 edges.join(keep.select(F.col("id").alias("src")), "src", "left_semi")
                 .join(keep.select(F.col("id").alias("dst")), "dst", "left_semi"),
             )
             keep.unpersist()
             rounds += 1
-            cur_count = edges.count()
             stable = cur_count == prev_count
             prev_count = cur_count
             if stable or cur_count == 0 or rounds >= rounds_per_k:
                 break
         # id sets are small (shrinking); eager-checkpoint them so every
         # edge checkpoint except the live one stays releasable
-        survivors = advance(
+        survivors, _ = barrier(
             None,
             edges.groupBy(F.col("src").alias("id"))
             .agg(F.count(F.lit(1)).alias("degree"))
@@ -74,17 +72,17 @@ def coreness(graph: Graph, k_max: int = 16, rounds_per_k: int = 6) -> DataFrame:
         )
         survivor_levels.append(survivors)
     if not survivor_levels:
-        edges.unpersist()
+        release(edges)
         return graph.vertices.select("id", F.lit(0).alias("coreness"))
     lvl = reduce(DataFrame.unionAll, survivor_levels)
     core = lvl.groupBy("id").agg(F.max("k").alias("coreness"))
-    out = advance(
+    out, _ = barrier(
         None,
         graph.vertices.select("id")
         .join(core, "id", "left")
         .select("id", F.coalesce("coreness", F.lit(0)).alias("coreness")),
     )
-    edges.unpersist()
+    release(edges)
     for s in survivor_levels:
-        s.unpersist()
+        release(s)
     return out

@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from incubator_hugegraph_computer_spark.graph import Graph
-from incubator_hugegraph_computer_spark.plans.lineage import advance
+from incubator_hugegraph_computer_spark.plans.lineage import barrier, release
 
 
 def densest_subgraph(
@@ -39,13 +39,11 @@ def densest_subgraph(
     # sym: distinct symmetrized, self-loop-free — each undirected edge
     # appears as both (a,b) and (b,a), so |E_und| = |sym|/2 and the
     # src-grouped count IS the undirected degree.
-    edges = advance(None, graph.symmetrized().edges)
-    verts = advance(None, graph.vertices.select("id"))
+    edges, (m2,) = barrier(None, graph.symmetrized().edges)  # 2·|E_und| rows
+    verts, (n,) = barrier(None, graph.vertices.select("id"))
     best_density = -1.0
     best_verts: DataFrame | None = None
     for _ in range(max_rounds):
-        n = verts.count()
-        m2 = edges.count()  # directed rows = 2·|E_und|
         density = (m2 / 2.0) / n if n else 0.0
         if density > best_density:
             best_density, best_verts = density, verts
@@ -57,15 +55,15 @@ def densest_subgraph(
         )
         # strict >: Bahmani's A(S) = {v : deg ≤ 2(1+ε)ρ} is REMOVED
         prev_verts = verts
-        verts = advance(
+        verts, (n,) = barrier(
             None,
             verts.join(deg, "id", "left")
             .where(F.coalesce("deg", F.lit(0)) > threshold)
             .select("id"),
         )
         if prev_verts is not best_verts:  # best snapshot must stay live
-            prev_verts.unpersist()
-        edges = advance(
+            release(prev_verts)
+        edges, (m2,) = barrier(
             edges,
             edges.join(verts.select(F.col("id").alias("src")), "src", "left_semi")
             .join(verts.select(F.col("id").alias("dst")), "dst", "left_semi"),

@@ -27,6 +27,7 @@ from incubator_hugegraph_computer_spark.plans.bsp import (
     SuperstepContext,
     message_pass,
 )
+from incubator_hugegraph_computer_spark.plans.lineage import barrier
 
 
 class EigenvectorProgram(BspProgram):
@@ -128,9 +129,7 @@ def newman_leading_vector(graph: Graph, iterations: int = 6) -> DataFrame:
             )
         )
         norm = bv.agg(F.sum(F.abs(F.col("bx"))).alias("n1"))
-        from incubator_hugegraph_computer_spark.plans.lineage import advance
-
-        v = advance(
+        v, _ = barrier(
             v,
             bv.crossJoin(F.broadcast(norm))  # one-row scalar
             .select("id", "k", (F.col("bx") / F.col("n1")).alias("x")),

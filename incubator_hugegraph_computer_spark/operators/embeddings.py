@@ -35,8 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from incubator_hugegraph_computer_spark.graph import Graph
-from incubator_hugegraph_computer_spark.plans.lineage import advance
 from incubator_hugegraph_computer_spark.operators.random_walk import random_walk
+from incubator_hugegraph_computer_spark.plans.lineage import barrier
 
 
 def node2vec_embeddings(
@@ -142,7 +142,6 @@ def fastrp_embed(
         )
         .localCheckpoint(eager=True)
     )
-    vd = state.select("id", "d")
     acc = None
     for t in range(min(iters, len(weights))):
         nxt = (
@@ -155,23 +154,25 @@ def fastrp_embed(
             .groupBy(F.col("src").alias("id"), "d")
             .agg(F.sum("nx").cast("long").alias("x"))
         )
-        from incubator_hugegraph_computer_spark.plans.lineage import advance
-
-        state = advance(
+        # every state holds every (id, d) row: the left join keeps them
+        state, _ = barrier(
             state,
-            vd.join(nxt, ["id", "d"], "left")
+            state.select("id", "d")
+            .join(nxt, ["id", "d"], "left")
             .select("id", "d", F.coalesce("x", F.lit(0)).cast("long").alias("x")),
         )
         w = int(weights[t])
         term = state.select("id", "d", (F.col("x") * F.lit(w)).alias("wx"))
-        if acc is None:
-            acc = term
-        else:
-            acc = advance(
-                acc,
-                acc.join(term.withColumnRenamed("wx", "wx2"), ["id", "d"])
-                .select("id", "d", (F.col("wx") + F.col("wx2")).alias("wx")),
-            )
+        # materialized every round: the term reads ``state``, which the
+        # next round's barrier releases
+        acc, _ = barrier(
+            acc,
+            term
+            if acc is None
+            else acc.join(term.withColumnRenamed("wx", "wx2"), ["id", "d"]).select(
+                "id", "d", (F.col("wx") + F.col("wx2")).alias("wx")
+            ),
+        )
     return acc.select("id", "d", F.col("wx").cast("long").alias("f"))
 
 
@@ -213,7 +214,7 @@ def sage_sample(
             "src", "dst", coin.alias("r")
         )
         w = Window.partitionBy("src").orderBy(F.asc("r"), F.asc("dst"))
-        samp = advance(
+        samp, _ = barrier(
             None,
             cand.withColumn("rn", F.row_number().over(w))
             .where(F.col("rn") <= fanout)

@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from incubator_hugegraph_computer_spark.graph import Graph
-from incubator_hugegraph_computer_spark.plans.lineage import advance
+from incubator_hugegraph_computer_spark.plans.lineage import barrier
 
 
 def hitting_time(graph: Graph, targets: DataFrame, horizon: int = 8) -> DataFrame:
@@ -49,7 +49,7 @@ def hitting_time(graph: Graph, targets: DataFrame, horizon: int = 8) -> DataFram
         )
         .persist()
     )
-    h = advance(
+    h, _ = barrier(
         None,
         base.select("id", F.when(F.col("_t"), 0.0).otherwise(F.lit(k)).alias("h")),
     )
@@ -60,7 +60,7 @@ def hitting_time(graph: Graph, targets: DataFrame, horizon: int = 8) -> DataFram
             .groupBy(F.col("src").alias("id"))
             .agg(F.sum("_nh").alias("_s"))
         )
-        h = advance(
+        h, _ = barrier(
             h,
             base.join(sums, "id", "left")
             .select(

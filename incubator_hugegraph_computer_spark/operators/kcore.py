@@ -16,29 +16,26 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from incubator_hugegraph_computer_spark.graph import Graph
+from incubator_hugegraph_computer_spark.plans.lineage import barrier
 
 
 def _peel(graph: Graph, k: int, max_rounds: int | None):
     """(core (id, degree), peeled symmetric edge set) after k-core
-    peeling. One edge count per round: the pre-filter count is carried
-    from the previous round's post-filter count."""
-    from incubator_hugegraph_computer_spark.plans.lineage import advance
-
-    edges = advance(None, graph.symmetrized().edges)
-    prev_count = edges.count()
+    peeling. The barrier's row count is the round's edge count; the
+    pre-filter count is carried from the previous round's."""
+    edges, (prev_count,) = barrier(None, graph.symmetrized().edges)
     rounds = 0
     while True:
         deg = edges.groupBy(F.col("src").alias("id")).agg(F.count(F.lit(1)).alias("degree"))
         survivors = deg.where(F.col("degree") >= k).persist()
         keep_src = survivors.select(F.col("id").alias("src"))
         keep_dst = survivors.select(F.col("id").alias("dst"))
-        edges = advance(
+        edges, (cur_count,) = barrier(
             edges,
             edges.join(keep_src, "src", "left_semi").join(keep_dst, "dst", "left_semi"),
         )
         survivors.unpersist()
         rounds += 1
-        cur_count = edges.count()
         stable = cur_count == prev_count and rounds > 1
         prev_count = cur_count
         if stable or (max_rounds is not None and rounds >= max_rounds):

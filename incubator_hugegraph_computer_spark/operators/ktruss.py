@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from incubator_hugegraph_computer_spark.graph import Graph
 from incubator_hugegraph_computer_spark.operators.triangle_count import undirected_edges
+from incubator_hugegraph_computer_spark.plans.lineage import barrier, release
 
 
 def _support(und: DataFrame) -> DataFrame:
@@ -78,30 +79,33 @@ def _support(und: DataFrame) -> DataFrame:
 def _peel(edges: DataFrame, thresh: int, max_rounds: int | None = None):
     """Peel ``edges`` (canonical a<b, already localCheckpoint'ed) down
     to the subgraph where every edge has triangle support >= thresh.
-    Returns (survivors, rounds, count). Lineage truncated per round."""
-    from incubator_hugegraph_computer_spark.plans.lineage import advance
-
+    Returns (survivors, rounds, count). Lineage truncated per round;
+    ``edges`` stays the caller's (trussness reads it after the peel)."""
     prev_count = edges.count()
     rounds = 0
+    cur = edges
     while True:
-        sup = _support(edges)
-        # advance() (lazy checkpoint + persist + release-prev) instead of
-        # chained eager checkpoints — the peel runs to fixpoint, so its
-        # round count is input-dependent and can cross the ~16-round
-        # driver cliff (PLANS.md "Lineage discipline")
-        edges = advance(
-            edges,
-            edges.join(sup, ["a", "b"], "left")
+        sup = _support(cur)
+        # one barrier per round (one stored copy, then the previous
+        # round's state is released) instead of chained eager
+        # checkpoints — the peel runs to fixpoint, so its round count is
+        # input-dependent and can cross the ~16-round driver cliff
+        # (PLANS.md "Lineage discipline")
+        nxt, (cur_count,) = barrier(
+            None,
+            cur.join(sup, ["a", "b"], "left")
             .select("a", "b", F.coalesce("sup", F.lit(0)).alias("sup"))
             .where(F.col("sup") >= thresh)
             .select("a", "b"),
         )
+        if cur is not edges:
+            release(cur)
+        cur = nxt
         rounds += 1
-        cur_count = edges.count()
         stable = cur_count == prev_count
         prev_count = cur_count
         if stable or cur_count == 0 or (max_rounds is not None and rounds >= max_rounds):
-            return edges, rounds, cur_count
+            return cur, rounds, cur_count
 
 
 def ktruss(graph: Graph, k: int = 4, max_rounds: int | None = None) -> DataFrame:

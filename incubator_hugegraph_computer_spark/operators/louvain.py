@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from incubator_hugegraph_computer_spark.graph import Graph
 from incubator_hugegraph_computer_spark.operators.triangle_count import undirected_edges
-from incubator_hugegraph_computer_spark.plans.lineage import advance, advance_counted
+from incubator_hugegraph_computer_spark.plans.lineage import barrier, release
 
 # V-row frames (communities, totals, move results) ride broadcast joins
 # while the level has at most this many vertices; beyond it, Spark's
@@ -93,7 +93,7 @@ def _move_phase(
     on small levels or hot early steps the step runs unpruned, which is
     the same exact computation."""
     k = adj.groupBy(F.col("i").alias("id")).agg(F.sum("w").alias("k")).persist()
-    comm, n_vertices = advance_counted(
+    comm, (n_vertices,) = barrier(
         None, k.select("id", F.col("id").alias("c"), "k")
     )
     small = n_vertices <= _BCAST_V
@@ -109,7 +109,7 @@ def _move_phase(
         c1, c2 = changed_hist
         if c1 is not None and c2 is not None:
             changed2 = c1.unionAll(c2).distinct()
-            members, n_members = advance_counted(
+            members, (n_members,) = barrier(
                 None,
                 comm.join(
                     F.broadcast(changed2.withColumnRenamed("cc", "c")), "c", "semi"
@@ -118,7 +118,7 @@ def _move_phase(
             if n_members == 0:
                 # nobody's inputs changed for two consecutive steps —
                 # both parities replay "stay"; the level is converged
-                members.unpersist()
+                release(members)
                 break
             if n_members <= max(100_000, n_vertices // 3):
                 nbrs = (
@@ -128,13 +128,13 @@ def _move_phase(
                     .select(F.col("i").alias("id"))
                     .distinct()
                 )
-                cand_ids, n_cand = advance_counted(
+                cand_ids, (n_cand,) = barrier(
                     None, members.unionAll(nbrs).distinct()
                 )
                 if n_cand > max(100_000, n_vertices // 2):
-                    cand_ids.unpersist()
+                    release(cand_ids)
                     cand_ids = None
-            members.unpersist()
+            release(members)
         adj_f = (
             adj
             if cand_ids is None
@@ -217,9 +217,10 @@ def _move_phase(
             "id", F.col("best_c").alias("c_new"), F.lit(1).alias("mv_new")
         )
         # left join: vertices without a `moved` row — pruned, or with no
-        # strictly-better admissible target — keep their community
-        prev_comm = comm
-        comm = (
+        # strictly-better admissible target — keep their community. One
+        # action materializes the new state AND reads off the move count.
+        comm, row = barrier(
+            comm,
             comm.select("id", "k", F.col("c").alias("c_prev"))
             .join(moved, "id", "left")
             .select(
@@ -228,32 +229,28 @@ def _move_phase(
                 F.coalesce("c_new", F.col("c_prev")).alias("c"),
                 F.coalesce("mv_new", F.lit(0)).alias("mv"),
                 "c_prev",
-            )
-            .localCheckpoint(eager=False)
-            .persist()
+            ),
+            F.sum("mv"),
         )
-        # one action materializes the new state AND reads off the move
-        # count (advance()'s count job folded into the convergence agg)
-        n_moves = comm.agg(F.sum("mv")).first()[0] or 0
-        prev_comm.unpersist()
+        n_moves = row[0] or 0
         # track the touched-community frontier only while pruning can
         # engage (big adjacency, cooled-down move rate) — otherwise the
         # changed-set job is pure per-step overhead
         if prune_capable and n_moves < n_vertices * 0.10:
-            changed_t: DataFrame | None = advance(
+            changed_t: DataFrame | None = barrier(
                 None,
                 comm.where(F.col("mv") == 1)
                 .select(F.explode(F.array("c_prev", "c")).alias("cc"))
                 .distinct(),
-            )
+            )[0]
         else:
             changed_t = None
         dropped = changed_hist[1]
         changed_hist = [changed_t, changed_hist[0]]
         if dropped is not None:
-            dropped.unpersist()
+            release(dropped)
         if cand_ids is not None:
-            cand_ids.unpersist()
+            release(cand_ids)
         # A round admits only one move direction (down on even it, up on
         # odd), so a single zero-move round may just mean every improving
         # move pointed the blocked way — converged only after BOTH
@@ -264,10 +261,10 @@ def _move_phase(
     k.unpersist()
     for ch in changed_hist:
         if ch is not None:
-            ch.unpersist()
+            release(ch)
     # materialized 2-col result; the internal move state is released —
-    # the caller owns (and unpersists) the returned frame
-    return advance(comm, comm.select("id", "c"))
+    # the caller owns (and releases) the returned frame
+    return barrier(comm, comm.select("id", "c"))[0]
 
 
 def louvain(
@@ -296,7 +293,7 @@ def louvain(
     if two_m == 0:
         return graph.vertices.select("id", F.col("id").alias("community"))
     # mapping from original vertex to current-level supervertex
-    mapping = advance(
+    mapping, _ = barrier(
         None,
         adj.select(F.col("i").alias("id")).distinct().select(
             "id", F.col("id").alias("node")
@@ -307,25 +304,21 @@ def louvain(
         raw_assignment = _move_phase(adj, two_m, resolution, max_inner)
         # canonicalize community ids to min member (deterministic output)
         canon = raw_assignment.groupBy("c").agg(F.min("id").alias("rep"))
-        assignment = (
-            raw_assignment.join(canon, "c")
-            .select("id", F.col("rep").alias("c"))
-            .localCheckpoint(eager=False)
-            .persist()
-        )
         # one job materializes the assignment AND reads both convergence
         # scalars off it
-        n_nodes, n_comms = assignment.agg(
-            F.count(F.lit(1)), F.count_distinct("c")
-        ).first()
-        raw_assignment.unpersist()
-        mapping = advance(
+        assignment, (n_nodes, n_comms) = barrier(
+            raw_assignment,
+            raw_assignment.join(canon, "c").select("id", F.col("rep").alias("c")),
+            F.count(F.lit(1)),
+            F.count_distinct("c"),
+        )
+        mapping, _ = barrier(
             mapping,
             mapping.join(assignment.withColumnRenamed("id", "node"), "node")
             .select("id", F.col("c").alias("node")),
         )
         if n_comms == n_nodes:
-            assignment.unpersist()
+            release(assignment)
             break
         # contract: supervertex graph with summed weights (self-loops keep
         # internal mass so k and 2m are preserved exactly)
@@ -335,7 +328,7 @@ def louvain(
         # cached partitioning to the supervertex count instead of paying
         # full-width task scheduling on every inner step of a tiny level
         parts = min(graph.num_partitions, max(4, int(n_comms) // 2000 + 1))
-        adj = advance(
+        adj, _ = barrier(
             adj,
             adj.join(ci, "i")
             .join(cjj, "j")
@@ -343,7 +336,7 @@ def louvain(
             .agg(F.sum("w").alias("w"))
             .repartition(parts, "j"),
         )
-        assignment.unpersist()
+        release(assignment)
 
     # vertices that never appeared in any edge are their own community
     return (

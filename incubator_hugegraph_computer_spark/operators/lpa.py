@@ -36,13 +36,13 @@ from typing import Any
 from pyspark.sql import DataFrame, functions as F
 
 from incubator_hugegraph_computer_spark.graph import Graph
-from incubator_hugegraph_computer_spark.plans.lineage import advance
 from incubator_hugegraph_computer_spark.plans.bsp import (
     BspEngine,
     BspProgram,
     SuperstepContext,
     message_pass,
 )
+from incubator_hugegraph_computer_spark.plans.lineage import barrier
 
 
 def _argmax_min_label(messages: DataFrame) -> DataFrame:
@@ -252,7 +252,7 @@ def lpa_seeded(graph: Graph, seeds: DataFrame, rounds: int = 5) -> DataFrame:
             "src",
         ).select("dst", "msg")
         winners = _argmax_min_label(msgs).withColumnRenamed("msg", "_win")
-        state = advance(
+        state, _ = barrier(
             state,
             state.join(winners, "id", "left")
             .select(

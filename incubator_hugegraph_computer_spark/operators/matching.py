@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from incubator_hugegraph_computer_spark.graph import Graph
 from incubator_hugegraph_computer_spark.operators.triangle_count import undirected_edges
-from incubator_hugegraph_computer_spark.plans.lineage import advance
+from incubator_hugegraph_computer_spark.plans.lineage import barrier, release
 
 
 def _edge_priority(a, b, seed: int, rnd: int):
@@ -45,7 +45,7 @@ def maximal_matching(graph: Graph, max_rounds: int = 12, seed: int = 42) -> Data
     rounds); the alive set empties in O(log E) expected rounds."""
     max_rounds = max(1, max_rounds)
     und = undirected_edges(graph.edges)  # (a, b), a < b, no loops
-    alive = advance(None, und)
+    alive, _ = barrier(None, und)
     matched = None
     for rnd in range(1, max_rounds + 1):
         pri = alive.select(
@@ -55,7 +55,7 @@ def maximal_matching(graph: Graph, max_rounds: int = 12, seed: int = 42) -> Data
             pri.select(F.col("b").alias("v"), "p")
         )
         vmin = ends.groupBy("v").agg(F.min("p").alias("mp"))
-        winners = advance(
+        winners, _ = barrier(
             None,
             pri.join(vmin.select(F.col("v").alias("a"), F.col("mp").alias("mpa")), "a")
             .join(vmin.select(F.col("v").alias("b"), F.col("mp").alias("mpb")), "b")
@@ -63,20 +63,20 @@ def maximal_matching(graph: Graph, max_rounds: int = 12, seed: int = 42) -> Data
             .select("a", "b"),
         )
         matched = (
-            winners if matched is None else advance(matched, matched.unionAll(winners))
+            winners if matched is None else barrier(matched, matched.unionAll(winners))[0]
         )
         mv = winners.select(F.col("a").alias("v")).unionAll(
             winners.select(F.col("b").alias("v"))
         ).distinct()
-        alive = advance(
+        alive, (n_alive,) = barrier(
             alive,
             alive.join(mv.withColumnRenamed("v", "a"), "a", "left_anti")
             .join(mv.withColumnRenamed("v", "b"), "b", "left_anti")
             .select("a", "b"),
         )
         if matched is not winners:
-            winners.unpersist()
-        if alive.isEmpty():
+            release(winners)
+        if n_alive == 0:
             break
     return und.join(
         matched.withColumn("matched", F.lit(True)), ["a", "b"], "left"
@@ -166,7 +166,7 @@ def heavy_edge_matching(
             .groupBy("a", "b")
             .agg(F.max("w").alias("w"))
         )
-    alive = advance(None, und)
+    alive, _ = barrier(None, und)
     matched = None
     for rnd in range(1, max_rounds + 1):
         pri = alive.select(
@@ -182,7 +182,7 @@ def heavy_edge_matching(
             .agg(F.min(F.struct("nw", "p", "a", "b")).alias("m"))
             .select(F.col("m.a").alias("a"), F.col("m.b").alias("b"))
         )
-        winners = advance(
+        winners, _ = barrier(
             None,
             best.groupBy("a", "b")
             .agg(F.count(F.lit(1)).alias("c"))
@@ -190,20 +190,20 @@ def heavy_edge_matching(
             .select("a", "b"),
         )
         matched = (
-            winners if matched is None else advance(matched, matched.unionAll(winners))
+            winners if matched is None else barrier(matched, matched.unionAll(winners))[0]
         )
         mv = winners.select(F.col("a").alias("v")).unionAll(
             winners.select(F.col("b").alias("v"))
         ).distinct()
-        alive = advance(
+        alive, (n_alive,) = barrier(
             alive,
             alive.join(mv.withColumnRenamed("v", "a"), "a", "left_anti")
             .join(mv.withColumnRenamed("v", "b"), "b", "left_anti")
             .select("a", "b", "w"),
         )
         if matched is not winners:
-            winners.unpersist()
-        if alive.isEmpty():
+            release(winners)
+        if n_alive == 0:
             break
     return und.join(
         matched.withColumn("matched", F.lit(True)), ["a", "b"], "left"

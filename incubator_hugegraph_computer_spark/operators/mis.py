@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from incubator_hugegraph_computer_spark.graph import Graph
-from incubator_hugegraph_computer_spark.plans.lineage import advance
+from incubator_hugegraph_computer_spark.plans.lineage import barrier, release
 
 
 def _priority(col, seed: int, rnd: int):
@@ -43,8 +43,8 @@ def maximal_independent_set(
     the alive set empties well before 20 (expected O(log V))."""
     max_rounds = max(1, max_rounds)  # mis must exist before the final join
     sym = graph.symmetrized().edges.select("src", "dst")
-    alive_v = advance(None, graph.vertices.select("id"))
-    alive_e = advance(None, sym)
+    alive_v, _ = barrier(None, graph.vertices.select("id"))
+    alive_e, _ = barrier(None, sym)
     mis = None
     for rnd in range(1, max_rounds + 1):
         pri = alive_v.select("id", _priority(F.col("id"), seed, rnd).alias("p"))
@@ -55,29 +55,29 @@ def maximal_independent_set(
             .groupBy(F.col("src").alias("id"))
             .agg(F.min("np").alias("mnp"))
         )
-        winners = advance(
+        winners, _ = barrier(
             None,
             pri.join(nb_min, "id", "left")
             .where(F.col("mnp").isNull() | (F.col("p") < F.col("mnp")))
             .select("id"),
         )
-        mis = winners if mis is None else advance(mis, mis.unionAll(winners))
+        mis = winners if mis is None else barrier(mis, mis.unionAll(winners))[0]
         removed = winners.unionAll(
             alive_e.join(winners.withColumnRenamed("id", "src"), "src").select(
                 F.col("dst").alias("id")
             )
         ).distinct()
-        alive_v = advance(alive_v, alive_v.join(removed, "id", "left_anti"))
-        if alive_v.isEmpty():
+        alive_v, (n_alive,) = barrier(alive_v, alive_v.join(removed, "id", "left_anti"))
+        if n_alive == 0:
             break
-        alive_e = advance(
+        alive_e, _ = barrier(
             alive_e,
             alive_e.join(alive_v.withColumnRenamed("id", "src"), "src", "left_semi")
             .join(alive_v.withColumnRenamed("id", "dst"), "dst", "left_semi")
             .select("src", "dst"),
         )
         if mis is not winners:
-            winners.unpersist()
+            release(winners)
     return graph.vertices.select("id").join(
         mis.withColumn("in_mis", F.lit(True)), "id", "left"
     ).select("id", F.coalesce("in_mis", F.lit(False)).alias("in_mis"))

@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from incubator_hugegraph_computer_spark.graph import Graph
-from incubator_hugegraph_computer_spark.plans.lineage import advance
+from incubator_hugegraph_computer_spark.plans.lineage import barrier, release
 
 
 def msf(
@@ -65,7 +65,7 @@ def msf(
         .agg(F.min("w").alias("w"))
         .persist()
     )
-    comp = advance(None, graph.vertices.select("id", F.col("id").alias("c")))
+    comp, _ = barrier(None, graph.vertices.select("id", F.col("id").alias("c")))
     forest: DataFrame | None = None
     for _ in range(max_rounds):
         ec = (
@@ -78,21 +78,21 @@ def msf(
         # each touched component's minimum cut edge, (w, a, b) order;
         # carry both component ids so the merge graph needs no re-join
         pick = F.struct("w", "a", "b", "ca", "cb").alias("p")
-        m = advance(
+        m, (n_picked,) = barrier(
             None,
             ec.select(F.col("ca").alias("c"), pick)
             .unionAll(ec.select(F.col("cb").alias("c"), pick))
             .groupBy("c")
             .agg(F.min("p").alias("p")),
         )
-        if m.isEmpty():
-            m.unpersist()
+        if n_picked == 0:
+            release(m)
             break
         chosen = m.select("p.a", "p.b", "p.w").distinct()
-        forest = (
-            advance(None, chosen)
+        forest, _ = (
+            barrier(None, chosen)
             if forest is None
-            else advance(forest, forest.unionAll(chosen))
+            else barrier(forest, forest.unionAll(chosen))
         )
         # pointer graph over component ids: c -> partner component
         ptr = m.select(
@@ -103,7 +103,7 @@ def msf(
         )
         # root mutual 2-cycles at the smaller id; chains keep their pointer
         oo = ptr.select(F.col("c").alias("o"), F.col("o").alias("oo"))
-        p = advance(
+        p, _ = barrier(
             None,
             ptr.join(oo, "o", "left")
             .select(
@@ -117,7 +117,7 @@ def msf(
         # p keep their own label; p only holds merging components)
         for _j in range(max_jumps):
             prev_p = p
-            p = advance(
+            p, _ = barrier(
                 None,
                 p.alias("x")
                 .join(
@@ -128,17 +128,17 @@ def msf(
                 .select("c", F.coalesce("rr", "r").alias("r")),
             )
             stable = p.exceptAll(prev_p).isEmpty()
-            prev_p.unpersist()
+            release(prev_p)
             if stable:
                 break
-        comp = advance(
+        comp, _ = barrier(
             comp,
             comp.join(p, "c", "left").select("id", F.coalesce("r", "c").alias("c")),
         )
-        p.unpersist()
-        m.unpersist()
+        release(p)
+        release(m)
     und.unpersist()
-    comp.unpersist()
+    release(comp)
     if forest is None:
         return spark.createDataFrame([], "a long, b long, w double")
     return forest.select("a", "b", "w")

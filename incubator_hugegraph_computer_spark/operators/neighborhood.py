@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from incubator_hugegraph_computer_spark.graph import Graph
 from incubator_hugegraph_computer_spark.operators.closeness import multi_source_bfs
+from incubator_hugegraph_computer_spark.plans.lineage import barrier
 
 
 def neighborhood_function(
@@ -50,10 +51,12 @@ def neighborhood_function(
 
     # HyperANF: ball(v, k) = {v} ∪ ⋃_{(v,w)∈E} ball(w, k-1), carried as
     # an HLL sketch per vertex; each hop = one shuffle join + one union-agg.
-    state = (
-        graph.vertices.groupBy("id")
-        .agg(F.hll_sketch_agg("id", F.lit(lg_config_k)).alias("sk"))
-        .persist()
+    # Every hop's state stays stored: the output's lazy joins read them all.
+    state, _ = barrier(
+        None,
+        graph.vertices.groupBy("id").agg(
+            F.hll_sketch_agg("id", F.lit(lg_config_k)).alias("sk")
+        ),
     )
     out = graph.vertices.select("id")
     edges = graph.edges.select("src", "dst")
@@ -61,20 +64,15 @@ def neighborhood_function(
         msgs = edges.join(state, edges.dst == state.id).select(
             F.col("src").alias("id"), "sk"
         )
-        new_state = (
-            state.unionAll(msgs)
-            .groupBy("id")
-            .agg(F.hll_union_agg("sk").alias("sk"))
-            .localCheckpoint(eager=True)
+        state, _ = barrier(
+            None,
+            state.unionAll(msgs).groupBy("id").agg(F.hll_union_agg("sk").alias("sk")),
         )
-        state.unpersist()
-        state = new_state.persist()
         est = state.select(
             "id",
             (F.hll_sketch_estimate("sk") - F.lit(1.0)).alias(f"n{h}"),
         )
         out = out.join(est, "id")
-    state.unpersist()
     return out
 
 
@@ -154,9 +152,7 @@ def hyperball_reach(
             .groupBy(F.col("src").alias("id"), "j")
             .agg(F.max("m").alias("m"))
         )
-        from incubator_hugegraph_computer_spark.plans.lineage import advance
-
-        state = advance(
+        state, _ = barrier(
             state,
             state.union(msg)
             .groupBy("id", "j")
@@ -233,22 +229,23 @@ def hyperball_harmonic(
             ).alias("est")
         )
 
-    acc = est(state).select("id", F.col("est").alias("prev"), F.lit(0.0).alias("h"))
+    # materialized: the first hop's barrier releases the initial state
+    acc, _ = barrier(
+        None, est(state).select("id", F.col("est").alias("prev"), F.lit(0.0).alias("h"))
+    )
     for hop in range(1, hops + 1):
         msg = (
             e.join(state.withColumnRenamed("id", "dst"), "dst")
             .groupBy(F.col("src").alias("id"), "j")
             .agg(F.max("m").alias("m"))
         )
-        from incubator_hugegraph_computer_spark.plans.lineage import advance
-
-        state = advance(
+        state, _ = barrier(
             state,
             state.union(msg)
             .groupBy("id", "j")
             .agg(F.max("m").cast("long").alias("m")),
         )
-        acc = advance(
+        acc, _ = barrier(
             acc,
             acc.join(est(state), "id").select(
                 "id",

@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from incubator_hugegraph_computer_spark.graph import Graph
+from incubator_hugegraph_computer_spark.plans.lineage import barrier
 
 
 def pic_scores(graph: Graph, iterations: int = 6) -> DataFrame:
@@ -56,9 +57,7 @@ def pic_scores(graph: Graph, iterations: int = 6) -> DataFrame:
             "id", "d", (F.col("s") / F.col("d")).alias("x")
         )
         norm = wd.agg(F.sum("x").alias("n1"))
-        from incubator_hugegraph_computer_spark.plans.lineage import advance
-
-        v = advance(
+        v, _ = barrier(
             v,
             wd.crossJoin(F.broadcast(norm))  # one-row scalar
             .select("id", "d", (F.col("x") / F.col("n1")).alias("x")),

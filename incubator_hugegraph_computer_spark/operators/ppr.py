@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, functions as F
 from incubator_hugegraph_computer_spark.graph import Graph
 from incubator_hugegraph_computer_spark.operators.pagerank import _PageRankBase
 from incubator_hugegraph_computer_spark.plans.bsp import BspEngine, SuperstepContext
+from incubator_hugegraph_computer_spark.plans.lineage import barrier
 
 
 class PprProgram(_PageRankBase):
@@ -212,9 +213,7 @@ def ppr_batch(
             .distinct()
         )
         is_seed = (F.col("id") == F.col("seed")).cast("double")
-        from incubator_hugegraph_computer_spark.plans.lineage import advance
-
-        state = advance(
+        state, _ = barrier(
             state,
             sup.join(msg, ["seed", "id"], "left")
             .join(dang, "seed")
@@ -259,11 +258,11 @@ def ppr_push(
     """
     e = graph.edges.select("src", "dst").localCheckpoint(eager=True)
     deg = e.groupBy(F.col("src").alias("id")).agg(F.count(F.lit(1)).alias("outdeg"))
-    state = (
-        graph.vertices.where(F.col("id") == source)
-        .select("id", F.lit(0.0).alias("p"), F.lit(1.0).alias("r"))
-        .localCheckpoint(eager=False)
-        .persist()
+    state, _ = barrier(
+        None,
+        graph.vertices.where(F.col("id") == source).select(
+            "id", F.lit(0.0).alias("p"), F.lit(1.0).alias("r")
+        ),
     )
     for _ in range(rounds):
         st = state.join(deg, "id", "left")
@@ -302,7 +301,13 @@ def ppr_push(
             .union(dflow.select("id"))
             .distinct()
         )
-        new_state = (
+        # the lineage discipline of plans/lineage.barrier: one stored
+        # copy per round, then the previous round's state is released.
+        # Chained EAGER localCheckpoints accumulate in the driver and hit
+        # a measured 2x-per-round wall from ~16 rounds (OOM by ~60);
+        # this shape stays flat indefinitely.
+        state, _ = barrier(
+            state,
             sup.join(keep, "id", "left")
             .join(upd.withColumnRenamed("p", "p2"), "id", "left")
             .join(flow, "id", "left")
@@ -317,18 +322,8 @@ def ppr_push(
                     + F.coalesce("dr", F.lit(0.0))
                     + F.coalesce("dr2", F.lit(0.0))
                 ).alias("r"),
-            )
-            # the lineage discipline of plans/lineage.advance: lazy
-            # truncation + persist + RELEASE of the previous round's
-            # cache. Chained EAGER localCheckpoints accumulate in the
-            # driver and hit a measured 2x-per-round wall from ~16
-            # rounds (OOM by ~60); this shape stays flat indefinitely.
-            .localCheckpoint(eager=False)
-            .persist()
+            ),
         )
-        new_state.count()
-        state.unpersist()
-        state = new_state
     return state.select(
         "id", F.round("p", 6).alias("p"), F.round("r", 6).alias("r")
     ).where((F.col("p") > 0) | (F.col("r") > 0))

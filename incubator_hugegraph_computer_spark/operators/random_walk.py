@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from incubator_hugegraph_computer_spark.graph import Graph
-from incubator_hugegraph_computer_spark.plans.lineage import advance
+from incubator_hugegraph_computer_spark.plans.lineage import barrier
 
 
 def random_walk(
@@ -137,5 +137,5 @@ def random_walk(
                 .alias("path"),
             )
         )
-        walks = advance(walks, new_walks)
+        walks, _ = barrier(walks, new_walks)
     return walks.select("walk_id", "start", "path")

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from incubator_hugegraph_computer_spark.graph import Graph
-from incubator_hugegraph_computer_spark.plans.lineage import advance
+from incubator_hugegraph_computer_spark.plans.lineage import barrier, release
 
 
 def _cycle_search_edges(
@@ -75,7 +75,7 @@ def rings(
     for _ in range(1, max_length + 1):
         ext = frontier.join(edges, frontier.current == edges.src)
         closed = ext.where(F.col("dst") == F.col("start")).select("start", "path")
-        found.append(advance(None, closed))
+        found.append(barrier(None, closed)[0])
         nxt = (
             ext.where(
                 (F.col("dst") > F.col("start")) & ~F.array_contains(F.col("path"), F.col("dst"))
@@ -101,11 +101,11 @@ def rings(
                 .select("start")
             )
             nxt = nxt.join(sat, "start", "left_anti")
-        frontier = advance(frontier, nxt)
-        if frontier.isEmpty():
+        frontier, (n,) = barrier(frontier, nxt)
+        if n == 0:
             break
     # found[] is materialized — the search caches can go
-    frontier.unpersist()
+    release(frontier)
     edges.unpersist()
     out = found[0]
     for f in found[1:]:
@@ -142,10 +142,10 @@ def _boolean_cycles(
             .select("start")
             .distinct()
         )
-        has = (
-            advance(None, closed)
+        has, _ = (
+            barrier(None, closed)
             if has is None
-            else advance(has, has.unionAll(closed).distinct())
+            else barrier(has, has.unionAll(closed).distinct())
         )
         nxt = (
             ext.where(
@@ -160,10 +160,10 @@ def _boolean_cycles(
             )
             .join(has, "start", "left_anti")  # the short-circuit
         )
-        frontier = advance(frontier, nxt)
-        if frontier.isEmpty():
+        frontier, (n,) = barrier(frontier, nxt)
+        if n == 0:
             break
-    frontier.unpersist()
+    release(frontier)
     edges.unpersist()
     members = has.select(F.col("start").alias("id")).withColumn("in_cycle", F.lit(1))
     return (
@@ -252,13 +252,13 @@ def rings_with_filter(
             *carry,
         )
     )
-    frontier = advance(None, frontier)
+    frontier, _ = barrier(None, frontier)
     # self-loops are dropped, so the smallest ring has 2 vertices
     found = [frontier.select("start", "path").where(F.lit(False))]
     for _ in range(2, max_length + 1):
         ext = frontier.join(edges, frontier.current == edges.src).where(spread_pred)
         closed = ext.where(F.col("dst") == F.col("start")).select("start", "path")
-        found.append(advance(None, closed))
+        found.append(barrier(None, closed)[0])
         nxt = ext.where(
             (F.col("dst") > F.col("start")) & ~F.array_contains(F.col("path"), F.col("dst"))
         ).select(
@@ -267,10 +267,10 @@ def rings_with_filter(
             F.concat(F.col("path"), F.array(F.col("dst"))).alias("path"),
             *carry,
         )
-        frontier = advance(frontier, nxt)
-        if frontier.isEmpty():
+        frontier, (n,) = barrier(frontier, nxt)
+        if n == 0:
             break
-    frontier.unpersist()
+    release(frontier)
     edges.unpersist()
     out = found[0]
     for f in found[1:]:

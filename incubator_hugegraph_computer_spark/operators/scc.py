@@ -24,22 +24,23 @@ inner loops unroll ``stride`` propagation hops per materialization
 barrier — the shuffle count per hop is unchanged, but driver
 round-trips, convergence probes and lineage checkpoints drop by the
 stride factor, which is what dominates on high-diameter color classes.
-Every per-round state advances through ``plans/lineage.advance`` (lazy
-localCheckpoint + persist + release-prev) — chained eager checkpoints
-were measured to double per-round cost from ~round 16 and OOM the
-driver near round 60 (PLANS.md "Lineage discipline").
+Every per-round state passes ``plans/lineage.barrier``: one stored
+copy (a lazy localCheckpoint materialized by the round's one action),
+then the previous round's state is released — chained eager
+checkpoints were measured to double per-round cost from ~round 16 and
+OOM the driver near round 60 (PLANS.md "Lineage discipline"). The
+answer is stored once at the end and every round's frame is released,
+so a call leaves only its output stored.
 """
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, functions as F
 
 from incubator_hugegraph_computer_spark.graph import Graph
-from incubator_hugegraph_computer_spark.plans.lineage import (
-    advance,
-    advance_agg,
-    advance_counted,
-)
+from incubator_hugegraph_computer_spark.plans.lineage import barrier, release
 
 
 def _propagate_min(
@@ -50,7 +51,7 @@ def _propagate_min(
     ``stride`` forward hops run per barrier; convergence is probed per
     barrier (at most ``stride - 1`` no-op hops after the true fixpoint,
     each a cheap empty-frontier join)."""
-    state = advance(
+    state, _ = barrier(
         None,
         vertices.select("id", F.col("id").alias("color"), F.lit(True).alias("chg")),
     )
@@ -77,23 +78,23 @@ def _propagate_min(
         # one action: materializes the new state AND probes convergence
         # (a barrier whose frontier produced no change is a fixpoint —
         # min propagation only triggers from prior changes)
-        state, row = advance_agg(state, cur, F.sum(F.col("chg").cast("int")))
+        state, row = barrier(state, cur, F.sum(F.col("chg").cast("int")))
         if (row[0] or 0) == 0:
             break
     # hand back a materialized 2-col frame and release the internal
-    # state — callers own (and must unpersist) the returned frame
-    return advance(state, state.select("id", "color"))
+    # state — callers own (and must release) the returned frame
+    return barrier(state, state.select("id", "color"))[0]
 
 
 def _backward_sweep(
     roots: DataFrame, colored_rev: DataFrame, stride: int = 4
 ) -> DataFrame:
     """All (id, scc) reached from ``roots`` along ``colored_rev``
-    (reverse edges already restricted to equal color classes).
-    ``stride`` frontier expansions per barrier."""
-    seed = advance(None, roots)
-    # members = lazy union over the advance()-materialized frontier
-    # frames: each leaf is a flat cache scan, so the anti-join pays no
+    (reverse edges already restricted to equal color classes), as one
+    stored frame. ``stride`` frontier expansions per barrier."""
+    seed, _ = barrier(None, roots)
+    # members = lazy union over the barrier-materialized frontier
+    # frames: each leaf is a flat checkpoint scan, so the anti-join pays no
     # nested lineage and the member set is never re-materialized per
     # round (the same shape as betweenness's visited set)
     parts = [seed]
@@ -113,16 +114,19 @@ def _backward_sweep(
         grown = hops[0]
         for h in hops[1:]:
             grown = grown.unionAll(h)
-        nxt, n = advance_counted(
+        nxt, (n,) = barrier(
             None,
             grown.distinct().join(members.select("id"), "id", "left_anti"),
         )
         if n == 0:
-            nxt.unpersist()
+            release(nxt)
             break
         parts.append(nxt)
         members = members.unionAll(nxt)
         frontier = nxt
+    members, _ = barrier(None, members)
+    for p in parts:
+        release(p)
     return members
 
 
@@ -131,8 +135,8 @@ def scc(graph: Graph, max_outer: int = 50, stride: int = 4) -> DataFrame:
     component."""
     spark = graph.spark
     assigned_parts: list[DataFrame] = []
-    verts, n_verts = advance_counted(None, graph.vertices.select("id"))
-    edges = advance(
+    verts, (n_verts,) = barrier(None, graph.vertices.select("id"))
+    edges, _ = barrier(
         None, graph.edges.select("src", "dst").where(F.col("src") != F.col("dst"))
     )
 
@@ -147,25 +151,24 @@ def scc(graph: Graph, max_outer: int = 50, stride: int = 4) -> DataFrame:
             trim_rounds += 1
             srcs = edges.select("src").distinct()
             dsts = edges.select("dst").distinct()
-            core, n_core = advance_counted(
+            core, (n_core,) = barrier(
                 None,
                 verts.join(srcs.withColumnRenamed("src", "id"), "id", "left_semi")
                 .join(dsts.withColumnRenamed("dst", "id"), "id", "left_semi"),
             )
             if n_core == n_verts:  # stable — no extra anti-join job
-                core.unpersist()
+                release(core)
                 break
-            assigned_parts.append(
-                advance(
-                    None,
-                    verts.join(core, "id", "left_anti").select(
-                        "id", F.col("id").alias("scc")
-                    ),
-                )
+            trimmed, _ = barrier(
+                None,
+                verts.join(core, "id", "left_anti").select(
+                    "id", F.col("id").alias("scc")
+                ),
             )
-            verts.unpersist()
+            assigned_parts.append(trimmed)
+            release(verts)
             verts, n_verts = core, n_core
-            edges = advance(
+            edges, _ = barrier(
                 edges,
                 edges.join(verts.withColumnRenamed("id", "src"), "src", "left_semi")
                 .join(verts.withColumnRenamed("id", "dst"), "dst", "left_semi"),
@@ -182,13 +185,13 @@ def scc(graph: Graph, max_outer: int = 50, stride: int = 4) -> DataFrame:
         # the edge side.
         parts = min(graph.num_partitions, max(4, n_verts // 25_000 + 1))
         if parts < graph.num_partitions:
-            edges = advance(edges, edges.repartition(parts, "src"))
+            edges, _ = barrier(edges, edges.repartition(parts, "src"))
 
         # ---- color forward (min id), then sweep backward within color
         color = _propagate_min(verts, edges, stride=stride)
         rev = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         # backward frontier from roots, constrained to same color
-        colored_rev = advance(
+        colored_rev, _ = barrier(
             None,
             rev.join(
                 color.withColumnRenamed("id", "src").withColumnRenamed(
@@ -210,17 +213,17 @@ def scc(graph: Graph, max_outer: int = 50, stride: int = 4) -> DataFrame:
             "id", F.col("color").alias("scc")
         )
         members = _backward_sweep(roots, colored_rev, stride=stride)
-        color.unpersist()
+        release(color)
         assigned_parts.append(members)
-        verts, n_verts = advance_counted(
+        verts, (n_verts,) = barrier(
             verts, verts.join(members.select("id"), "id", "left_anti")
         )
-        edges = advance(
+        edges, _ = barrier(
             edges,
             edges.join(verts.withColumnRenamed("id", "src"), "src", "left_semi")
             .join(verts.withColumnRenamed("id", "dst"), "dst", "left_semi"),
         )
-        colored_rev.unpersist()
+        release(colored_rev)
     else:
         # assigning fewer rows than graph.vertices with no error would
         # silently corrupt every downstream join
@@ -229,10 +232,13 @@ def scc(graph: Graph, max_outer: int = 50, stride: int = 4) -> DataFrame:
                 f"scc did not assign every vertex within max_outer={max_outer} "
                 "outer iterations (pathological SCC-chain input) — raise max_outer"
             )
-    verts.unpersist()
-    edges.unpersist()
+    release(verts)
+    release(edges)
 
-    out = assigned_parts[0] if assigned_parts else spark.createDataFrame([], "id long, scc long")
-    for p in assigned_parts[1:]:
-        out = out.unionAll(p)
+    if not assigned_parts:
+        return spark.createDataFrame([], "id long, scc long")
+    # one stored copy of the answer; the parts it was built from go
+    out, _ = barrier(None, reduce(DataFrame.unionAll, assigned_parts))
+    for p in assigned_parts:
+        release(p)
     return out

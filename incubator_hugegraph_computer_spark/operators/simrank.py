@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from incubator_hugegraph_computer_spark.graph import Graph
-from incubator_hugegraph_computer_spark.plans.lineage import advance
+from incubator_hugegraph_computer_spark.plans.lineage import barrier
 
 
 def simrank(
@@ -81,7 +81,7 @@ def simrank(
     )
 
     for _ in range(k - 1):
-        s = advance(s, _truncate(s, top_per_vertex))
+        s, _ = barrier(s, _truncate(s, top_per_vertex))
         # off-diagonal propagation: (i,j,s) -> every (a,b) with i∈I(a),
         # j∈I(b). s holds each unordered in-pair ONCE (i<j); the two
         # ordered terms s(i,j) + s(j,i) of the recursion surface as the

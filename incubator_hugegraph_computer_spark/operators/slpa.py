@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from incubator_hugegraph_computer_spark.graph import Graph
-from incubator_hugegraph_computer_spark.plans.lineage import advance
+from incubator_hugegraph_computer_spark.plans.lineage import barrier
 
 
 def slpa(
@@ -39,7 +39,7 @@ def slpa(
     vertices can appear in multiple communities (the overlap)."""
     sym = graph.symmetrized().edges.persist()
     # memory as (id, label, cnt) long rows — simpler to fold than a map
-    mem = advance(
+    mem, _ = barrier(
         None,
         graph.vertices.select(
             "id", F.col("id").alias("label"), F.lit(1).cast("long").alias("cnt")
@@ -89,7 +89,7 @@ def slpa(
             .agg(F.min(F.struct((-F.col("c")).alias("nc"), F.col("label").alias("l"))).alias("b"))
             .select("id", F.col("b.l").alias("label"), F.lit(1).cast("long").alias("cnt"))
         )
-        mem = advance(
+        mem, _ = barrier(
             mem,
             mem.unionAll(adopted)
             .groupBy("id", "label")

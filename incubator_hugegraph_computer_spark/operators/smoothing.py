@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from incubator_hugegraph_computer_spark.graph import Graph
-from incubator_hugegraph_computer_spark.plans.lineage import advance
+from incubator_hugegraph_computer_spark.plans.lineage import barrier
 
 
 def smooth_feature(
@@ -50,7 +50,7 @@ def smooth_feature(
             .groupBy(F.col("dst").alias("id"))
             .agg(F.avg("x").alias("nbr_mean"))
         )
-        state = advance(
+        state, _ = barrier(
             state,
             state.join(nbr, "id", "left")
             .select(
@@ -104,9 +104,7 @@ def label_spread(
             .agg(F.sum(F.col("f") / F.col("deg")).alias("s"))
         )
         sup = msg.select("id", "c").union(y.select("id", "c")).distinct()
-        from incubator_hugegraph_computer_spark.plans.lineage import advance
-
-        state = advance(
+        state, _ = barrier(
             state,
             sup.join(msg, ["id", "c"], "left")
             .join(y, ["id", "c"], "left")

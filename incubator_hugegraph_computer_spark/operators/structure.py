@@ -33,6 +33,7 @@ from incubator_hugegraph_computer_spark.graph import Graph
 from incubator_hugegraph_computer_spark.operators.ktruss import _support
 from incubator_hugegraph_computer_spark.operators.scc import scc
 from incubator_hugegraph_computer_spark.operators.triangle_count import undirected_edges
+from incubator_hugegraph_computer_spark.plans.lineage import barrier, release
 
 
 # ------------------------------------------------------------------ edges
@@ -137,12 +138,10 @@ def _reach(seeds: DataFrame, edges: DataFrame) -> DataFrame:
     """(id) — every vertex reachable from the seed set along ``edges``
     (seeds included). Frontier BFS; each round's state is
     localCheckpoint-truncated so long chains don't grow the plan."""
-    from incubator_hugegraph_computer_spark.plans.lineage import advance
-
-    members = advance(None, seeds.select("id").distinct())
+    members, _ = barrier(None, seeds.select("id").distinct())
     frontier = members
     while True:
-        nxt = advance(
+        nxt, (n,) = barrier(
             None,
             frontier.withColumnRenamed("id", "src")
             .join(edges, "src")
@@ -150,14 +149,14 @@ def _reach(seeds: DataFrame, edges: DataFrame) -> DataFrame:
             .distinct()
             .join(members, "id", "left_anti"),
         )
-        if nxt.isEmpty():
-            nxt.unpersist()
+        if n == 0:
+            release(nxt)
             if frontier is not members:
-                frontier.unpersist()
+                release(frontier)
             break
-        new_members = advance(members, members.unionAll(nxt))
+        new_members, _ = barrier(members, members.unionAll(nxt))
         if frontier is not members:
-            frontier.unpersist()
+            release(frontier)
         members, frontier = new_members, nxt
     return members
 
@@ -360,10 +359,8 @@ def slashburn(graph: Graph, k: int = 16, rounds: int = 3) -> DataFrame:
     from incubator_hugegraph_computer_spark.graph import Graph as _Graph
     from incubator_hugegraph_computer_spark.operators.wcc import wcc as _wcc
 
-    from incubator_hugegraph_computer_spark.plans.lineage import advance
-
-    verts = advance(None, graph.vertices.select("id"))
-    edges = advance(None, graph.edges.select("src", "dst"))
+    verts, _ = barrier(None, graph.vertices.select("id"))
+    edges, _ = barrier(None, graph.edges.select("src", "dst"))
     out = None
     for r in range(1, rounds + 1):
         sym = (
@@ -382,14 +379,14 @@ def slashburn(graph: Graph, k: int = 16, rounds: int = 3) -> DataFrame:
             "left",
         ).select("id", F.coalesce("d", F.lit(0)).alias("d"))
         hubs = deg.orderBy(F.desc("d"), F.asc("id")).limit(k).select("id")
-        rem_v = advance(None, verts.join(hubs, "id", "left_anti"))
-        rem_e = advance(
+        rem_v, _ = barrier(None, verts.join(hubs, "id", "left_anti"))
+        rem_e, _ = barrier(
             None,
             edges.join(rem_v.withColumnRenamed("id", "src"), "src", "left_semi")
             .join(rem_v.withColumnRenamed("id", "dst"), "dst", "left_semi")
             .select("src", "dst"),
         )
-        comp = advance(
+        comp, _ = barrier(
             None,
             _wcc(_Graph(rem_v, rem_e, prepartitioned=True), count_messages=False),
         )
@@ -403,7 +400,10 @@ def slashburn(graph: Graph, k: int = 16, rounds: int = 3) -> DataFrame:
         )
         n_hubs = hubs.agg(F.count(F.lit(1)).cast("long").alias("hubs_removed"))
         n_rem = rem_v.agg(F.count(F.lit(1)).alias("n_rem"))
-        row = (
+        # materialized: the row reads this round's frames, which are
+        # released below
+        row, _ = barrier(
+            None,
             n_hubs.crossJoin(n_rem)  # one-row × one-row chain
             .crossJoin(pick)
             .select(
@@ -413,10 +413,10 @@ def slashburn(graph: Graph, k: int = 16, rounds: int = 3) -> DataFrame:
                     "spokes_removed"
                 ),
                 "gcc_size",
-            )
+            ),
         )
         out = row if out is None else out.unionAll(row)
-        verts = advance(
+        verts, _ = barrier(
             verts,
             comp.join(
                 F.broadcast(pick.select(F.col("gcc_comp").alias("comp"))),
@@ -424,15 +424,15 @@ def slashburn(graph: Graph, k: int = 16, rounds: int = 3) -> DataFrame:
                 "left_semi",
             ).select("id"),
         )
-        edges = advance(
+        edges, _ = barrier(
             edges,
             rem_e.join(verts.withColumnRenamed("id", "src"), "src", "left_semi")
             .join(verts.withColumnRenamed("id", "dst"), "dst", "left_semi")
             .select("src", "dst"),
         )
-        comp.unpersist()
-        rem_v.unpersist()
-        rem_e.unpersist()
+        release(comp)
+        release(rem_v)
+        release(rem_e)
     return out
 
 

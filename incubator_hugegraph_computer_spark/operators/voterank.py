@@ -45,7 +45,8 @@ TakeOrderedAndProject(batch) election, one candidate-set distance<=2
 probe (two joins against the ≤batch-row broadcast candidate list), and
 a broadcast join for the ability update. Driver rounds drop from K to
 ~K/batch on graphs whose top spreaders are spread out (the point of
-VoteRank); state advances through plans/lineage.advance so per-round
+VoteRank); each round's state passes one plans/lineage.barrier (one
+stored copy, then the previous round's state is released) so per-round
 cost stays flat at any K.
 """
 
@@ -54,7 +55,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from incubator_hugegraph_computer_spark.graph import Graph
-from incubator_hugegraph_computer_spark.plans.lineage import advance
+from incubator_hugegraph_computer_spark.plans.lineage import barrier, release
 
 
 def _conflict_pairs(sym: DataFrame, cand_ids: list[int]) -> set[tuple[int, int]]:
@@ -94,9 +95,8 @@ def voterank(graph: Graph, k: int = 10, batch: int | None = None) -> DataFrame:
     stop-at-first-conflict rule keeps any batch size exact."""
     if batch is None:
         batch = k
-    sym = advance(None, graph.symmetrized().edges)
+    sym, (n_sym,) = barrier(None, graph.symmetrized().edges)
     n_vertices = graph.vertices.count()
-    n_sym = sym.count()
     if n_sym == 0:
         return graph.vertices.sparkSession.createDataFrame(
             [], "sel_rank int, id long, score double"
@@ -104,7 +104,7 @@ def voterank(graph: Graph, k: int = 10, batch: int | None = None) -> DataFrame:
     delta = float(n_vertices) / float(n_sym)  # 1 / average degree
     batch = max(1, batch)
 
-    ab = advance(
+    ab, _ = barrier(
         None, graph.vertices.select("id", F.lit(1.0).alias("a"), F.lit(False).alias("el"))
     )
 
@@ -153,7 +153,7 @@ def voterank(graph: Graph, k: int = 10, batch: int | None = None) -> DataFrame:
         )
         won = elected.select(F.col("eid").alias("id"), F.lit(1).alias("_w"))
         is_winner = F.col("_w").isNotNull()
-        ab = advance(
+        ab, _ = barrier(
             ab,
             # no broadcast hint on ncnt: a hub seed's neighbor set can be
             # arbitrarily large at scale — let AQE pick the strategy
@@ -171,8 +171,8 @@ def voterank(graph: Graph, k: int = 10, batch: int | None = None) -> DataFrame:
                 (F.col("el") | is_winner).alias("el"),
             ),
         )
-    sym.unpersist()
-    ab.unpersist()
+    release(sym)
+    release(ab)
     return graph.vertices.sparkSession.createDataFrame(
         picks, "sel_rank int, id long, score double"
     )

@@ -29,6 +29,7 @@ from incubator_hugegraph_computer_spark.plans.bsp import (
     SuperstepContext,
     message_pass,
 )
+from incubator_hugegraph_computer_spark.plans.lineage import barrier, release
 
 
 class WccProgram(BspProgram):
@@ -275,15 +276,13 @@ def wcc_contract(graph: Graph, max_rounds: int = 100) -> DataFrame:
             .where(F.col("a") != F.col("b"))
             .distinct()
         )
-        new_edges = ss.localCheckpoint(eager=False).persist()
-        fp_row = new_edges.agg(
-            F.count(F.lit(1)).alias("n"),
+        edges, fp = barrier(
+            edges,
+            ss,
+            F.count(F.lit(1)),
             # bit_xor: order-independent, overflow-free under ANSI mode
-            F.expr("bit_xor(xxhash64(a, b))").alias("h"),
-        ).first()
-        fp = (fp_row["n"], fp_row["h"])
-        edges.unpersist()
-        edges = new_edges
+            F.expr("bit_xor(xxhash64(a, b))"),
+        )
         if fp == prev_fp:
             converged = True
             break
@@ -296,13 +295,12 @@ def wcc_contract(graph: Graph, max_rounds: int = 100) -> DataFrame:
         )
     # fixpoint = disjoint stars rooted at each component's min id
     labels = edges.select(F.col("b").alias("id"), F.col("a").alias("comp"))
-    out = (
+    out, _ = barrier(
+        edges,
         g.vertices.select("id")
         .join(labels, "id", "left")
-        .select("id", F.coalesce("comp", "id").alias("comp"))
-        .localCheckpoint(eager=True)
+        .select("id", F.coalesce("comp", "id").alias("comp")),
     )
-    edges.unpersist()
     return out
 
 
@@ -343,7 +341,7 @@ def wcc_superstep_metrics(
     out = g.spark.createDataFrame(
         rows, "superstep int, messages_sent long, active_vertices long"
     )
-    state.unpersist()
+    release(state)
     if not presymmetrized:
         g.unpersist()
     return out

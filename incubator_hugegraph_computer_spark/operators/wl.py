@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from incubator_hugegraph_computer_spark.graph import Graph
+from incubator_hugegraph_computer_spark.plans.lineage import barrier
 
 
 def wl_refine(graph: Graph, rounds: int = 3) -> DataFrame:
@@ -59,9 +60,7 @@ def wl_refine(graph: Graph, rounds: int = 3) -> DataFrame:
                 F.array_join(F.array_sort(F.collect_list("nc")), ",").alias("ns")
             )
         )
-        from incubator_hugegraph_computer_spark.plans.lineage import advance
-
-        color = advance(
+        color, _ = barrier(
             color,
             color.join(nbr, "id", "left").select(
                 "id",

@@ -55,7 +55,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 from incubator_hugegraph_computer_spark.graph import Graph
 from incubator_hugegraph_computer_spark.plans.checkpoint import CheckpointManager
-from incubator_hugegraph_computer_spark.plans.lineage import release
+from incubator_hugegraph_computer_spark.plans.lineage import barrier, release
 
 # Default superstep budget mirrors bsp.max_super_step=10
 # (computer-api/.../config/ComputerOptions.java:521-528).
@@ -240,18 +240,18 @@ class BspEngine:
         )
 
     # ------------------------------------------------------------------
-    def _collect_state(self, program: BspProgram, state: DataFrame, ctx: SuperstepContext):
-        """One action: aggregators + active count over the new state —
-        this is also what materializes the superstep (the BSP
-        barrier)."""
+    def _barrier(self, program: BspProgram, new: DataFrame, ctx: SuperstepContext) -> DataFrame:
+        """The BSP barrier: one action stores ``new`` (lineage
+        truncated) and computes the aggregators + active count over it."""
         exprs = dict(program.agg_exprs(ctx))
-        if "active" in state.columns:
+        if "active" in new.columns:
             exprs["__active"] = F.sum(F.col("active").cast("long"))
         else:
             exprs["__active"] = F.count(F.lit(1))
-        row = state.agg(*[c.alias(n) for n, c in exprs.items()]).first()
+        state, row = barrier(None, new, *[c.alias(n) for n, c in exprs.items()])
         ctx.active_vertices = int(row["__active"] or 0)
         ctx.aggs = {n: row[n] for n in exprs if n != "__active"}
+        return state
 
     def run(self, program: BspProgram, resume: bool = False) -> tuple[DataFrame, SuperstepContext]:
         g = self.graph.cache()
@@ -268,8 +268,7 @@ class BspEngine:
                 state, ctx.aggs = self.ckpt.load(g.spark, latest)
                 start_step = latest + 1
         if state is None:
-            state = program.initial_state(g).localCheckpoint(eager=False)
-            self._collect_state(program, state, ctx)
+            state = self._barrier(program, program.initial_state(g), ctx)
             if self.ckpt is not None and self.ckpt.should_checkpoint(0):
                 self.ckpt.save(0, state, ctx.aggs, self._metrics(ctx, wall_ms=0))
             start_step = 1
@@ -291,13 +290,13 @@ class BspEngine:
                 inbox = inbox.persist()
                 ctx.messages_sent = inbox.count()
 
-            # The lazy local checkpoint is the superstep's one stored
-            # copy: the aggregator action below materializes it AND
+            # The barrier's lazy local checkpoint is the superstep's one
+            # stored copy: its aggregator action materializes it AND
             # truncates lineage in a single job. Without truncation each
             # superstep's plan nests the previous one's and Catalyst
             # re-analysis blows up 5-10x by step 4 (SURVEY §7 hard parts).
-            new_state = program.update(state, inbox, ctx).localCheckpoint(eager=False)
-            self._collect_state(program, new_state, ctx)
+            # ``state`` is released below, after the inbox recount.
+            new_state = self._barrier(program, program.update(state, inbox, ctx), ctx)
             if ctx.active_vertices == 0 and ctx.messages_sent < 0 and self.count_messages is None:
                 # recomputes the inbox from ``state``, so before its release
                 ctx.messages_sent = inbox.count()

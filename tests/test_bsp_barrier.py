@@ -1,19 +1,32 @@
-"""Barrier invariants of the BSP superstep: what a run leaves stored,
-when it counts messages, and how many Spark jobs a superstep costs."""
+"""Barrier invariants of the BSP superstep and the standalone loops:
+what a run leaves stored, when it counts messages, and how many Spark
+jobs a superstep costs."""
+
+import gc
+import time
 
 import pytest
 
 from incubator_hugegraph_computer_spark.graph import Graph
+from incubator_hugegraph_computer_spark.operators.ktruss import trussness
 from incubator_hugegraph_computer_spark.operators.pagerank import pagerank
+from incubator_hugegraph_computer_spark.operators.scc import scc
 from incubator_hugegraph_computer_spark.operators.wcc import WccProgram, wcc
 from incubator_hugegraph_computer_spark.plans.bsp import BspEngine
 from tests.conftest import PRWCC_EDGES, PRWCC_VERTEX_IDS, make_graph
 from tests.test_templates import CappedMaxLabel, _components_graph
 
 
-def persisted_rdds_added(spark, fn):
+def persisted_rdds_added(spark, fn, collect_garbage=False):
     """``(fn(), ids)``: run ``fn`` and return the ids of the RDDs it
-    left persisted (RDD blocks of caches and local checkpoints alike)."""
+    left persisted (RDD blocks of caches and local checkpoints alike).
+
+    ``collect_garbage`` repeats a Python and a JVM collection, for up to
+    ~10 s, while the run still leaves something: a local checkpoint that
+    no live frame references drops out, so what stays is what the run
+    pinned (a cache entry, or a state it never let go of). Python frees
+    its references to JVM objects from a background thread, so each JVM
+    collection waits a little for it."""
     jsc = spark.sparkContext._jsc
 
     def snapshot():
@@ -21,7 +34,15 @@ def persisted_rdds_added(spark, fn):
 
     before = snapshot()
     out = fn()
-    return out, snapshot() - before
+    added = snapshot() - before
+    for _ in range(20 if collect_garbage else 0):
+        if not added:
+            break
+        gc.collect()
+        time.sleep(0.5)
+        spark.sparkContext._jvm.System.gc()
+        added = snapshot() - before
+    return out, added
 
 
 @pytest.fixture()
@@ -51,6 +72,49 @@ def test_wcc_leaves_only_its_state(spark, prwcc):
     out, added = persisted_rdds_added(spark, lambda: wcc(prwcc).collect())
     assert len(out) == len(PRWCC_VERTEX_IDS)
     assert len(added) <= 1, added
+
+
+# A directed 4-cycle with both chords (an undirected K4), a directed
+# triangle, and two tail edges: SCCs {0..3}, {4, 5, 6}, {7}; trussness
+# 4 on the K4, 3 on the triangle, 2 on the tails.
+CYCLIC_EDGES = [
+    (0, 1), (1, 2), (2, 3), (3, 0), (0, 2), (1, 3),
+    (4, 5), (5, 6), (6, 4),
+    (3, 4), (6, 7),
+]
+
+
+@pytest.fixture()
+def cyclic(spark):
+    g = make_graph(spark, CYCLIC_EDGES).cache()
+    g.num_vertices()
+    g.edges.count()
+    yield g
+    g.unpersist()
+
+
+def test_scc_leaves_nothing_stored(spark, cyclic):
+    """Every round's frame is released and the answer is one local
+    checkpoint, which goes with the output. Persisting on top of the
+    checkpoints pinned every part of the answer."""
+    out, added = persisted_rdds_added(
+        spark, lambda: scc(cyclic).collect(), collect_garbage=True
+    )
+    assert {r["id"]: r["scc"] for r in out} == {
+        0: 0, 1: 0, 2: 0, 3: 0, 4: 4, 5: 4, 6: 4, 7: 7
+    }
+    assert not added, added
+
+
+def test_trussness_leaves_nothing_stored(spark, cyclic):
+    out, added = persisted_rdds_added(
+        spark, lambda: trussness(cyclic).collect(), collect_garbage=True
+    )
+    k4 = {(a, b) for a in range(4) for b in range(a + 1, 4)}
+    assert {(r["a"], r["b"]): r["trussness"] for r in out} == {
+        **{e: 4 for e in k4}, (4, 5): 3, (4, 6): 3, (5, 6): 3, (3, 4): 2, (6, 7): 2
+    }
+    assert not added, added
 
 
 @pytest.mark.parametrize("program", [WccProgram, CappedMaxLabel])

@@ -3,9 +3,9 @@
 PLANS.md ("Lineage discipline") measured that a loop chaining eager
 ``localCheckpoint(eager=True)`` per round doubles per-round wall time
 from ~round 16 and OOMs the driver near round 60. Every iterative
-operator loop now routes state through ``plans/lineage.advance``; this
+operator loop now routes state through ``plans/lineage.barrier``; this
 test drives the heaviest converted loop (scc's nested
-propagate + backward sweep) through 45+ advance() barriers on a long
+propagate + backward sweep) through 45+ barriers on a long
 directed cycle and asserts per-barrier wall time does NOT grow — the
 cliff signature (2x per round) would blow the bound by orders of
 magnitude long before round 45.
@@ -21,8 +21,9 @@ from pyspark.sql import functions as F
 
 from incubator_hugegraph_computer_spark.graph import Graph
 from incubator_hugegraph_computer_spark.operators import scc as scc_mod
+from incubator_hugegraph_computer_spark.plans.lineage import barrier
 
-N = 100  # directed cycle length -> one SCC, ~2N/stride advance barriers
+N = 100  # directed cycle length -> one SCC, ~2N/stride barriers
 
 
 @pytest.fixture()
@@ -33,30 +34,22 @@ def cycle_graph(spark):
     return Graph.from_edges(edges, num_partitions=4)
 
 
-def test_scc_long_cycle_flat_rounds(spark, cycle_graph, monkeypatch):
+def timed_barrier(module, monkeypatch) -> list[float]:
+    """Patch ``module.barrier`` to stamp the end of every barrier."""
     stamps: list[float] = []
-    real_advance = scc_mod.advance
-    real_counted = scc_mod.advance_counted
-    real_agg = scc_mod.advance_agg
+    real_barrier = module.barrier
 
-    def timed_advance(prev, new):
-        out = real_advance(prev, new)
+    def timed(prev, new, *aggs):
+        out = real_barrier(prev, new, *aggs)
         stamps.append(time.monotonic())
         return out
 
-    def timed_counted(prev, new):
-        out = real_counted(prev, new)
-        stamps.append(time.monotonic())
-        return out
+    monkeypatch.setattr(module, "barrier", timed)
+    return stamps
 
-    def timed_agg(prev, new, *exprs):
-        out = real_agg(prev, new, *exprs)
-        stamps.append(time.monotonic())
-        return out
 
-    monkeypatch.setattr(scc_mod, "advance", timed_advance)
-    monkeypatch.setattr(scc_mod, "advance_counted", timed_counted)
-    monkeypatch.setattr(scc_mod, "advance_agg", timed_agg)
+def test_scc_long_cycle_flat_rounds(spark, cycle_graph, monkeypatch):
+    stamps = timed_barrier(scc_mod, monkeypatch)
     # drive the two inner loops directly with a budget covering the
     # cycle's N-1 propagation hops
     color = scc_mod._propagate_min(
@@ -71,7 +64,7 @@ def test_scc_long_cycle_flat_rounds(spark, cycle_graph, monkeypatch):
     rev = cycle_graph.edges.select(
         F.col("dst").alias("src"), F.col("src").alias("dst")
     )
-    members = scc_mod._backward_sweep(roots, real_advance(None, rev), stride=4)
+    members = scc_mod._backward_sweep(roots, barrier(None, rev)[0], stride=4)
 
     # correctness: the whole cycle is one SCC rooted at 0
     rows = members.collect()
@@ -83,7 +76,7 @@ def test_scc_long_cycle_flat_rounds(spark, cycle_graph, monkeypatch):
     # the early ones beyond noise (the eager-chain cliff doubles per
     # round past ~16 -> late/early ratio would be >100x, not < 5x)
     gaps = [b - a for a, b in zip(stamps, stamps[1:])]
-    assert len(gaps) >= 40, f"expected 40+ advance barriers, saw {len(gaps) + 1}"
+    assert len(gaps) >= 40, f"expected 40+ barriers, saw {len(gaps) + 1}"
     early = statistics.median(gaps[2:10])
     late = statistics.median(gaps[-8:])
     assert late < 5 * early + 0.5, (
@@ -93,7 +86,7 @@ def test_scc_long_cycle_flat_rounds(spark, cycle_graph, monkeypatch):
 
 def test_build_layers_deep_chain_flat(spark, monkeypatch):
     """build_layers on a 50-deep path: the longest-path loop runs ~50
-    advance() barriers (one per condensation level). Before the r5
+    barriers (one per condensation level). Before the r5
     conversion this loop chained eager localCheckpoints with a
     max_depth=200 budget — the measured cliff doubles per-round cost
     from ~16 and OOMs near 60, so a flat 50-round run is exactly the
@@ -106,22 +99,14 @@ def test_build_layers_deep_chain_flat(spark, monkeypatch):
     )
     g = Graph.from_edges(edges, num_partitions=4)
 
-    stamps: list[float] = []
-    real_advance = cg.advance
-
-    def timed_advance(prev, new):
-        out = real_advance(prev, new)
-        stamps.append(time.monotonic())
-        return out
-
-    monkeypatch.setattr(cg, "advance", timed_advance)
+    stamps = timed_barrier(cg, monkeypatch)
     rows = cg.build_layers(g, max_depth=depth + 5).collect()
 
     # correctness: a path graph layers each vertex at its depth
     assert {(r["id"], r["layer"]) for r in rows} == {(i, i) for i in range(depth + 1)}
 
     gaps = [b - a for a, b in zip(stamps, stamps[1:])]
-    assert len(gaps) >= 45, f"expected 45+ advance barriers, saw {len(gaps) + 1}"
+    assert len(gaps) >= 45, f"expected 45+ barriers, saw {len(gaps) + 1}"
     early = statistics.median(gaps[2:10])
     late = statistics.median(gaps[-8:])
     assert late < 5 * early + 0.5, (
