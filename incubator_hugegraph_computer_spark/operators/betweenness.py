@@ -21,6 +21,8 @@ Deterministic given ``seed``.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, functions as F
 
 from incubator_hugegraph_computer_spark.graph import Graph
@@ -93,6 +95,7 @@ def betweenness(
     # ---------------- backward phase: dependency accumulation
     # delta for the deepest layer is 0; walk levels upward.
     delta = layers[-1].select("source", "v", F.lit(0.0).alias("delta"))
+    stored = list(layers)  # every stored per-level frame, released at the end
     acc: list[DataFrame] = []
     edge_acc: list[DataFrame] = []
     for lvl in range(len(layers) - 2, -1, -1):
@@ -125,6 +128,7 @@ def betweenness(
             # the per-level credit feeds BOTH the edge accumulation and
             # the vertex delta below — materialize it once
             credits, _ = barrier(None, credits)
+            stored.append(credits)
             edge_acc.append(credits.select("v", "w", "credit"))
         contrib = credits.groupBy("source", "v").agg(F.sum("credit").alias("delta"))
         delta = (
@@ -133,6 +137,7 @@ def betweenness(
             .select("source", "v", F.coalesce(F.col("delta"), F.lit(0.0)).alias("delta"))
             .localCheckpoint(eager=False)
         )
+        stored.append(delta)
         # materialize only every 8th level: in between, levels stay lazy
         # (each lazy checkpoint stores its blocks once, computed inside
         # the next action's job)
@@ -142,39 +147,28 @@ def betweenness(
         if (len(layers) - 2 - lvl) % 8 == 7:
             delta.count()
         acc.append(delta.where(F.col("source") != F.col("v")))
-    # The result plan still reads the cached edge set through the up to
-    # 7 delta levels after the last counted one: those levels are lazy,
-    # so once the cache is dropped below they recompute the distinct-edge
-    # scan inside the result's job (correct, one extra scan).
     if per_edge:
-        if not edge_acc:
-            out = edges.select("src", "dst", F.lit(0.0).alias("betweenness"))
-            edges.unpersist()
-            return out
-        alle = edge_acc[0]
-        for a in edge_acc[1:]:
-            alle = alle.unionAll(a)
-        ebc = alle.groupBy(
-            F.col("v").alias("src"), F.col("w").alias("dst")
-        ).agg(F.sum("credit").alias("betweenness"))
-        out = (
-            edges.join(ebc, ["src", "dst"], "left")
-            .select(
+        out = edges.select("src", "dst", F.lit(0.0).alias("betweenness"))
+        if edge_acc:
+            ebc = reduce(DataFrame.unionAll, edge_acc).groupBy(
+                F.col("v").alias("src"), F.col("w").alias("dst")
+            ).agg(F.sum("credit").alias("betweenness"))
+            out = edges.join(ebc, ["src", "dst"], "left").select(
                 "src", "dst", F.coalesce("betweenness", F.lit(0.0)).alias("betweenness")
             )
-        )
-        out, _ = barrier(None, out)
-        edges.unpersist()
-        return out
+    else:
+        out = graph.vertices.select("id", F.lit(0.0).alias("betweenness"))
+        if acc:
+            bc = reduce(DataFrame.unionAll, acc).groupBy(
+                F.col("v").alias("id")
+            ).agg(F.sum("delta").alias("betweenness"))
+            out = graph.vertices.select("id").join(bc, "id", "left").select(
+                "id", F.coalesce("betweenness", F.lit(0.0)).alias("betweenness")
+            )
+    # the answer is stored once; only then are the frames it was computed
+    # from (the edge cache and every level's layer, credit and delta) freed
+    out, _ = barrier(None, out)
     edges.unpersist()
-    if not acc:
-        return graph.vertices.select("id", F.lit(0.0).alias("betweenness"))
-    allc = acc[0]
-    for a in acc[1:]:
-        allc = allc.unionAll(a)
-    bc = allc.groupBy(F.col("v").alias("id")).agg(F.sum("delta").alias("betweenness"))
-    return (
-        graph.vertices.select("id")
-        .join(bc, "id", "left")
-        .select("id", F.coalesce("betweenness", F.lit(0.0)).alias("betweenness"))
-    )
+    for df in stored:
+        release(df)
+    return out

@@ -31,6 +31,16 @@ checkpoints were measured to double per-round cost from ~round 16 and
 OOM the driver near round 60 (PLANS.md "Lineage discipline"). The
 answer is stored once at the end and every round's frame is released,
 so a call leaves only its output stored.
+
+Regime split: each edge barrier's row is the live edge count, and the
+live vertex count is in hand too. Once both are at or below
+``plans/local.LOCAL_EDGES`` the loop stops and labels the live
+vertices and edges on the driver (numpy CSR + iterative Tarjan, min
+member id), since every Spark round left would be fixed cost; the
+labels join the answer's final barrier, or are the answer when no
+Spark round assigned anything. The constant comes from the
+measured Spark-vs-driver crossover (PLANS.md "Driver-finished tails").
+Above it this Spark loop runs unchanged: it is the scale path.
 """
 
 from __future__ import annotations
@@ -40,6 +50,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, functions as F
 
 from incubator_hugegraph_computer_spark.graph import Graph
+from incubator_hugegraph_computer_spark.plans import local
 from incubator_hugegraph_computer_spark.plans.lineage import barrier, release
 
 
@@ -136,12 +147,12 @@ def scc(graph: Graph, max_outer: int = 50, stride: int = 4) -> DataFrame:
     spark = graph.spark
     assigned_parts: list[DataFrame] = []
     verts, (n_verts,) = barrier(None, graph.vertices.select("id"))
-    edges, _ = barrier(
+    edges, (n_edges,) = barrier(
         None, graph.edges.select("src", "dst").where(F.col("src") != F.col("dst"))
     )
 
     for _ in range(max_outer):
-        if n_verts == 0:
+        if n_verts == 0 or max(n_verts, n_edges) <= local.LOCAL_EDGES:
             break
         # ---- trim loop: peel in/out-degree-0 vertices (own SCCs).
         # Rounds are capped — trim is an optimization; anything left
@@ -168,12 +179,14 @@ def scc(graph: Graph, max_outer: int = 50, stride: int = 4) -> DataFrame:
             assigned_parts.append(trimmed)
             release(verts)
             verts, n_verts = core, n_core
-            edges, _ = barrier(
+            edges, (n_edges,) = barrier(
                 edges,
                 edges.join(verts.withColumnRenamed("id", "src"), "src", "left_semi")
                 .join(verts.withColumnRenamed("id", "dst"), "dst", "left_semi"),
             )
-        if n_verts == 0:
+            if max(n_verts, n_edges) <= local.LOCAL_EDGES:
+                break
+        if n_verts == 0 or max(n_verts, n_edges) <= local.LOCAL_EDGES:
             break
 
         # The trimmed core is usually orders of magnitude smaller than
@@ -218,27 +231,32 @@ def scc(graph: Graph, max_outer: int = 50, stride: int = 4) -> DataFrame:
         verts, (n_verts,) = barrier(
             verts, verts.join(members.select("id"), "id", "left_anti")
         )
-        edges, _ = barrier(
+        edges, (n_edges,) = barrier(
             edges,
             edges.join(verts.withColumnRenamed("id", "src"), "src", "left_semi")
             .join(verts.withColumnRenamed("id", "dst"), "dst", "left_semi"),
         )
         release(colored_rev)
-    else:
+    driver_part: list[DataFrame] = []
+    if n_verts != 0 and max(n_verts, n_edges) <= local.LOCAL_EDGES:
+        # a small live graph: the rounds left are fixed cost, finish here
+        driver_part.append(local.scc_labels(verts, edges))
+    elif n_verts != 0:
         # assigning fewer rows than graph.vertices with no error would
         # silently corrupt every downstream join
-        if n_verts != 0:
-            raise RuntimeError(
-                f"scc did not assign every vertex within max_outer={max_outer} "
-                "outer iterations (pathological SCC-chain input) — raise max_outer"
-            )
+        raise RuntimeError(
+            f"scc did not assign every vertex within max_outer={max_outer} "
+            "outer iterations (pathological SCC-chain input) — raise max_outer"
+        )
     release(verts)
     release(edges)
 
     if not assigned_parts:
-        return spark.createDataFrame([], "id long, scc long")
+        # no Spark round assigned anything: the driver's labels, which
+        # live in the driver already, are the whole answer
+        return driver_part[0] if driver_part else spark.createDataFrame([], "id long, scc long")
     # one stored copy of the answer; the parts it was built from go
-    out, _ = barrier(None, reduce(DataFrame.unionAll, assigned_parts))
+    out, _ = barrier(None, reduce(DataFrame.unionAll, assigned_parts + driver_part))
     for p in assigned_parts:
         release(p)
     return out

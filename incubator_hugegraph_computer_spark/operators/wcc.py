@@ -29,6 +29,7 @@ from incubator_hugegraph_computer_spark.plans.bsp import (
     SuperstepContext,
     message_pass,
 )
+from incubator_hugegraph_computer_spark.plans import local
 from incubator_hugegraph_computer_spark.plans.lineage import barrier, release
 
 
@@ -237,22 +238,35 @@ def wcc_contract(graph: Graph, max_rounds: int = 100) -> DataFrame:
     convergence test — one scalar action per round, and lineage is cut
     per round with a lazy localCheckpoint exactly like the BSP engine.
 
+    Regime split: the fingerprint's count is the live edge count. At or
+    below ``plans/local.LOCAL_EDGES`` (the canonical input included) the
+    loop stops and labels the live edges on the driver (numpy
+    union-find, min id); contraction keeps every component and its
+    minimum, so the labels are the fixpoint's. The constant comes from
+    the measured Spark-vs-driver crossover (PLANS.md "Driver-finished
+    tails"); above it the contraction runs unchanged as the scale path.
+
     Unlike the superstep family this rewrites EDGES, so it runs outside
     ``BspEngine``; vertices never touched by an edge keep comp = id.
     """
     g = graph
+    # (count, hash-sum) fingerprint of the canonical edge set; bit_xor is
+    # order-independent and overflow-free under ANSI mode
+    fingerprint = (F.count(F.lit(1)), F.expr("bit_xor(xxhash64(a, b))"))
     # canonical undirected edge set: (a < b), self-loops dropped
-    edges = (
+    edges, fp = barrier(
+        None,
         g.edges.select(
             F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
         )
         .where(F.col("a") != F.col("b"))
-        .distinct()
-        .persist()
+        .distinct(),
+        *fingerprint,
     )
-    prev_fp = None
     converged = False
     for _ in range(max_rounds):
+        if fp[0] <= local.LOCAL_EDGES:
+            break
         # ---- large-star: group the symmetrized adjacency by u --------
         sym = edges.select(F.col("a").alias("u"), F.col("b").alias("v")).unionAll(
             edges.select(F.col("b").alias("u"), F.col("a").alias("v"))
@@ -276,25 +290,23 @@ def wcc_contract(graph: Graph, max_rounds: int = 100) -> DataFrame:
             .where(F.col("a") != F.col("b"))
             .distinct()
         )
-        edges, fp = barrier(
-            edges,
-            ss,
-            F.count(F.lit(1)),
-            # bit_xor: order-independent, overflow-free under ANSI mode
-            F.expr("bit_xor(xxhash64(a, b))"),
-        )
-        if fp == prev_fp:
-            converged = True
+        edges, nxt = barrier(edges, ss, *fingerprint)
+        converged, fp = nxt == fp, nxt
+        if converged:
             break
-        prev_fp = fp
-    if not converged:
-        warnings.warn(
-            f"wcc_contract stopped at max_rounds={max_rounds} before the "
-            "edge set stabilized — labels are not converged",
-            stacklevel=2,
-        )
-    # fixpoint = disjoint stars rooted at each component's min id
-    labels = edges.select(F.col("b").alias("id"), F.col("a").alias("comp"))
+    if not converged and fp[0] <= local.LOCAL_EDGES:
+        # a small live edge set: the rounds left are fixed cost, finish
+        # here (contraction kept every component and its min id)
+        labels = local.wcc_labels(edges)
+    else:
+        if not converged:
+            warnings.warn(
+                f"wcc_contract stopped at max_rounds={max_rounds} before the "
+                "edge set stabilized — labels are not converged",
+                stacklevel=2,
+            )
+        # fixpoint = disjoint stars rooted at each component's min id
+        labels = edges.select(F.col("b").alias("id"), F.col("a").alias("comp"))
     out, _ = barrier(
         edges,
         g.vertices.select("id")

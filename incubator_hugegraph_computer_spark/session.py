@@ -29,6 +29,13 @@ DEFAULT_CONFS = {
 }
 
 
+def _third_of_ram() -> str:
+    """A third of host RAM: a heap the JVM can grow into without
+    starving the Python driver, its workers and the OS of the rest."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{total // 3 // 2**20}m"
+
+
 def get_spark(
     app_name: str = "hugegraph-computer-spark",
     master: str | None = None,
@@ -61,7 +68,8 @@ def get_spark(
             "spark.driver.memory"
         ):
             builder = builder.config(
-                "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")
+                "spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _third_of_ram(),
             )
     builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
     for k, v in DEFAULT_CONFS.items():

@@ -8,6 +8,7 @@ import time
 import pytest
 
 from incubator_hugegraph_computer_spark.graph import Graph
+from incubator_hugegraph_computer_spark.operators.betweenness import betweenness
 from incubator_hugegraph_computer_spark.operators.ktruss import trussness
 from incubator_hugegraph_computer_spark.operators.pagerank import pagerank
 from incubator_hugegraph_computer_spark.operators.scc import scc
@@ -115,6 +116,25 @@ def test_trussness_leaves_nothing_stored(spark, cyclic):
         **{e: 4 for e in k4}, (4, 5): 3, (4, 6): 3, (5, 6): 3, (3, 4): 2, (6, 7): 2
     }
     assert not added, added
+
+
+@pytest.mark.parametrize("per_edge", [False, True], ids=["vertex", "edge"])
+def test_betweenness_leaves_only_its_answer(spark, per_edge):
+    """The answer is stored once before the edge cache and the per-level
+    layer, credit and delta frames go; the vertex variant used to return
+    a lazy frame over uncounted delta levels and release nothing."""
+    n = 7
+    g = make_graph(spark, [(i, (i + 1) % n) for i in range(n)]).cache()
+    g.num_vertices()
+    g.edges.count()
+    out, added = persisted_rdds_added(spark, lambda: betweenness(g, per_edge=per_edge))
+    rows = out.collect()  # ``out`` is still referenced while the count is read
+    g.unpersist()
+    # on a directed n-cycle every vertex lies inside (n-1)(n-2)/2 paths
+    # and every edge on n(n-1)/2
+    want = (n - 1) * (n - 2) / 2 if not per_edge else n * (n - 1) / 2
+    assert len(rows) == n and all(r["betweenness"] == want for r in rows)
+    assert len(added) <= 1, added
 
 
 @pytest.mark.parametrize("program", [WccProgram, CappedMaxLabel])
