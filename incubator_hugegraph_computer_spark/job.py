@@ -94,7 +94,10 @@ def build_parser() -> argparse.ArgumentParser:
                    choices=["superstep", "stride"],
                    help="pagerank/lpa schedule: per-superstep barriers or "
                    "stride-fused actions (same per-iteration math; a run "
-                   "that converges may do up to stride-1 extra iterations)")
+                   "that converges may do up to stride-1 extra iterations). "
+                   "stride always runs on Spark; superstep pagerank runs on "
+                   "the driver when the graph fits plans/local.LOCAL_EDGES "
+                   "and no --checkpoint-dir is given")
     p.add_argument("--stride", type=int, default=None,
                    help="iterations fused per action for --method stride "
                    "(default: pagerank 2, lpa 4)")

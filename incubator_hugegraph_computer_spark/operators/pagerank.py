@@ -22,6 +22,16 @@
    normalization; exposed separately because the fixed-iteration oracle
    queries and the NumPy test oracle use this closed form.
 
+Where they run: on a graph with at most ``plans/local.LOCAL_EDGES``
+vertices and edges, all three entry points run every superstep on the
+driver over dense arrays (``plans/local.pagerank``), unless the run is
+checkpointed: a Spark superstep's fixed cost is several jobs whatever
+the graph's size. Each program's ``rank`` is its update formula, written
+once as arithmetic that works on a ``Column`` and on an ``ndarray``, so
+BspEngine and the driver kernel run the same formula. Checkpointed runs,
+``method="stride"`` (a Spark schedule) and larger graphs run on
+BspEngine, the scale path.
+
 Scale notes: out-degrees are computed once and cached on the graph; the
 per-superstep work is one co-partitioned join (state⋈edges on src, no
 state shuffle) + one groupBy(dst).sum whose map-side partial aggregation
@@ -37,6 +47,7 @@ from typing import Any
 from pyspark.sql import Column, DataFrame, functions as F
 
 from incubator_hugegraph_computer_spark.graph import Graph
+from incubator_hugegraph_computer_spark.plans import local
 from incubator_hugegraph_computer_spark.plans.bsp import (
     BspEngine,
     BspProgram,
@@ -57,6 +68,8 @@ class _PageRankBase(BspProgram):
     # ranks after an edge delta) just gets there in far fewer supersteps.
     # Vertices absent from the seed (delta-introduced) start at 1/n.
     initial_ranks: DataFrame | None = None
+    # edge column each message is multiplied by (pagerank_weighted)
+    weight_col: str | None = None
 
     def initial_state(self, graph: Graph) -> DataFrame:
         n = graph.num_vertices()
@@ -86,6 +99,28 @@ class _PageRankBase(BspProgram):
 
     def combine(self, messages: DataFrame) -> DataFrame:
         return messages.groupBy(F.col("dst").alias("id")).agg(F.sum("msg").alias("msg"))
+
+    def rank(self, msg, dangling, cum, n: int):
+        """The rank update: plain arithmetic over the combined inbox
+        ``msg``, the previous superstep's ``dangling`` and ``cum``
+        aggregators and the vertex count ``n``. Its constants are Python
+        floats, so the one formula serves BspEngine (``Column``s) and
+        ``plans/local.pagerank`` (``ndarray``s)."""
+        raise NotImplementedError
+
+    def update(self, state: DataFrame, inbox: DataFrame, ctx: SuperstepContext) -> DataFrame:
+        # the previous superstep's aggregators enter the plan as literals
+        return self._rank_step(
+            state,
+            inbox,
+            float(ctx.prev_aggs["dangling"]),
+            float(ctx.prev_aggs["cum"]),
+            ctx.num_vertices,
+        )
+
+    def _rank_step(self, state: DataFrame, inbox: DataFrame, dangling, cum, n: int) -> DataFrame:
+        msg = F.coalesce(F.col("msg"), F.lit(0.0))
+        return self._next_state(state, inbox, self.rank(msg, dangling, cum, n))
 
     @staticmethod
     def _next_state(state: DataFrame, inbox: DataFrame, new_rank: Column) -> DataFrame:
@@ -118,26 +153,8 @@ class PageRankProgram(_PageRankBase):
         self.alpha = alpha
         self.l1_threshold = l1_threshold
 
-    def _rank_step(
-        self, state: DataFrame, inbox: DataFrame, n: int, dangling_rank: Column, cum: Column
-    ) -> DataFrame:
-        new_rank = (
-            (dangling_rank + F.coalesce(F.col("msg"), F.lit(0.0)))
-            * F.lit(1.0 - self.alpha)
-            + F.lit(self.alpha / n)
-        ) / cum
-        return self._next_state(state, inbox, new_rank)
-
-    def update(self, state: DataFrame, inbox: DataFrame, ctx: SuperstepContext) -> DataFrame:
-        # the previous superstep's aggregators enter the plan as literals
-        n = ctx.num_vertices
-        return self._rank_step(
-            state,
-            inbox,
-            n,
-            F.lit(float(ctx.prev_aggs["dangling"]) / n),
-            F.lit(float(ctx.prev_aggs["cum"])),
-        )
+    def rank(self, msg, dangling, cum, n: int):
+        return ((dangling / n + msg) * (1.0 - self.alpha) + self.alpha / n) / cum
 
     def halt(self, ctx: SuperstepContext) -> bool:
         return ctx.superstep > 1 and ctx.aggs["l1"] <= self.l1_threshold
@@ -206,20 +223,17 @@ class PageRankStrideProgram(PageRankProgram):
             # update join) inside one action — persist once, lazily.
             cur = cur.persist()
             self._scratch.append(cur)
+            aggs = self.agg_exprs(ctx)
             scal = cur.agg(
-                (
-                    F.sum(F.when(F.col("out_deg") == 0, F.col("rank")).otherwise(0.0))
-                    / F.lit(float(n))
-                ).alias("_dangling_rank"),
-                F.sum("rank").alias("_cum"),
+                aggs["dangling"].alias("_dangling"), aggs["cum"].alias("_cum")
             )
             inbox2 = self.combine(self.messages(cur, self.graph, ctx))
             cur = self._rank_step(
                 cur.crossJoin(F.broadcast(scal)),
                 inbox2,
-                n,
-                F.col("_dangling_rank"),
+                F.col("_dangling"),
                 F.col("_cum"),
+                n,
             )
         return cur
 
@@ -239,13 +253,8 @@ class PageRankClassicProgram(_PageRankBase):
         self.damping = damping
         self.tol = tol
 
-    def update(self, state: DataFrame, inbox: DataFrame, ctx: SuperstepContext) -> DataFrame:
-        n = ctx.num_vertices
-        new_rank = F.lit((1.0 - self.damping) / n) + F.lit(self.damping) * (
-            F.coalesce(F.col("msg"), F.lit(0.0))
-            + F.lit(float(ctx.prev_aggs["dangling"]) / n)
-        )
-        return self._next_state(state, inbox, new_rank)
+    def rank(self, msg, dangling, cum, n: int):
+        return (1.0 - self.damping) / n + self.damping * (msg + dangling / n)
 
     def halt(self, ctx: SuperstepContext) -> bool:
         return ctx.superstep > 1 and ctx.aggs["l1"] <= self.tol
@@ -286,9 +295,16 @@ class PageRankWeightedProgram(PageRankClassicProgram):
         )
 
 
-def _run(graph: Graph, program: _PageRankBase, **engine_kwargs) -> DataFrame:
+def _run(
+    graph: Graph, program: _PageRankBase, max_supersteps: int, **engine_kwargs
+) -> DataFrame:
+    """(id, rank) after at most ``max_supersteps`` of ``program``: on the
+    driver when the graph fits and the run is not checkpointed (durable
+    state and resume belong to BspEngine), else on BspEngine."""
+    if engine_kwargs.get("checkpoint_dir") is None and local.fits(graph.cache()):
+        return local.pagerank(graph, program, max_supersteps)[0]
     resume = engine_kwargs.pop("resume", False)
-    engine = BspEngine(graph, **engine_kwargs)
+    engine = BspEngine(graph, max_supersteps=max_supersteps, **engine_kwargs)
     state, _ = engine.run(program, resume=resume)
     return state.select("id", "rank")
 
@@ -307,8 +323,10 @@ def pagerank(
 
     ``method="stride"`` runs the same per-iteration math with ``stride``
     iterations fused into each Spark action (scalars computed in-plan) —
-    the scaling-efficiency schedule; output parity with
-    ``method="superstep"`` is pinned by test_pagerank_stride_parity.
+    the scaling-efficiency schedule; it always runs on BspEngine, while
+    ``method="superstep"`` runs on the driver when the graph fits
+    ``plans/local.LOCAL_EDGES``. Output parity between the two is pinned
+    by test_pagerank_stride_parity.
 
     ``initial_ranks``: optional (id, rank) warm-start seed (must be
     positive) — with ``l1_threshold`` convergence this is the delta-

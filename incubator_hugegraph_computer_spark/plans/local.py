@@ -1,31 +1,109 @@
-"""Driver finish for min-label loops whose live edge set shrinks.
+"""Driver kernels for graphs, or tails of loops, small enough to hold.
 
-A Spark round costs a handful of jobs whatever its size, so once a
-loop's live graph is small the rounds left are all fixed cost. ``scc``
-and ``wcc_contract`` read their live edge count off the barrier that
-ends each round; at or below :data:`LOCAL_EDGES` they stop, pull the
-live vertices and edges with Arrow ``toPandas()``, label them here with
-a numpy-CSR kernel and hand the labels back as a frame for the loop's
-answer. Labels are min member ids, the same contract as the
-Spark path, so the answer does not depend on where the switch happens.
-This is how Vermeer, the reference's in-memory sibling, holds a graph:
-dense arrays over vertex indexes (SURVEY §1.1).
+A Spark round costs a handful of jobs whatever its size, so on a small
+graph every round is fixed cost. Two kinds of loop finish here instead,
+over dense numpy arrays indexed by position in the sorted vertex ids.
+This is how Vermeer, the reference's in-memory sibling, holds a graph
+(SURVEY §1.1).
+
+- Min-label loops whose live edge set shrinks: ``scc`` and
+  ``wcc_contract`` read their live edge count off the barrier that ends
+  each round. At or below :data:`LOCAL_EDGES` they stop and pull the
+  live vertices and edges with Arrow ``toPandas()``. A numpy-CSR kernel
+  labels them here, and the labels go back as a frame for the loop's
+  answer. Labels are min member ids, the same contract as the Spark
+  path, so the answer does not depend on where the switch happens.
+- The PageRank family (``pagerank``, ``pagerank_classic``,
+  ``pagerank_weighted``): a graph with at most :data:`LOCAL_EDGES`
+  vertices and edges runs all its supersteps in :func:`pagerank`. The
+  kernel calls the program's own ``rank`` update and ``halt`` rule, the
+  ones BspEngine calls, so the two executors share every formula.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql.types import StructField, StructType
+from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import DoubleType, StructField, StructType
 
-# Live edges (and, for scc, live vertices) at or below which a loop
-# finishes on the driver. The measured Spark-vs-driver crossover of scc
-# and wcc_contract lies above 2^20 edges on both graph families tried
-# (PLANS.md "Driver-finished tails"), so the cap is the driver budget:
-# at 1M edges and 1M vertices the pulled frames and the Tarjan kernel
-# peak at ~240 MB of Python heap.
+from incubator_hugegraph_computer_spark.graph import Graph
+from incubator_hugegraph_computer_spark.plans.bsp import SuperstepContext
+
+# Live edges (and, for scc and PageRank, vertices) at or below which a
+# loop runs on the driver. The measured Spark-vs-driver crossover of
+# scc, wcc_contract and PageRank lies above 2^20 edges on both graph
+# families tried (PLANS.md "Driver-finished tails"), so the cap is the
+# driver budget: at 1M edges and 1M vertices the pulled frames and the
+# Tarjan kernel peak at ~240 MB of Python heap.
 LOCAL_EDGES = 1_000_000
+
+
+def fits(graph: Graph) -> bool:
+    """Whether ``graph`` (cached) has at most :data:`LOCAL_EDGES`
+    vertices and at most as many edges."""
+    return graph.num_vertices() <= LOCAL_EDGES and graph.num_edges() <= LOCAL_EDGES
+
+
+def pagerank(
+    graph: Graph, program, max_supersteps: int
+) -> tuple[DataFrame, SuperstepContext]:
+    """``BspEngine(graph, max_supersteps).run(program)`` for a PageRank
+    program, on the driver: the (id, rank) frame and the context it
+    halted with. ``program`` supplies ``rank`` (the update formula),
+    ``halt``, ``initial_ranks`` and ``weight_col``.
+
+    The semantics are the Spark path's. ``n`` is the number of vertex
+    rows. A vertex's out-degree counts every edge it is the ``src`` of,
+    and a message reaches only a ``dst`` that is a vertex, so mass sent
+    to a non-vertex is lost. A vertex id listed k times is k state rows:
+    it sends and is summed k times. A null weight sends nothing, as
+    ``F.sum`` skips it. The output frame lives in the driver; it holds
+    no stored copy."""
+    vids = graph.vertices.select("id").toPandas()["id"].to_numpy()
+    n = len(vids)
+    ids, row_of, mult = np.unique(vids, return_inverse=True, return_counts=True)
+    w = program.weight_col
+    weight = [F.coalesce(F.col(w).cast("double"), F.lit(0.0)).alias("w")] if w else []
+    e = graph.edges.select("src", "dst", *weight).toPandas()
+    src = _lookup(ids, e["src"].to_numpy())
+    dst = _lookup(ids, e["dst"].to_numpy())
+    out_deg = np.bincount(src[src >= 0], minlength=len(ids))
+    send = (src >= 0) & (dst >= 0)
+    src, dst = src[send], dst[send]
+    factor = mult[src] * (e["w"].to_numpy()[send] if w else 1.0)
+
+    rank = np.full(len(ids), 1.0 / n)
+    if program.initial_ranks is not None:
+        seed = program.initial_ranks.select(
+            "id", F.col("rank").cast("double")
+        ).toPandas()
+        at, r = _lookup(ids, seed["id"].to_numpy()), seed["rank"].to_numpy()
+        known = (at >= 0) & ~np.isnan(r)
+        rank[at[known]] = r[known]
+
+    dangling = out_deg == 0
+    deg = np.maximum(out_deg, 1)
+
+    def aggs(new: np.ndarray, old: np.ndarray) -> dict[str, float]:
+        return {
+            "cum": float(mult @ new),
+            "dangling": float(mult[dangling] @ new[dangling]),
+            "l1": float(mult @ np.abs(new - old)),
+        }
+
+    ctx = SuperstepContext(num_vertices=n)
+    ctx.aggs = aggs(rank, rank)
+    for step in range(1, max_supersteps + 1):
+        ctx.superstep, ctx.prev_aggs = step, ctx.aggs
+        msg = np.bincount(dst, weights=(rank / deg)[src] * factor, minlength=len(ids))
+        new = program.rank(msg, ctx.prev_aggs["dangling"], ctx.prev_aggs["cum"], n)
+        ctx.aggs = aggs(new, rank)
+        rank = new
+        if program.halt(ctx):
+            break
+    out = _frame(graph.vertices, "id", {"id": vids, "rank": rank[row_of]}, rank=DoubleType())
+    return out, ctx
 
 
 def scc_labels(vertices: DataFrame, edges: DataFrame) -> DataFrame:
@@ -50,11 +128,12 @@ def wcc_labels(edges: DataFrame) -> DataFrame:
     return _frame(edges, "a", {"id": ids, "comp": labels})
 
 
-def _frame(like: DataFrame, id_col: str, cols: dict[str, np.ndarray]) -> DataFrame:
-    """``cols`` as a frame whose columns all take ``like[id_col]``'s type,
-    the type the Spark path's labels have."""
+def _frame(like: DataFrame, id_col: str, cols: dict[str, np.ndarray], **types) -> DataFrame:
+    """``cols`` as a frame whose columns take ``like[id_col]``'s type, the
+    type the Spark path's ids and labels have, unless ``types`` names
+    another."""
     t = like.schema[id_col].dataType
-    schema = StructType([StructField(c, t) for c in cols])
+    schema = StructType([StructField(c, types.get(c, t)) for c in cols])
     return like.sparkSession.createDataFrame(pd.DataFrame(cols), schema)
 
 
@@ -62,12 +141,18 @@ def _induced(
     ids: np.ndarray, src: np.ndarray, dst: np.ndarray
 ) -> tuple[np.ndarray, np.ndarray]:
     """Edges with both endpoints in the sorted ``ids``, as indexes into it."""
-    n = len(ids)
-    si = np.searchsorted(ids, src)
-    di = np.searchsorted(ids, dst)
-    keep = (si < n) & (di < n)
-    keep[keep] = (ids[si[keep]] == src[keep]) & (ids[di[keep]] == dst[keep])
+    si, di = _lookup(ids, src), _lookup(ids, dst)
+    keep = (si >= 0) & (di >= 0)
     return si[keep], di[keep]
+
+
+def _lookup(ids: np.ndarray, values: np.ndarray) -> np.ndarray:
+    """The index of each of ``values`` in the sorted ``ids``, -1 where
+    it is not there."""
+    if len(ids) == 0:
+        return np.full(len(values), -1, np.int64)
+    at = np.minimum(np.searchsorted(ids, values), len(ids) - 1)
+    return np.where(ids[at] == values, at, -1)
 
 
 def _tarjan_min(n: int, src: np.ndarray, dst: np.ndarray) -> np.ndarray:

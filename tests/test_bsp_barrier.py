@@ -13,6 +13,7 @@ from incubator_hugegraph_computer_spark.operators.ktruss import trussness
 from incubator_hugegraph_computer_spark.operators.pagerank import pagerank
 from incubator_hugegraph_computer_spark.operators.scc import scc
 from incubator_hugegraph_computer_spark.operators.wcc import WccProgram, wcc
+from incubator_hugegraph_computer_spark.plans import local
 from incubator_hugegraph_computer_spark.plans.bsp import BspEngine
 from tests.conftest import PRWCC_EDGES, PRWCC_VERTEX_IDS, make_graph
 from tests.test_templates import CappedMaxLabel, _components_graph
@@ -54,7 +55,8 @@ def prwcc(spark):
     return g
 
 
-def test_pagerank_leaves_only_its_state(spark, prwcc):
+def test_pagerank_leaves_only_its_state(spark, prwcc, monkeypatch):
+    monkeypatch.setattr(local, "LOCAL_EDGES", 0)  # BspEngine, not the driver kernel
     out, added = persisted_rdds_added(spark, lambda: pagerank(prwcc).collect())
     assert len(out) == len(PRWCC_VERTEX_IDS)
     assert len(added) <= 1, added
@@ -179,10 +181,11 @@ def _sql_graph(spark):
     ).cache()
 
 
-def test_pagerank_superstep_job_budget(spark):
+def test_pagerank_superstep_job_budget(spark, monkeypatch):
     """A 5-superstep pagerank fires at most the measured job count + 1
     per superstep, and no stage evaluates Python: the aggregator scalars
     ride the plan as literals, not as a one-row Python-built frame."""
+    monkeypatch.setattr(local, "LOCAL_EDGES", 0)  # BspEngine, not the driver kernel
     sc = spark.sparkContext
     jsc = sc._jsc.sc()
     store = jsc.statusStore()
