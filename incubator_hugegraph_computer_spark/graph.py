@@ -47,6 +47,8 @@ class Graph:
         # static across supersteps — WorkerInputManager.java:110-141).
         self.edges = edges if prepartitioned else edges.repartition(num_partitions, "src")
         self._cached = False
+        # vertex and edge counts, read once while the frames are cached
+        self._counts: dict[str, int] = {}
         self._degrees: DataFrame | None = None
         self.csr_df: DataFrame | None = None
         self.salted_df: DataFrame | None = None
@@ -79,6 +81,7 @@ class Graph:
             self.edges.unpersist()
             self.vertices.unpersist()
             self._cached = False
+            self._counts.clear()
         # release derived caches too — with_salting/with_csr each pin a
         # full extra copy of the edge set
         for attr in ("csr_df", "salted_df", "hubs_df", "_degrees"):
@@ -89,10 +92,20 @@ class Graph:
 
     # ------------------------------------------------------ structure
     def num_vertices(self) -> int:
-        return self.vertices.count()
+        return self._count("vertices")
 
     def num_edges(self) -> int:
-        return self.edges.count()
+        return self._count("edges")
+
+    def _count(self, frame: str) -> int:
+        """Rows of ``frame``: one Spark job, paid once per frame while the
+        graph is cached (the cached rows cannot change), every call
+        otherwise."""
+        if not self._cached:
+            return getattr(self, frame).count()
+        if frame not in self._counts:
+            self._counts[frame] = getattr(self, frame).count()
+        return self._counts[frame]
 
     def symmetrized(self) -> "Graph":
         """Undirected view: union(src→dst, dst→src) distinct, self-loops

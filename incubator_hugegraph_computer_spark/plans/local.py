@@ -41,7 +41,8 @@ LOCAL_EDGES = 1_000_000
 
 def fits(graph: Graph) -> bool:
     """Whether ``graph`` (cached) has at most :data:`LOCAL_EDGES`
-    vertices and at most as many edges."""
+    vertices and at most as many edges. The cached graph keeps both
+    counts, so BspEngine and the caller read them without a new job."""
     return graph.num_vertices() <= LOCAL_EDGES and graph.num_edges() <= LOCAL_EDGES
 
 

@@ -5,6 +5,11 @@ from tests.conftest import PRWCC_EDGES, PRWCC_VERTEX_IDS, make_graph
 from tests.oracles import pagerank_classic_oracle, pagerank_hugegraph_oracle, random_graph
 
 from incubator_hugegraph_computer_spark.operators.pagerank import pagerank, pagerank_classic
+from incubator_hugegraph_computer_spark.plans import local
+
+# The fixtures fit plans/local.LOCAL_EDGES, so by default the PageRank
+# entry points run the driver kernel; a cap of 0 runs BspEngine.
+BOTH_PATHS = (0, local.LOCAL_EDGES)
 
 
 def _as_dict(df):
@@ -14,6 +19,15 @@ def _as_dict(df):
 @pytest.fixture(scope="module")
 def fixture_graph(spark):
     return make_graph(spark, PRWCC_EDGES, PRWCC_VERTEX_IDS).cache()
+
+
+@pytest.fixture(scope="module")
+def classic10_bsp(fixture_graph):
+    """10 fixed pagerank_classic iterations on BspEngine's plain edge
+    join, shared by the CSR and salted message-pass comparisons."""
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(local, "LOCAL_EDGES", 0)
+        return _as_dict(pagerank_classic(fixture_graph, max_iterations=10, tol=0.0))
 
 
 def test_classic_matches_numpy_oracle(spark, fixture_graph):
@@ -26,14 +40,17 @@ def test_classic_matches_numpy_oracle(spark, fixture_graph):
     assert abs(got_vec.sum() - 1.0) < 1e-9  # probability mass conserved
 
 
-def test_hugegraph_formula_parity(spark, fixture_graph):
-    """Engine replicates PageRank.java:85-87 + master stop rule exactly."""
-    got = _as_dict(pagerank(fixture_graph, max_supersteps=10))
+def test_hugegraph_formula_parity(spark, fixture_graph, monkeypatch):
+    """Engine replicates PageRank.java:85-87 + master stop rule exactly,
+    on BspEngine and on the driver kernel."""
     ids = sorted(PRWCC_VERTEX_IDS)
     index = {v: i for i, v in enumerate(ids)}
     want = pagerank_hugegraph_oracle(len(ids), PRWCC_EDGES, index, max_supersteps=10)
-    got_vec = np.array([got[v] for v in ids])
-    assert np.allclose(got_vec, want, atol=1e-9, rtol=0)
+    for cap in BOTH_PATHS:
+        monkeypatch.setattr(local, "LOCAL_EDGES", cap)
+        got = _as_dict(pagerank(fixture_graph, max_supersteps=10))
+        got_vec = np.array([got[v] for v in ids])
+        assert np.allclose(got_vec, want, atol=1e-9, rtol=0), cap
 
 
 def test_pagerank_stride_parity(spark, fixture_graph):
@@ -59,6 +76,25 @@ def test_classic_random_graph(spark):
     assert np.allclose(got_vec, want, atol=1e-6, rtol=0)
 
 
+@pytest.mark.parametrize("graph", ["fixture", "random"])
+def test_classic_bsp_matches_numpy_oracle(spark, fixture_graph, monkeypatch, graph):
+    """BspEngine's pagerank_classic against the NumPy oracle after the
+    same 10 fixed iterations, to float-sum noise. The two convergent
+    oracle tests above run the driver kernel; ten supersteps keep the
+    Spark path's check cheap, and the driver-vs-Spark parity tests in
+    test_local_finish cover its tol halt."""
+    monkeypatch.setattr(local, "LOCAL_EDGES", 0)
+    if graph == "fixture":
+        ids, edges, g = sorted(PRWCC_VERTEX_IDS), PRWCC_EDGES, fixture_graph
+    else:
+        ids, edges = list(range(60)), random_graph(60, 300, seed=7)
+        g = make_graph(spark, edges, vertex_ids=ids)
+    got = _as_dict(pagerank_classic(g, max_iterations=10, tol=0.0))
+    index = {v: i for i, v in enumerate(ids)}
+    want = pagerank_classic_oracle(len(ids), edges, index, tol=0.0, max_iter=10)
+    assert max(abs(got[v] - want[index[v]]) for v in ids) <= 1e-12
+
+
 def test_salting_equivalence(spark, fixture_graph):
     """Hub salting is a physical rewrite only — identical results."""
     from pyspark.sql import functions as F
@@ -72,28 +108,28 @@ def test_salting_equivalence(spark, fixture_graph):
     assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, via_salt.collect()))
 
 
-def test_csr_message_pass_equivalence(spark, fixture_graph):
+def test_csr_message_pass_equivalence(spark, fixture_graph, classic10_bsp, monkeypatch):
     """CSR explode pass and edge-join pass produce identical ranks."""
     from incubator_hugegraph_computer_spark.graph import Graph
 
+    monkeypatch.setattr(local, "LOCAL_EDGES", 0)  # BspEngine's message passes
     g2 = Graph(fixture_graph.vertices, fixture_graph.edges, 4).cache().with_csr()
-    plain = _as_dict(pagerank_classic(fixture_graph, max_iterations=10, tol=0.0))
     via_csr = _as_dict(pagerank_classic(g2, max_iterations=10, tol=0.0))
-    assert plain == via_csr
+    assert classic10_bsp == via_csr
 
 
-def test_salted_message_pass_equivalence(spark, fixture_graph):
+def test_salted_message_pass_equivalence(spark, fixture_graph, classic10_bsp, monkeypatch):
     """Hub-salted pass (threshold low enough to salt the hub vertex 0)
     yields identical PageRank results."""
     from incubator_hugegraph_computer_spark.graph import Graph
 
+    monkeypatch.setattr(local, "LOCAL_EDGES", 0)  # BspEngine's message passes
     g3 = Graph(fixture_graph.vertices, fixture_graph.edges, 4).cache().with_salting(
         hub_threshold=3, salt_factor=4
     )
     assert g3.hubs_df.count() >= 1  # vertex 0 (out-degree 5) is a hub
-    plain = _as_dict(pagerank_classic(fixture_graph, max_iterations=10, tol=0.0))
     via_salt = _as_dict(pagerank_classic(g3, max_iterations=10, tol=0.0))
-    assert plain == via_salt
+    assert classic10_bsp == via_salt
 
 
 def test_pagerank_warm_start(spark, fixture_graph):

@@ -17,6 +17,7 @@ from incubator_hugegraph_computer_spark.operators.pagerank import (
     pagerank_classic,
     pagerank_weighted,
 )
+from incubator_hugegraph_computer_spark.plans import local
 
 
 def _weight(s, d):
@@ -50,17 +51,21 @@ def _pagerank_weighted_numpy(n, edges, index, iters, damping=0.85):
     return r
 
 
-def test_pagerank_weighted_matches_numpy(spark):
+def test_pagerank_weighted_matches_numpy(spark, monkeypatch):
     g = _weighted_graph(spark)
-    got = {
-        r["id"]: r["rank"]
-        for r in pagerank_weighted(g, max_iterations=20, tol=0.0).collect()
-    }
     ids = sorted(PRWCC_VERTEX_IDS)
     index = {v: i for i, v in enumerate(ids)}
     want = _pagerank_weighted_numpy(len(ids), PRWCC_EDGES, index, iters=20)
-    got_vec = np.array([got[v] for v in ids])
-    assert np.allclose(got_vec, want, atol=1e-9, rtol=0)
+    # the fixture fits plans/local.LOCAL_EDGES: a cap of 0 runs
+    # BspEngine, the default cap the driver kernel
+    for cap in (0, local.LOCAL_EDGES):
+        monkeypatch.setattr(local, "LOCAL_EDGES", cap)
+        got = {
+            r["id"]: r["rank"]
+            for r in pagerank_weighted(g, max_iterations=20, tol=0.0).collect()
+        }
+        got_vec = np.array([got[v] for v in ids])
+        assert np.allclose(got_vec, want, atol=1e-9, rtol=0), cap
 
 
 def test_pagerank_weighted_unit_weights_match_classic(spark):
