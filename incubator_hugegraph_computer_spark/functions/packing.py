@@ -15,7 +15,8 @@ uses the same partition-offset fix as
 ``sources/extractor.dense_ids_by_sort``: range-partition by id (ranges
 are ordered), sum tokens within each partition in parallel, cumsum the
 P per-partition totals on the driver (P rows, trivially small), and
-broadcast the offsets back — every stage is fully parallel, no
+send the offsets back (here as a broadcast P-row table; the mint puts
+them in the plan as an array literal) — every stage is fully parallel, no
 single-task exchange, so the layout of a 100 TB corpus is computed in
 one pass + one P-row action.
 """

@@ -8,23 +8,33 @@ the hot path), content integrity is verified by sha256 per row
 references resolve against the file catalog to file-level edges
 ``(src: long, dst: long)``.
 
+The source is read once. :func:`extract_edges` stores one projection of
+it — ``(repo, path, module, refs, sha-ok flag)``, never ``content`` —
+with one ``lineage.barrier``, so the source plan and the Python
+extraction run in a single stage; the sha256 check, the id mint and the
+edge build all read that stored scan. The mint stores its own
+range-partitioned, sorted copy (ids on the same rows as their refs);
+the returned frames are projections of it.
+
 Reference analogue: the inputstep
 (``computer-core/.../input/WorkerInputManager.java:110-141``) where raw
-input is fetched, converted and shuffled by the partitioner; its
-"stale edges are skipped" rule (``FileGraphPartition.java:341-343``)
+input is fetched and converted once, then shuffled by the partitioner;
+its "stale edges are skipped" rule (``FileGraphPartition.java:341-343``)
 maps to the inner join against the catalog (unresolvable imports drop).
 The input-filter column pruning
 (``input/filter/DefaultInputFilter.java``) is Catalyst's job here: only
-(repo, path, content, lang) are ever read from the scan.
+(repo, path, content, lang, sha256) are ever read from the scan.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+from itertools import accumulate
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window, functions as F, types as T
+from pyspark.sql import Column, DataFrame, functions as F, types as T
 from pyspark.sql.pandas.functions import pandas_udf
+
+from incubator_hugegraph_computer_spark.plans.lineage import barrier, release
 
 # One regex per language, applied with pandas' vectorized .str.findall.
 LANG_IMPORT_RE = {
@@ -49,65 +59,61 @@ def extract_refs(content: pd.Series, lang: pd.Series) -> pd.Series:
     return out
 
 
+def _sha_ok(hash_col: str = "sha256") -> Column:
+    """True where recomputed sha256(content) equals the stored hash.
+
+    ``eqNullSafe(True)``, not the bare equality: a NULL content or NULL
+    stored hash makes the equality NULL, and a filter on ``~NULL`` would
+    silently pass the unverifiable row instead of counting it corrupt."""
+    return (F.sha2(F.col("content"), 256) == F.col(hash_col)).eqNullSafe(F.lit(True))
+
+
 def verify_sha256(files: DataFrame, hash_col: str = "sha256") -> DataFrame:
     """Per-row integrity invariant: recomputed sha256(content) must equal
-    the catalog's stored hash. Returns the verified frame; raises on any
-    mismatch (the count is a cheap scan-only action — no shuffle)."""
-    checked = files.withColumn("_sha_ok", F.sha2(F.col("content"), 256) == F.col(hash_col))
-    # NOT (ok IS TRUE), not ~ok: a NULL content or NULL stored hash makes
-    # the equality NULL, and where(~NULL) would silently pass the
-    # unverifiable row instead of counting it as corrupt
-    bad = checked.where(~F.col("_sha_ok").eqNullSafe(F.lit(True))).count()
+    the catalog's stored hash. Returns ``files``; raises on any mismatch
+    (the count is a cheap scan-only action — no shuffle)."""
+    bad = files.where(~_sha_ok(hash_col)).count()
     if bad:
         raise ValueError(f"sha256 mismatch on {bad} rows — corrupt input")
-    return checked.drop("_sha_ok")
+    return files
+
+
+def _module() -> Column:
+    """The module token a file defines: its file name without extension."""
+    return F.regexp_extract("path", r"([^/]+)\.[A-Za-z]+$", 1)
 
 
 def dense_ids_by_sort(df: DataFrame, order_cols: list[str], id_col: str = "id") -> DataFrame:
-    """Mint dense ids 0..N-1 in (order_cols) sort order WITHOUT a global
-    single-task window: range-repartition (partition p holds a
-    contiguous key range, all ranges ordered), rank within each
-    partition in parallel (the window partitions by spark_partition_id,
-    so every partition sorts its own rows concurrently), then add the
-    per-partition cumulative offsets — a P-row driver cumsum broadcast
-    back as a join. Same ids as ``row_number() OVER (ORDER BY ...)``,
-    no stage with one task."""
+    """``df`` plus dense ids 0..N-1 in (order_cols) sort order, minted
+    WITHOUT a global single-task stage.
+
+    Range-repartition (partition p holds a contiguous key range, all
+    ranges ordered), sort each partition, and number its rows with
+    ``monotonically_increasing_id`` (``p << 33`` plus the row's place in
+    the sorted partition). One :func:`barrier` stores those rows; its
+    aggregate row is the per-partition row counts. The id is the row's
+    place plus its partition's offset, the driver cumsum of those
+    counts, read from an array literal indexed by the partition. Same
+    ids as ``row_number() OVER (ORDER BY ...)``.
+
+    The rows must be stored before the offsets are read: ids come from
+    the partitioning the offsets were counted on, and
+    ``repartitionByRange`` re-samples its boundaries on recompute. The
+    returned frame is a projection of the stored rows (no shuffle) and
+    keeps them stored while it is referenced; ``df`` itself is left as
+    it was."""
     n_parts = df.sparkSession.sparkContext.defaultParallelism
-    # ids must come from the SAME partitioning the offsets were
-    # collected from, and repartitionByRange RE-SAMPLES boundaries on
-    # recompute — so pin the range-partitioned INPUT with an eager
-    # localCheckpoint. Everything downstream (broadcast offset join +
-    # per-partition window) is then deterministic lazily, which is
-    # 2-3x cheaper than the previous eager checkpoint of the full
-    # OUTPUT (measured 4.6s -> 2.0s at 200k rows / local[32]: the
-    # output materialization was pure overhead for consumers that
-    # immediately join it away).
-    part = (
+    pid = F.shiftright(F.col("_mid"), 33)
+    part, counts = barrier(
+        None,
         df.repartitionByRange(n_parts, *order_cols)
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
+        .sortWithinPartitions(*order_cols)
+        .withColumn("_mid", F.monotonically_increasing_id()),
+        *(F.count_if(pid == p) for p in range(n_parts)),
     )
-    counts = sorted(
-        ((r["_pid"], r["cnt"]) for r in part.groupBy("_pid").agg(F.count(F.lit(1)).alias("cnt")).collect())
-    )
-    offsets, acc = [], 0
-    for pid, cnt in counts:
-        offsets.append((pid, acc))
-        acc += cnt
-    off_df = F.broadcast(
-        df.sparkSession.createDataFrame(offsets, "_pid int, _off long")
-    )
-    w = Window.partitionBy("_pid").orderBy(*order_cols)
-    out = (
-        part.join(off_df, "_pid")
-        .withColumn(id_col, (F.col("_off") + F.row_number().over(w) - 1).cast("long"))
-        .drop("_pid", "_off")
-    )
-    # the mint already knows the exact row count; stash it for callers —
-    # a checkpointed lineage carries no size stats, so consumers cannot
-    # get this from the planner (see extract_edges' broadcast decision)
-    out._hgc_row_count = acc
-    return out
+    offsets = F.lit(list(accumulate(counts[:-1], initial=0))).cast("array<long>")
+    row = F.col("_mid").bitwiseAND((1 << 33) - 1)
+    return part.withColumn(id_col, offsets[pid] + row).drop("_mid")
 
 
 def build_catalog(files: DataFrame, dense_ids: bool = True) -> DataFrame:
@@ -122,12 +128,9 @@ def build_catalog(files: DataFrame, dense_ids: bool = True) -> DataFrame:
     SURVEY §1.3 apply only to the dense path's min-id outputs which
     stay non-negative).
     """
-    base = files.select("repo", "path", F.regexp_extract("path", r"([^/]+)\.[A-Za-z]+$", 1).alias("module"))
+    base = files.select("repo", "path", _module().alias("module"))
     if dense_ids:
-        minted = dense_ids_by_sort(base, ["repo", "path"])
-        out = minted.select("id", "repo", "path", "module")
-        out._hgc_row_count = getattr(minted, "_hgc_row_count", None)
-        return out
+        return dense_ids_by_sort(base, ["repo", "path"]).select("id", "repo", "path", "module")
     return base.select(
         F.xxhash64("repo", "path").alias("id"), "repo", "path", "module"
     )
@@ -179,13 +182,9 @@ def mint_uuid_ordered_ids(values: DataFrame, col: str = "uid") -> DataFrame:
 
 
 def extract_edges(
-    files: DataFrame,
-    catalog: DataFrame | None = None,
-    verify: bool = True,
-    broadcast_catalog: bool | None = None,
-    weighted: bool = False,
+    files: DataFrame, verify: bool = True, weighted: bool = False
 ) -> tuple[DataFrame, DataFrame]:
-    """Full ingest: verify → extract refs → resolve → dedup.
+    """Full ingest: one scan (verify + extract refs) → mint → resolve → dedup.
 
     Returns (vertices ``(id, repo, path)``, edges ``(src, dst)`` — or
     ``(src, dst, weight)`` with ``weighted=True``).
@@ -197,41 +196,41 @@ def extract_edges(
     ``pagerank_weighted``. Same single shuffle either way (distinct and
     groupBy hash on the same (src,dst) key).
 
-    The resolve is a join of the exploded reference tokens against the
-    catalog on ``module``. ``broadcast_catalog=None`` auto-decides from
-    the mint's known row count (small catalog → broadcast-hash joins on
-    both resolve sides; huge catalog or unknown count → shuffle joins on
-    the token, both sides hash-partitioned on the same key with AQE
-    splitting skewed hub tokens). Pass True/False to pin it.
+    ``files`` is read once: the projection ``(repo, path, module, refs,
+    sha-ok flag)`` is stored by one :func:`barrier`, whose row gives the
+    corrupt-row count (raised on before the mint) and the file count.
+    ``content`` is never stored. The mint range-partitions, sorts and
+    stores that scan, ids on the same rows as their ``refs``, and the
+    scan is then released. Edges are the exploded refs, ``src`` already
+    on the row, joined to the minted ``module → dst`` side; a catalog
+    under ~5M rows (tens of MB) is broadcast, a larger one is
+    shuffle-joined on the token with AQE splitting skewed hub modules.
+    Both returned frames read the mint's stored rows (a projection and
+    a join, no window) and keep them stored while referenced.
     """
-    if verify:
-        files = verify_sha256(files)
-    if catalog is None:
-        catalog = build_catalog(files)
-    refs = files.select(
+    aggs = [F.count(F.lit(1))]
+    scan_cols = [
         "repo",
         "path",
-        F.explode(extract_refs(F.col("content"), F.col("lang"))).alias("module"),
-    )
-    if broadcast_catalog is None:
-        # auto-decide from the mint's exact row count (the checkpointed
-        # catalog lineage carries no size stats, so the planner can never
-        # see that this dimension is small): a catalog under ~5M rows is
-        # tens of MB serialized — broadcast both resolve sides (measured
-        # ~4x on the resolve stage at 200k files). At 10^12 files this is
-        # False and both joins stay shuffle-partitioned on their keys
-        # (with AQE splitting skewed hub modules).
-        n = getattr(catalog, "_hgc_row_count", None)
-        broadcast_catalog = n is not None and n <= 5_000_000
-    src_side = catalog.select(
-        F.col("id").alias("src"), F.col("repo").alias("repo"), F.col("path").alias("path")
-    )
-    dst_side = catalog.select(F.col("id").alias("dst"), F.col("module").alias("module"))
-    if broadcast_catalog:
-        src_side = F.broadcast(src_side)
+        _module().alias("module"),
+        extract_refs(F.col("content"), F.col("lang")).alias("refs"),
+    ]
+    if verify:
+        scan_cols.append(_sha_ok().alias("_sha_ok"))
+        aggs.append(F.count_if(~F.col("_sha_ok")))
+    scan, row = barrier(None, files.select(*scan_cols), *aggs)
+    if verify and row[1]:
+        release(scan)
+        raise ValueError(f"sha256 mismatch on {row[1]} rows — corrupt input")
+    minted = dense_ids_by_sort(scan.select("repo", "path", "module", "refs"), ["repo", "path"])
+    release(scan)  # the mint stored its own copy
+    dst_side = minted.select(F.col("id").alias("dst"), "module")
+    # the stored mint carries no size estimate, so the planner cannot
+    # see that this side is small: under ~5M rows it is tens of MB
+    if row[0] <= 5_000_000:
         dst_side = F.broadcast(dst_side)
     raw = (
-        refs.join(src_side, ["repo", "path"])
+        minted.select(F.col("id").alias("src"), F.explode("refs").alias("module"))
         .join(dst_side, "module")
         .select("src", "dst")
         .where(F.col("src") != F.col("dst"))
@@ -242,5 +241,4 @@ def extract_edges(
         )
     else:
         edges = raw.distinct()
-    vertices = catalog.select("id", "repo", "path")
-    return vertices, edges
+    return minted.select("id", "repo", "path"), edges

@@ -1,9 +1,11 @@
 import hashlib
+import re
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from incubator_hugegraph_computer_spark.graph import Graph
 from incubator_hugegraph_computer_spark.sources.extractor import (
     build_catalog,
     extract_edges,
@@ -48,6 +50,76 @@ def test_sha256_verification_detects_corruption(spark, files):
     )
     with pytest.raises(ValueError, match="sha256 mismatch on 1 rows"):
         verify_sha256(corrupted).count()
+
+
+def test_extract_edges_blocks_corrupt_input(spark, files):
+    """The stored scan's sha-ok flag counts a changed content, a NULL
+    content and a NULL stored hash as corrupt, and raises before any
+    edge is built; ``verify=False`` skips the check."""
+    idx = F.col("file_idx")
+    corrupted = files.withColumn(
+        "content",
+        F.when(idx == 3, F.concat(F.col("content"), F.lit("X")))
+        .when(idx == 5, F.lit(None))
+        .otherwise(F.col("content")),
+    ).withColumn("sha256", F.when(idx == 8, F.lit(None)).otherwise(F.col("sha256")))
+    with pytest.raises(ValueError, match="sha256 mismatch on 3 rows"):
+        extract_edges(corrupted, verify=True)
+    _, edges = extract_edges(corrupted, verify=False)
+    assert edges.count() > 0
+
+
+def _python_stages_run(spark, group):
+    """Stages of ``group``'s jobs that ran tasks through a Python
+    evaluator (a skipped stage reused a shuffle and ran nothing)."""
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty(60_000)
+    store = jsc.statusStore()
+    graph_of = spark._jvm.org.apache.spark.ui.scope.RDDOperationGraph
+    tracker = sc.statusTracker()
+    found = []
+    for job_id in tracker.getJobIdsForGroup(group):
+        for stage_id in tracker.getJobInfo(job_id).stageIds:
+            info = tracker.getStageInfo(stage_id)
+            if info is None or info.numCompletedTasks == 0:
+                continue
+            dot = graph_of.makeDotFile(store.operationGraphForStage(stage_id))
+            if re.search(r'label="(\w*Python\w*|\w*InPandas|PythonRDD)', dot):
+                found.append(stage_id)
+    return found
+
+
+def test_ingest_scans_the_source_once(spark):
+    """Ingest plus the graph build and its counts run the source plan
+    (the generator and the reference extraction) in exactly one stage:
+    every later job reads the stored scan or the stored mint."""
+    fresh = generate_repo_files(spark, V, num_repos=4, seed=11)
+    sc = spark.sparkContext
+    group = "test-ingest-single-scan"
+    sc.setJobGroup(group, "ingest single scan")
+    try:
+        vertices, edges = extract_edges(fresh, verify=True)
+        g = Graph(vertices.select("id"), edges).cache()
+        assert g.num_vertices() == V
+        assert g.num_edges() > 0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(_python_stages_run(spark, group)) == 1
+    g.unpersist()
+
+
+def test_minted_ids_are_the_sort_rank(spark, files):
+    """Dense ids are the (repo, path) rank, across the several range
+    partitions the mint counts its offsets over."""
+    assert spark.sparkContext.defaultParallelism > 1
+    vertices, _ = extract_edges(files, verify=False)
+    rows = sorted(vertices.collect(), key=lambda r: r["id"])
+    assert [r["id"] for r in rows] == list(range(V))
+    assert [(r["repo"], r["path"]) for r in rows] == sorted((r["repo"], r["path"]) for r in rows)
+    catalog = build_catalog(files).collect()
+    assert {(r["id"], r["repo"], r["path"]) for r in catalog} == {tuple(r) for r in rows}
 
 
 def test_extracted_edges_match_closed_form(spark, files):
