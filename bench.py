@@ -98,7 +98,7 @@ def run_pass(spark, sf_dir: str, n_files: int, timings: dict[str, float],
 
     def _extract():
         vertices, edges = extract_edges(files, verify=True)
-        g = Graph(vertices.select("id"), edges).cache().with_csr()
+        g = Graph(vertices.select("id"), edges).cache()
         g_edges = g.num_edges()
         return g, g_edges
 
@@ -106,7 +106,7 @@ def run_pass(spark, sf_dir: str, n_files: int, timings: dict[str, float],
     derived["corpus_files"] = n_files
     derived["graph_edges"] = n_edges
 
-    # untimed warmup: materialize the CSR/edge caches and JIT the
+    # untimed warmup: materialize the cached edges and JIT the
     # superstep plan once. The first heavy action over cold caches shows
     # 3-5x heavy tails under 32-thread cache-write contention (BENCH.md);
     # the steady-state number is the one that scales to a long job.

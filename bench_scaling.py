@@ -28,11 +28,10 @@ Env: SCALE_N (default 2), SCALE_4N (default 8), BENCH_FILES (default
 4000000), SCALE_TRIALS (default 3).
 
 ``SCALE_MODE=rmat`` swaps the corpus for the deterministic R-MAT
-generator (``sources/generators.py``) — the power-law skew stress case
-the north rule's salting requirement names — and turns explicit hub
-salting ON in the trials (``Graph.with_salting``; threshold scaled to
-the generated degree profile). SCALE_RMAT_EDGES (default 8000000) and
-SCALE_RMAT_LEVELS (default 20) size the graph.
+generator (``sources/generators.py``) — the power-law skew stress case.
+The trials run the same plain hash-partitioned message pass in both
+modes. SCALE_RMAT_EDGES (default 8000000) and SCALE_RMAT_LEVELS
+(default 20) size the graph.
 """
 
 from __future__ import annotations
@@ -87,34 +86,16 @@ from incubator_hugegraph_computer_spark.graph import Graph
 from incubator_hugegraph_computer_spark.operators.pagerank import pagerank
 from incubator_hugegraph_computer_spark.operators.wcc import wcc
 cpus, data = int(sys.argv[1]), sys.argv[2]
-salting = len(sys.argv) > 3 and sys.argv[3] == "salt"
 spark = get_spark(app_name=f"scale-{cpus}", master=f"local[{cpus}]",
                   shuffle_partitions=64,
                   extra_confs={"spark.driver.memory": "40g"})
 edges = spark.read.parquet(data + "/edges")
 verts = spark.read.parquet(data + "/vertices")
 g = Graph(verts, edges, num_partitions=64, prepartitioned=False).cache()
-n_salted_hubs = 0
-if salting:
-    # R-MAT mode: engage explicit hub salting ONLY when a source's
-    # adjacency run exceeds ~2x a partition's fair share — below that,
-    # hash partitioning + CSR already balance and the salted E-row join
-    # is pure overhead (measured +53% at 7.8M edges when over-triggered
-    # at thr=15k; BENCH.md round-4 salting-crossover note). At 10^12
-    # scale hub runs exceed any fair share and this path takes over.
-    from pyspark.sql import functions as F
-    thr = max(100_000, 2 * g.num_edges() // 64)
-    n_salted_hubs = g.out_degrees().where(F.col("out_deg") >= thr).count()
-    if n_salted_hubs:
-        g = g.with_salting(hub_threshold=thr, salt_factor=8)
-    else:
-        g = g.with_csr()  # no hub crosses the fair share at this size
-else:
-    g = g.with_csr()
 n_edges = g.num_edges()
 # symmetrized view prepared once outside the timed loops (ingest-time
-# work, shared by every undirected algorithm) and CSR-packed like g
-gsym = g.symmetrized().cache().with_csr()
+# work, shared by every undirected algorithm)
+gsym = g.symmetrized().cache()
 gsym.num_edges()
 t0 = time.monotonic()
 # stride=2: two PR iterations per barrier (scalars in-plan) — halves
@@ -127,7 +108,7 @@ t0 = time.monotonic()
 wcc(gsym, max_supersteps=30, presymmetrized=True, method="stride", stride=4,
     count_messages=False).count()
 t_wcc = time.monotonic() - t0
-print(json.dumps({"cpus": cpus, "edges": n_edges, "salted_hubs": n_salted_hubs,
+print(json.dumps({"cpus": cpus, "edges": n_edges,
                   "pagerank_sec": round(t_pr, 3), "wcc_sec": round(t_wcc, 3)}))
 """
 
@@ -187,12 +168,10 @@ def main() -> None:
     mode = os.environ.get("SCALE_MODE", "corpus")
 
     data = tempfile.mkdtemp(prefix="scale_input_")
-    trial_args: tuple[str, ...] = ()
     if mode == "rmat":
         rmat_edges = int(os.environ.get("SCALE_RMAT_EDGES", "8000000"))
         rmat_levels = int(os.environ.get("SCALE_RMAT_LEVELS", "20"))
         _run_py(PREPARE_RMAT, str(rmat_edges), str(rmat_levels), data)
-        trial_args = ("salt",)  # hub salting ON — the skew stress case
     else:
         _run_py(PREPARE, str(n_files), data)
 
@@ -201,7 +180,7 @@ def main() -> None:
         for cpus in (n_small, n_big):  # interleaved
             line = [
                 l
-                for l in _run_py(TRIAL, str(cpus), data, *trial_args, cpus=cpus).splitlines()
+                for l in _run_py(TRIAL, str(cpus), data, cpus=cpus).splitlines()
                 if l.startswith("{")
             ][-1]
             results[cpus].append(json.loads(line))
@@ -220,7 +199,6 @@ def main() -> None:
     edges = results[n_small][0]["edges"]
     report = {
         "mode": mode,
-        "salting": mode == "rmat",
         "n_files": n_files if mode == "corpus" else None,
         "edges": edges,
         "protocol": f"local[{n_small}] vs local[{n_big}] ({factor:.0f}x cores), "

@@ -10,6 +10,8 @@ active), edges are co-located with their source vertex
   hash-partitioned by ``src`` — the Spark analogue of the reference's
   ``HashPartitioner`` placement of adjacency with the vertex
   (``computer-core/.../core/graph/partition/HashPartitioner.java:41-50``).
+  This plain hash partition is the only edge layout: like the
+  reference, message passes run over it with no skew handling.
 
 Ids are dense longs; string/UUID ids are minted to longs at ingest
 (see sources/extractor.py) which sidesteps the reference's
@@ -50,10 +52,6 @@ class Graph:
         # vertex and edge counts, read once while the frames are cached
         self._counts: dict[str, int] = {}
         self._degrees: DataFrame | None = None
-        self.csr_df: DataFrame | None = None
-        self.salted_df: DataFrame | None = None
-        self.hubs_df: DataFrame | None = None
-        self.salt_factor: int = 1
 
     # ---------------------------------------------------------- build
     @classmethod
@@ -82,13 +80,10 @@ class Graph:
             self.vertices.unpersist()
             self._cached = False
             self._counts.clear()
-        # release derived caches too — with_salting/with_csr each pin a
-        # full extra copy of the edge set
-        for attr in ("csr_df", "salted_df", "hubs_df", "_degrees"):
-            df = getattr(self, attr, None)
-            if df is not None:
-                df.unpersist()
-                setattr(self, attr, None)
+        # the degree frame is derived from the edges; drop it with them
+        if self._degrees is not None:
+            self._degrees.unpersist()
+            self._degrees = None
 
     # ------------------------------------------------------ structure
     def num_vertices(self) -> int:
@@ -149,79 +144,3 @@ class Graph:
             .join(deg, "id", "left")
             .select("id", F.coalesce("degree", F.lit(0)).alias("degree"))
         )
-
-    # --------------------------------------------------- skew handling
-    def salted_edges(self, hub_threshold: int = 100_000, salt_factor: int = 16) -> DataFrame:
-        """Edges with a ``salt`` column splitting power-law hub *sources*
-        into ``salt_factor`` sub-groups. The state side of a message
-        pass is then exploded across salts for hub vertices only, so no
-        single task owns a whole hub adjacency. The reference has no
-        skew handling (plain hash partition); this is the explicit
-        salting the 10^12-file scale target requires on top of AQE's
-        skew-join splitting. Returns (src, dst, salt) where salt==0 for
-        non-hub sources.
-        """
-        deg = self.out_degrees().where(F.col("out_deg") >= hub_threshold)
-        hubs = F.broadcast(deg.select(F.col("id").alias("src"), F.lit(True).alias("is_hub")))
-        return (
-            self.edges.join(hubs, "src", "left")
-            .withColumn(
-                "salt",
-                # pmod, NOT abs(hash)%k: abs(Integer.MIN_VALUE) stays
-                # negative, and a negative salt matches no replicated
-                # state row — that edge would silently never receive
-                # hub messages (~E/2^32 lost edges at 10^12 scale)
-                F.when(
-                    F.col("is_hub"), F.pmod(F.hash("dst"), F.lit(salt_factor))
-                ).otherwise(F.lit(0)),
-            )
-            .drop("is_hub")
-        )
-
-    def csr(self) -> DataFrame:
-        """Adjacency packed per source: (src, neighbors array<long>) —
-        the analogue of Vermeer's in-memory CSR
-        (``vermeer/apps/structure/graph_data.go:43-60``). Useful when an
-        algorithm repeatedly fans out whole neighborhoods: one shuffle
-        at build time, then message passes become explode() with no
-        per-superstep edge shuffle."""
-        return self.edges.groupBy("src").agg(F.collect_list("dst").alias("neighbors"))
-
-    def with_salting(self, hub_threshold: int = 100_000, salt_factor: int = 16) -> "Graph":
-        """Enable explicit hub salting for message passes.
-
-        Power-law hub *sources* own adjacency runs far larger than a
-        partition's fair share; hash partitioning alone (the reference's
-        only strategy, ``HashPartitioner.java:41-44``) leaves one task
-        holding the whole run. Salting splits each hub's edges across
-        ``salt_factor`` sub-keys: edges are re-partitioned by
-        (src, salt) and the *state* side of the pass replicates rows —
-        only for hubs (a broadcast semi-set decides) — across the salts,
-        so every task handles ≤ 1/salt_factor of any hub's fan-out.
-        Results are identical (verified in tests); only the physical
-        distribution changes.
-        """
-        self.salted_df = self.salted_edges(hub_threshold, salt_factor).repartition(
-            self.num_partitions, "src", "salt"
-        ).persist()
-        self.hubs_df = (
-            self.out_degrees()
-            .where(F.col("out_deg") >= hub_threshold)
-            .select("id")
-            .persist()
-        )
-        self.salt_factor = salt_factor
-        self.salted_df.count()
-        self.hubs_df.count()
-        return self
-
-    def with_csr(self) -> "Graph":
-        """Build + cache the CSR adjacency; message passes whose payload
-        depends only on source-side state then run as
-        state ⋈ csr → explode(neighbors) — the per-superstep edge-side
-        work drops from E join rows (sorted by SMJ every pass) to V
-        hash-join rows + a codegen'd Generate."""
-        if self.csr_df is None:
-            self.csr_df = self.csr().persist()
-            self.csr_df.count()
-        return self

@@ -86,7 +86,7 @@ def build_parser() -> argparse.ArgumentParser:
                    help="sssp_paths targets: '*' or comma-separated vertex ids "
                    "(single_source_shortest_path.target_id)")
     p.add_argument("--wcc-method", default="propagate",
-                   choices=["propagate", "stride", "shortcut", "contract"],
+                   choices=["propagate", "stride", "contract"],
                    help="WCC physical strategy (identical output); "
                    "'contract' = large-star/small-star, O(log n) rounds "
                    "on high-diameter graphs")
@@ -141,10 +141,6 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--checkpoint-messages", action="store_true",
                    help="also snapshot the combined inbox each checkpointed "
                    "superstep (replayable supersteps; one extra write job)")
-    p.add_argument("--checkpoint-table", default=None,
-                   help="catalog table for checkpoint STATE (DataFrameWriterV2; "
-                   "an Iceberg table when an Iceberg catalog is configured) — "
-                   "markers/metrics still live under --checkpoint-dir")
     p.add_argument("--run-id", default=None)
     p.add_argument("--resume", action="store_true")
     p.add_argument("--max-supersteps", type=int, default=None)
@@ -172,10 +168,6 @@ def run(args: argparse.Namespace) -> dict:
     }
     if args.resume and not args.checkpoint_dir:
         raise SystemExit("--resume requires --checkpoint-dir")
-    if args.checkpoint_table and not args.checkpoint_dir:
-        raise SystemExit(
-            "--checkpoint-table requires --checkpoint-dir (markers/metrics live there)"
-        )
     if args.checkpoint_dir and args.algorithm not in ckpt_algos:
         raise SystemExit(
             f"--checkpoint-dir/--resume are not supported for {args.algorithm} "
@@ -198,16 +190,7 @@ def run(args: argparse.Namespace) -> dict:
     from incubator_hugegraph_computer_spark.sources.extractor import extract_edges
     from incubator_hugegraph_computer_spark.sources.repo_files import generate_repo_files
 
-    # the table checkpoint backend needs a catalog that survives the
-    # process so a NEW spark-submit can resume from it: default the
-    # session catalog to Hive (local Derby metastore when no metastore
-    # service is configured). An Iceberg deployment instead names the
-    # table through its v2 catalog (spark-submit --conf
-    # spark.sql.catalog.<name>=...), which this conf does not touch.
-    table_confs = (
-        {"spark.sql.catalogImplementation": "hive"} if args.checkpoint_table else None
-    )
-    spark = get_spark(app_name=f"hgc-{args.algorithm}", extra_confs=table_confs)
+    spark = get_spark(app_name=f"hgc-{args.algorithm}")
     t0 = time.monotonic()
     store_meta = (
         os.path.join(args.graph_store, "_hgc_graph_meta.json")
@@ -315,7 +298,6 @@ def run(args: argparse.Namespace) -> dict:
             "run_id": args.run_id,
             "resume": args.resume,
             "checkpoint_messages": args.checkpoint_messages,
-            "checkpoint_table": args.checkpoint_table,
         }
     iter_kwargs = dict(engine_kwargs)
     step_kwargs = {}  # for the engine_kwargs-based algos below

@@ -36,9 +36,6 @@ from incubator_hugegraph_computer_spark.plans.lineage import barrier, release
 # while the level has at most this many vertices; beyond it, Spark's
 # shuffle planning takes over untouched.
 _BCAST_V = 2_000_000
-# frontier-pruning bookkeeping only arms on levels whose adjacency is
-# big enough for the pruned E-row scan to out-earn the changed-set job
-_PRUNE_MIN_E = 2_000_000
 
 
 def _initial_adjacency(graph: Graph, weight_col: str | None = None) -> DataFrame:
@@ -67,93 +64,34 @@ def _move_phase(
 ) -> DataFrame:
     """One level of local moves. Returns (id, c) assignment.
 
-    Two scale-adaptive mechanisms, both exactness-preserving (the
-    returned assignment is hash-identical to the plain schedule):
-
     **Small-side broadcast.** Every per-step join pairs the E-row
     adjacency (or an E-row aggregate) with a V-row frame (communities,
     totals, move results). While V is small enough to broadcast
     (≤ ``_BCAST_V``), hint those sides broadcast — an inner step then
     shuffles only its two aggregations instead of five exchanges. At
     cluster scale V outgrows the bound and the joins revert to Spark's
-    shuffle planning untouched.
+    shuffle planning untouched; the assignment is identical either way.
 
-    **Exact frontier pruning.** A vertex's move decision at inner step
-    ``it`` is a deterministic function of (its neighbors' communities,
-    the tot of its candidate communities, the direction parity
-    ``it % 2``). If none of those inputs changed since the vertex was
-    last evaluated at the SAME parity — i.e. across the last TWO steps —
-    its decision replays its step-(it−2) decision, which was "stay"
-    (had it moved, its own community would be in the changed set). So
-    only vertices in or adjacent to a community that gained/lost a
-    member during the last two steps need re-scoring; the rest keep
-    their assignment with zero work. The bookkeeping (a changed-set job
-    per step) is armed only while it can pay: the adjacency is large
-    (> ``_PRUNE_MIN_E`` rows) and the move rate has dropped below 10% —
-    on small levels or hot early steps the step runs unpruned, which is
-    the same exact computation."""
+    Every inner step scores every vertex: at sf0.1, 47–77% of vertices
+    move per step, so pruning the scan to a changed frontier does not
+    pay (it measured +25%; PLANS.md "Louvain inner step")."""
     k = adj.groupBy(F.col("i").alias("id")).agg(F.sum("w").alias("k")).persist()
     comm, (n_vertices,) = barrier(
         None, k.select("id", F.col("id").alias("c"), "k")
     )
-    small = n_vertices <= _BCAST_V
-    bc = F.broadcast if small else (lambda df: df)
-    n_edge_rows = adj.count()  # cached by the caller — a cache scan
-    prune_capable = n_edge_rows > _PRUNE_MIN_E
+    bc = F.broadcast if n_vertices <= _BCAST_V else (lambda df: df)
     zero_streak = 0
-    changed_hist: list[DataFrame | None] = [None, None]  # steps it-1, it-2
     for it in range(max_inner):
         ktot = comm.groupBy("c").agg(F.sum("k").alias("tot"))
         cj = comm.select(F.col("id").alias("j"), F.col("c").alias("c_j"))
-        cand_ids = None
-        c1, c2 = changed_hist
-        if c1 is not None and c2 is not None:
-            changed2 = c1.unionAll(c2).distinct()
-            members, (n_members,) = barrier(
-                None,
-                comm.join(
-                    F.broadcast(changed2.withColumnRenamed("cc", "c")), "c", "semi"
-                ).select("id"),
-            )
-            if n_members == 0:
-                # nobody's inputs changed for two consecutive steps —
-                # both parities replay "stay"; the level is converged
-                release(members)
-                break
-            if n_members <= max(100_000, n_vertices // 3):
-                nbrs = (
-                    adj.join(
-                        F.broadcast(members.withColumnRenamed("id", "j")), "j", "semi"
-                    )
-                    .select(F.col("i").alias("id"))
-                    .distinct()
-                )
-                cand_ids, (n_cand,) = barrier(
-                    None, members.unionAll(nbrs).distinct()
-                )
-                if n_cand > max(100_000, n_vertices // 2):
-                    release(cand_ids)
-                    cand_ids = None
-            release(members)
-        adj_f = (
-            adj
-            if cand_ids is None
-            else adj.join(
-                F.broadcast(cand_ids.withColumnRenamed("id", "i")), "i", "semi"
-            )
-        )
         # weight from i into each neighboring community (self excluded)
         k_in = (
-            adj_f.where(F.col("i") != F.col("j"))
+            adj.where(F.col("i") != F.col("j"))
             .join(cj, "j")
             .groupBy("i", "c_j")
             .agg(F.sum("w").alias("k_in"))
         )
         cur = comm.select(F.col("id").alias("i"), F.col("c").alias("c_i"), "k")
-        if cand_ids is not None:
-            cur = cur.join(
-                F.broadcast(cand_ids.withColumnRenamed("id", "i")), "i", "semi"
-            )
         # Candidate scores in ONE pass over the (i, neighbor-community)
         # frame: attach c_i/k (join on i) and tot (ktot rides a broadcast
         # while small — no E-side shuffle), score every row with the
@@ -216,9 +154,9 @@ def _move_phase(
         moved = best.where(mv_cond).select(
             "id", F.col("best_c").alias("c_new"), F.lit(1).alias("mv_new")
         )
-        # left join: vertices without a `moved` row — pruned, or with no
-        # strictly-better admissible target — keep their community. One
-        # action materializes the new state AND reads off the move count.
+        # left join: vertices without a `moved` row — no strictly-better
+        # admissible target — keep their community. One action
+        # materializes the new state AND reads off the move count.
         comm, row = barrier(
             comm,
             comm.select("id", "k", F.col("c").alias("c_prev"))
@@ -228,29 +166,10 @@ def _move_phase(
                 "k",
                 F.coalesce("c_new", F.col("c_prev")).alias("c"),
                 F.coalesce("mv_new", F.lit(0)).alias("mv"),
-                "c_prev",
             ),
             F.sum("mv"),
         )
         n_moves = row[0] or 0
-        # track the touched-community frontier only while pruning can
-        # engage (big adjacency, cooled-down move rate) — otherwise the
-        # changed-set job is pure per-step overhead
-        if prune_capable and n_moves < n_vertices * 0.10:
-            changed_t: DataFrame | None = barrier(
-                None,
-                comm.where(F.col("mv") == 1)
-                .select(F.explode(F.array("c_prev", "c")).alias("cc"))
-                .distinct(),
-            )[0]
-        else:
-            changed_t = None
-        dropped = changed_hist[1]
-        changed_hist = [changed_t, changed_hist[0]]
-        if dropped is not None:
-            release(dropped)
-        if cand_ids is not None:
-            release(cand_ids)
         # A round admits only one move direction (down on even it, up on
         # odd), so a single zero-move round may just mean every improving
         # move pointed the blocked way — converged only after BOTH
@@ -259,9 +178,6 @@ def _move_phase(
         if zero_streak >= 2:
             break
     k.unpersist()
-    for ch in changed_hist:
-        if ch is not None:
-            release(ch)
     # materialized 2-col result; the internal move state is released —
     # the caller owns (and releases) the returned frame
     return barrier(comm, comm.select("id", "c"))[0]

@@ -268,12 +268,8 @@ class PageRankWeightedProgram(PageRankClassicProgram):
     (pagerank.go:144-155). The out-degree stays a plain edge COUNT (not
     a weight sum) and the dangling term keeps the unweighted
     ``damping/N · danglingSum`` shape (pagerank.go:96,158), exactly as
-    the reference computes it.
-
-    The weighted pass joins the raw edge table (which carries the
-    weight column) rather than the CSR/salted adjacency — those packed
-    forms drop edge properties by construction. Physical shape is the
-    same SHUFFLE_HASH state⋈edges + map-side-combined groupBy(dst)."""
+    the reference computes it. The message pass joins the edge table
+    itself, so the weight column is in scope."""
 
     name = "page_rank_weighted"
 
@@ -289,7 +285,7 @@ class PageRankWeightedProgram(PageRankClassicProgram):
     def messages(self, state: DataFrame, graph: Graph, ctx: SuperstepContext) -> DataFrame:
         return message_pass(
             state,
-            graph.edges,  # plain-edge path: keeps the weight column in scope
+            graph,
             msg_col=F.col("rank") / F.col("out_deg") * F.col(self.weight_col),
             frontier_filter=F.col("out_deg") > 0,
         )

@@ -24,6 +24,7 @@ from incubator_hugegraph_computer_spark.plans.bsp import (
     BspEngine,
     BspProgram,
     SuperstepContext,
+    message_pass,
 )
 
 
@@ -42,21 +43,14 @@ class SsspProgram(BspProgram):
         )
 
     def messages(self, state: DataFrame, graph: Graph, ctx: SuperstepContext) -> DataFrame:
-        if self.weight_col is None:
-            from incubator_hugegraph_computer_spark.plans.bsp import message_pass
-
-            return message_pass(
-                state, graph, msg_col=F.col("dist") + 1.0, frontier_filter=F.col("active")
-            )
-        # weighted: the message needs the per-edge weight column, so the
-        # pass must stream edges (no CSR); hash-join hinted, state builds.
-        w = F.coalesce(F.col(self.weight_col).cast("double"), F.lit(1.0))
-        return (
-            state.where(F.col("active"))
-            .select(F.col("id").alias("src"), "dist")
-            .hint("shuffle_hash")
-            .join(graph.edges, "src")
-            .select("dst", (F.col("dist") + w).alias("msg"))
+        # the pass joins the edge table itself, so a weight column is in scope
+        w = (
+            F.lit(1.0)
+            if self.weight_col is None
+            else F.coalesce(F.col(self.weight_col).cast("double"), F.lit(1.0))
+        )
+        return message_pass(
+            state, graph, msg_col=F.col("dist") + w, frontier_filter=F.col("active")
         )
 
     def combine(self, messages: DataFrame) -> DataFrame:

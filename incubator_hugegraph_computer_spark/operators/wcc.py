@@ -59,42 +59,6 @@ class WccProgram(BspProgram):
             (new_comp < F.col("comp")).alias("active"),
         )
 
-class WccShortcutProgram(WccProgram):
-    """Min-propagation fused with pointer jumping (path halving).
-
-    Plain min-label WCC needs O(diameter) supersteps; on large-diameter
-    graphs the fixed per-superstep driver cost (plan + schedule + one
-    barrier action) becomes the serial Amdahl term that caps scaling
-    efficiency. Each round here additionally shortcuts comp(v) :=
-    comp(comp(v)) — a V-row self-join on the label table — so labels
-    traverse 2^k-length paths after k rounds and the loop converges in
-    O(log diameter) rounds (the hash-to-min / star-contraction family:
-    Kiveris et al., "Connected Components in MapReduce and Beyond").
-    Output is identical to ``WccProgram``: comp = min member id.
-    """
-
-    name = "wcc_shortcut"
-
-    def update(self, state: DataFrame, inbox: DataFrame, ctx: SuperstepContext) -> DataFrame:
-        merged = state.join(inbox, "id", "left").select(
-            "id",
-            F.least(F.col("comp"), F.coalesce(F.col("msg"), F.col("comp"))).alias("comp"),
-            F.col("comp").alias("_old"),
-        )
-        # comp values are vertex ids, so the label table joins to itself:
-        # one extra V-row shuffle per round buys exponential propagation.
-        parents = merged.select(F.col("id").alias("_pid"), F.col("comp").alias("_pcomp"))
-        new_comp = F.least(F.col("comp"), F.coalesce(F.col("_pcomp"), F.col("comp")))
-        return (
-            merged.hint("shuffle_hash")
-            .join(parents, merged["comp"] == parents["_pid"], "left")
-            .select(
-                "id",
-                new_comp.alias("comp"),
-                (new_comp < F.col("_old")).alias("active"),
-            )
-        )
-
 
 class WccStrideProgram(WccProgram):
     """Min-propagation with ``stride`` passes unrolled per superstep.
@@ -106,11 +70,10 @@ class WccStrideProgram(WccProgram):
     collect) is the Amdahl term that caps N→4N scaling efficiency on
     converged WCC, so dividing the barrier count by ``stride`` raises
     scaling efficiency without touching per-hop semantics: output is
-    identical to the reference's min-label loop. Unlike pointer jumping
-    (``WccShortcutProgram``) it adds no join keyed on the label value —
-    labels collapse to few distinct values as components merge, which
-    makes a label-keyed shuffle pathologically skewed; here every join
-    stays keyed on vertex id (uniform)."""
+    identical to the reference's min-label loop. It adds no join keyed
+    on the label value — labels collapse to few distinct values as
+    components merge, which makes a label-keyed shuffle pathologically
+    skewed; here every join stays keyed on vertex id (uniform)."""
 
     def __init__(self, graph: Graph, stride: int = 2):
         self.graph = graph
@@ -158,36 +121,30 @@ def wcc(
     ``presymmetrized=True`` skips the one-time symmetrization shuffle —
     pass it when the caller's edge table is already the undirected
     distinct set (e.g. built once at ingest and reused across
-    algorithms, optionally CSR-packed).
+    algorithms).
 
     ``method`` selects the physical strategy (identical output in all
-    four): ``"propagate"`` (default) is the reference-shaped min-label
+    three): ``"propagate"`` (default) is the reference-shaped min-label
     loop, one hop per barrier; ``"stride"`` unrolls ``stride`` hops per
     barrier (the scale path — same work, 1/stride the serial barrier
-    cost); ``"shortcut"`` is pointer jumping — measured on this repo's
-    long-chain graphs it barely helps (min-label pointers are shallow
-    stars, so comp(comp(v)) ≈ comp(v); 67 vs 98 rounds on the sf0.1
-    percolation edge graph) and is kept only for parity; ``"contract"``
-    is the alternating large-star/small-star edge contraction (Kiveris
-    et al., SoCC'14) — O(log n) rounds regardless of diameter (8 rounds
-    where propagate needs 98 on the same graph), the right choice for
-    high-diameter / chain-heavy graphs."""
+    cost); ``"contract"`` is the alternating large-star/small-star edge
+    contraction (Kiveris et al., SoCC'14) — O(log n) rounds regardless
+    of diameter (8 rounds where propagate needs 98 on the sf0.1
+    percolation edge graph), the right choice for high-diameter /
+    chain-heavy graphs."""
     resume = engine_kwargs.pop("resume", False)
     method = engine_kwargs.pop("method", "propagate")
     stride = engine_kwargs.pop("stride", 4)
-    if method not in ("propagate", "stride", "shortcut", "contract"):
+    if method not in ("propagate", "stride", "contract"):
         raise ValueError(
-            "wcc method must be 'propagate', 'stride', 'shortcut' or "
-            f"'contract', got {method!r}"
+            f"wcc method must be 'propagate', 'stride' or 'contract', got {method!r}"
         )
     if method == "contract":
         engine_kwargs.pop("count_messages", None)
         return wcc_contract(graph, max_rounds=max_supersteps)
     g = graph if presymmetrized else graph.symmetrized().cache()
     engine = BspEngine(g, max_supersteps=max_supersteps, **engine_kwargs)
-    if method == "shortcut":
-        program = WccShortcutProgram()
-    elif method == "stride":
+    if method == "stride":
         program = WccStrideProgram(g, stride=stride)
     else:
         program = WccProgram()

@@ -81,7 +81,7 @@ class SuperstepContext:
     stats: list[dict[str, Any]] = field(default_factory=list)
 
 
-def shuffle_bytes_since(spark, after_stage_id: int = -1) -> tuple[int, int, int]:
+def shuffle_bytes_since(spark, after_stage_id: int = -1) -> tuple[int, int, int | None]:
     """(shuffle_read_bytes, shuffle_write_bytes, max_stage_id) summed
     over stages with ``stageId > after_stage_id``, from the live
     AppStatusStore. The BSP driver watermarks the latest stage id at
@@ -91,8 +91,8 @@ def shuffle_bytes_since(spark, after_stage_id: int = -1) -> tuple[int, int, int]
     stages (not diffing two cumulative totals) stays correct when the
     status store evicts old stages (spark.ui.retainedStages), which
     would make a cumulative diff go negative in long sessions. Returns
-    (-1, -1, after_stage_id) if the py4j surface is unavailable (e.g.
-    Spark Connect)."""
+    (-1, -1, None) if the py4j surface is unavailable (e.g. Spark
+    Connect); the engine then skips that superstep's counters."""
     try:
         jvm = spark._jvm
         store = spark._jsparkSession.sparkContext().statusStore()
@@ -202,8 +202,6 @@ class BspEngine:
         count_messages: bool | None = None,
         track_shuffle: bool | None = None,
         checkpoint_messages: bool = False,
-        checkpoint_table: str | None = None,
-        checkpoint_provider: str = "parquet",
     ):
         self.graph = graph
         self.max_supersteps = max_supersteps
@@ -223,18 +221,8 @@ class BspEngine:
         # half). True counts every superstep; False never does, and the
         # run then halts on the active count alone.
         self.count_messages = count_messages
-        # checkpoint_table switches the state backend to a catalog table
-        # (Iceberg when such a catalog is configured; see
-        # plans/checkpoint.py) — markers/metrics still live under
-        # checkpoint_dir, so the dir is required either way.
         self.ckpt = (
-            CheckpointManager(
-                checkpoint_dir,
-                run_id or uuid.uuid4().hex,
-                checkpoint_every,
-                state_table=checkpoint_table,
-                table_provider=checkpoint_provider,
-            )
+            CheckpointManager(checkpoint_dir, run_id or uuid.uuid4().hex, checkpoint_every)
             if checkpoint_dir
             else None
         )
@@ -342,52 +330,30 @@ class BspEngine:
 
 def message_pass(
     state: DataFrame,
-    graph_or_edges,
+    graph: Graph,
     msg_col,
     frontier_filter=None,
 ) -> DataFrame:
     """``sendMessageToAllEdges`` (ComputationContext.java:44-54) as the
     canonical join-aggregate pass: join vertex state to its out-edges on
     ``src`` (co-partitioned), emit (dst, msg). ``msg_col`` is a Column
-    over the source-side state row. ``frontier_filter`` prunes inactive
-    vertices *before* the join — the reference's inactive-vertex
-    skipping (``FileGraphPartition.java:213-222``).
+    over the source-side state row and the edge row (so it may read an
+    edge weight). ``frontier_filter`` prunes inactive vertices *before*
+    the join — the reference's inactive-vertex skipping
+    (``FileGraphPartition.java:213-222``).
 
     Physical shape (deliberate, verified via .explain):
     - the join is hinted SHUFFLE_HASH with the state as build side — a
       sort-merge join would re-sort the E-row edge side every superstep
-    - when the graph carries a cached CSR (``Graph.with_csr()``), the
-      pass joins V-row state to V-row adjacency and fans out via a
-      codegen'd explode — the E-row stream never enters a join
     - the downstream groupBy(dst) partial-aggregates map-side, so
       shuffle volume is bounded by distinct targets per partition, not E
+
+    This is the only message path: it runs over the plain hash
+    partition of ``Graph.edges`` with no skew handling beyond AQE, like
+    the reference (``HashPartitioner.java:41-44``). CSR-packed and
+    hub-salted passes measured no faster on R-MAT graphs (BENCH.md
+    round 4).
     """
     src_state = state if frontier_filter is None else state.where(frontier_filter)
-    src_state = src_state.withColumnRenamed("id", "src")
-    salted = getattr(graph_or_edges, "salted_df", None)
-    if salted is not None:
-        g: Graph = graph_or_edges
-        # replicate ONLY hub state rows across the salt domain; everyone
-        # else keeps salt 0 — then join on (src, salt), co-partitioned
-        # with the salted adjacency.
-        is_hub = F.broadcast(g.hubs_df.select(F.col("id").alias("src"), F.lit(True).alias("_hub")))
-        salts = F.when(
-            F.col("_hub"), F.sequence(F.lit(0), F.lit(g.salt_factor - 1))
-        ).otherwise(F.array(F.lit(0)))
-        replicated = (
-            src_state.join(is_hub, "src", "left")
-            .withColumn("salt", F.explode(salts))
-            .drop("_hub")
-            .hint("shuffle_hash")
-        )
-        return replicated.join(salted, ["src", "salt"]).select(
-            F.col("dst"), msg_col.alias("msg")
-        )
-    src_state = src_state.hint("shuffle_hash")
-    csr = getattr(graph_or_edges, "csr_df", None)
-    edges = graph_or_edges.edges if isinstance(graph_or_edges, Graph) else graph_or_edges
-    if csr is not None:
-        return src_state.join(csr, "src").select(
-            F.explode("neighbors").alias("dst"), msg_col.alias("msg")
-        )
-    return src_state.join(edges, "src").select(F.col("dst"), msg_col.alias("msg"))
+    src_state = src_state.withColumnRenamed("id", "src").hint("shuffle_hash")
+    return src_state.join(graph.edges, "src").select(F.col("dst"), msg_col.alias("msg"))

@@ -4,28 +4,16 @@ Mirrors the reference's snapshot semantics
 (``computer-core/.../snapshot/SnapshotManager.java:54-246``: per-partition
 vertex/edge/message snapshots to object storage) and its per-superstep
 status/value files (``FileGraphPartition.java:286-313``): a superstep is
-durable iff its state table, aggregator values and metrics row are all
+durable iff its state files, aggregator values and metrics row are all
 committed.
 
-Two state backends, same commit protocol:
+State is parquet with directory partitioning — the reference
+likewise snapshots to files (SnapshotManager):
 
-- **directory** (default): parquet with directory partitioning —
-
-      <root>/<run_id>/superstep=<k>/state/*.parquet (+ partition lineage col)
-      <root>/<run_id>/superstep=<k>/aggs.json        (aggregators, atomic rename)
-      <root>/<run_id>/metrics.jsonl                  (one row per superstep)
-
-- **table** (``state_table=``): state rows land in a catalog table
-  partitioned by ``(run_id, superstep)`` through the DataFrameWriterV2
-  API (``df.writeTo(t).using(provider)`` / ``overwritePartitions()``) —
-  the v2 write path is catalog-agnostic, so with an Iceberg catalog
-  configured (``spark.sql.catalog.<name>`` + the Iceberg runtime jar,
-  which this sandbox does not ship) the SAME code commits Iceberg
-  snapshots; with the session catalog it is a managed parquet table.
-  Message snapshots go to ``<state_table>_messages``. Markers and
-  metrics stay sidecar files under <root> in both backends — the commit
-  point must cover state + aggregators + metrics together, which no
-  single table commit can.
+    <root>/<run_id>/superstep=<k>/state/*.parquet    (+ partition lineage col)
+    <root>/<run_id>/superstep=<k>/messages/*.parquet (optional inbox snapshot)
+    <root>/<run_id>/superstep=<k>/aggs.json          (aggregators, atomic rename)
+    <root>/<run_id>/metrics.jsonl                    (one row per superstep)
 
 ``aggs.json`` is written last and atomically — its presence marks the
 superstep complete (the commit point), so a kill mid-write never yields
@@ -57,16 +45,12 @@ class CheckpointManager:
         run_id: str,
         every: int = 1,
         spark: SparkSession | None = None,
-        state_table: str | None = None,
-        table_provider: str = "parquet",
     ):
         self.root = root
         self.run_id = run_id
         self.every = max(1, every)
         self.run_dir = fsutil.join(root, run_id)
         self._spark = spark
-        self.state_table = state_table
-        self.table_provider = table_provider
 
     def _sp(self) -> SparkSession:
         if self._spark is None:
@@ -106,55 +90,49 @@ class CheckpointManager:
         fs, step_p = self._fs(step_dir)
         if fs.exists(step_p):
             fs.delete(step_p, True)  # re-running a step overwrites a partial attempt
-        if self.state_table is not None:
-            self._write_table(state, self.state_table, superstep)
-            if messages is not None:
-                self._write_table(messages, f"{self.state_table}_messages", superstep)
-            partition_lineage, bytes_written = self._table_lineage(superstep)
-        else:
+        (
+            state.withColumn("partition_id", F.spark_partition_id())
+            .write.mode("overwrite")
+            .parquet(state_dir)
+        )
+        if messages is not None:
+            # the combined inbox this superstep's update consumed —
+            # SnapshotManager also snapshots message files per
+            # partition; replaying step k = load(k-1).state + these
             (
-                state.withColumn("partition_id", F.spark_partition_id())
+                messages.withColumn("partition_id", F.spark_partition_id())
                 .write.mode("overwrite")
-                .parquet(state_dir)
+                .parquet(fsutil.join(step_dir, "messages"))
             )
-            if messages is not None:
-                # the combined inbox this superstep's update consumed —
-                # SnapshotManager also snapshots message files per
-                # partition; replaying step k = load(k-1).state + these
-                (
-                    messages.withColumn("partition_id", F.spark_partition_id())
-                    .write.mode("overwrite")
-                    .parquet(fsutil.join(step_dir, "messages"))
-                )
-            # Per-partition lineage from the written files (driver-side FS
-            # listing, no extra Spark job): one part-file per write task, so
-            # each checkpoint records which partition wrote how many state
-            # rows / bytes — SnapshotManager's per-partition snapshot
-            # manifest. Row counts come from the parquet footer when the
-            # file is locally readable; on remote filesystems the byte sizes
-            # (from FileStatus) are always exact and rows are -1.
-            partition_lineage = []
-            bytes_written = 0
-            sfs, state_p = self._fs(state_dir)
-            files = []
-            it = sfs.listFiles(state_p, True)
-            while it.hasNext():
-                files.append(it.next())
-            for st in sorted(files, key=lambda s: s.getPath().getName()):
-                name = st.getPath().getName()
-                size = st.getLen()
-                bytes_written += size
-                if name.endswith(".parquet"):
-                    n_rows = -1
-                    uri = st.getPath().toUri()
-                    if uri.getScheme() in (None, "file"):
-                        try:
-                            import pyarrow.parquet as pq
+        # Per-partition lineage from the written files (driver-side FS
+        # listing, no extra Spark job): one part-file per write task, so
+        # each checkpoint records which partition wrote how many state
+        # rows / bytes — SnapshotManager's per-partition snapshot
+        # manifest. Row counts come from the parquet footer when the
+        # file is locally readable; on remote filesystems the byte sizes
+        # (from FileStatus) are always exact and rows are -1.
+        partition_lineage = []
+        bytes_written = 0
+        sfs, state_p = self._fs(state_dir)
+        files = []
+        it = sfs.listFiles(state_p, True)
+        while it.hasNext():
+            files.append(it.next())
+        for st in sorted(files, key=lambda s: s.getPath().getName()):
+            name = st.getPath().getName()
+            size = st.getLen()
+            bytes_written += size
+            if name.endswith(".parquet"):
+                n_rows = -1
+                uri = st.getPath().toUri()
+                if uri.getScheme() in (None, "file"):
+                    try:
+                        import pyarrow.parquet as pq
 
-                            n_rows = pq.ParquetFile(uri.getPath()).metadata.num_rows
-                        except Exception:
-                            n_rows = -1
-                    partition_lineage.append({"file": name, "rows": n_rows, "bytes": size})
+                        n_rows = pq.ParquetFile(uri.getPath()).metadata.num_rows
+                    except Exception:
+                        n_rows = -1
+                partition_lineage.append({"file": name, "rows": n_rows, "bytes": size})
         if metrics is not None:
             row = {
                 "run_id": self.run_id,
@@ -193,81 +171,7 @@ class CheckpointManager:
             afs.delete(dst, False)
         _, tmp_p = self._fs(tmp)
         afs.rename(tmp_p, dst)
-        spark = state.sparkSession
-        if self.state_table is not None:
-            return self._read_table(spark, self.state_table, superstep)
-        return spark.read.parquet(state_dir).drop("partition_id")
-
-    # ------------------------------------------------- table backend
-    def _write_table(self, df: DataFrame, table: str, superstep: int) -> None:
-        """State rows → catalog table partitioned by (run_id, superstep)
-        via DataFrameWriterV2. ``overwritePartitions`` replaces exactly
-        the partitions present in the written frame — i.e. a re-run of
-        this (run_id, superstep) — atomically in catalogs with atomic
-        partition overwrite (Iceberg: one snapshot commit)."""
-        full = (
-            df.withColumn("partition_id", F.spark_partition_id())
-            .withColumn("run_id", F.lit(self.run_id))
-            .withColumn("superstep", F.lit(superstep))
-        )
-        if not self._sp().catalog.tableExists(table):
-            (
-                full.writeTo(table)
-                .using(self.table_provider)
-                .partitionedBy(F.col("run_id"), F.col("superstep"))
-                .create()
-            )
-            return
-        try:
-            full.writeTo(table).overwritePartitions()
-        except Exception as e:  # noqa: BLE001 — see the v1 gate below
-            # the V2SessionCatalog CREATEs fine but registers a v1 table
-            # it cannot WRITE through the v2 API; same dynamic partition
-            # overwrite via the v1 writer (positional, so realign to the
-            # table's column order first). A real v2 catalog (Iceberg)
-            # never takes this branch.
-            if "v1 table" not in str(e):
-                raise
-            cols = self._sp().table(table).columns
-            # the state being saved may itself read from this table (a
-            # resumed run: save() returns table reads); v1 rejects
-            # overwrite-while-reading at table level, so cut the table
-            # out of the lineage first. Iceberg's snapshot isolation
-            # makes this a non-issue on the v2 path above.
-            (
-                full.select(*cols)
-                .localCheckpoint(eager=True)
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .insertInto(table)
-            )
-
-    def _read_table(self, spark: SparkSession, table: str, superstep: int) -> DataFrame:
-        return (
-            spark.table(table)
-            .where((F.col("run_id") == self.run_id) & (F.col("superstep") == superstep))
-            .drop("partition_id", "run_id", "superstep")
-        )
-
-    def _table_lineage(self, superstep: int) -> tuple[list[dict[str, Any]], int]:
-        """Rows per writing partition from the table itself (one small
-        Spark job — the table backend has no one-file-per-task listing
-        to read footers from). Byte sizes come from the provider's
-        manifest/files metadata when it exposes one; the session-catalog
-        parquet provider does not, so bytes are reported as -1 there."""
-        rows = (
-            self._sp()
-            .table(self.state_table)
-            .where((F.col("run_id") == self.run_id) & (F.col("superstep") == superstep))
-            .groupBy("partition_id")  # the WRITER's partition, stamped at save
-            .count()
-            .collect()
-        )
-        lineage = [
-            {"partition": int(r["partition_id"]), "rows": int(r["count"]), "bytes": -1}
-            for r in sorted(rows, key=lambda r: r["partition_id"])
-        ]
-        return lineage, -1
+        return state.sparkSession.read.parquet(state_dir).drop("partition_id")
 
     # ------------------------------------------------------------- read
     def latest_complete(self) -> int | None:
@@ -288,12 +192,6 @@ class CheckpointManager:
     def load_messages(self, spark: SparkSession, superstep: int) -> DataFrame | None:
         """The combined inbox consumed by ``superstep``'s update, if it
         was checkpointed (engine ``checkpoint_messages=True``)."""
-        if self.state_table is not None:
-            table = f"{self.state_table}_messages"
-            if not spark.catalog.tableExists(table):
-                return None
-            msgs = self._read_table(spark, table, superstep)
-            return msgs if not msgs.isEmpty() else None
         path = fsutil.join(self._step_dir(superstep), "messages")
         fs, p = self._fs(path)
         if not fs.exists(p):
@@ -304,8 +202,6 @@ class CheckpointManager:
         aggs = json.loads(fsutil.read_text(spark, self._aggs_path(superstep)))[
             "aggregators"
         ]
-        if self.state_table is not None:
-            return self._read_table(spark, self.state_table, superstep), aggs
         state = spark.read.parquet(fsutil.join(self._step_dir(superstep), "state")).drop(
             "partition_id"
         )

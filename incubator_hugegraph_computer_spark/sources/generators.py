@@ -74,8 +74,8 @@ def rmat_degree_profile(
 ) -> DataFrame:
     """(out_degree, n_vertices) — the out-degree histogram of the
     generated R-MAT graph: the power-law skew fingerprint that
-    validates the generator (and exercises exactly the hub
-    distribution the engine's salting/AQE paths exist for)."""
+    validates the generator (and shows the hub distribution that
+    AQE's skew-join splitting sees)."""
     e = rmat_edges(spark, n_edges, levels=levels, seed=seed)
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("out_degree"))
     return (

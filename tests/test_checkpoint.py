@@ -16,41 +16,17 @@ def _rank_dict(df):
     return {r["id"]: round(r["rank"], 12) for r in df.collect()}
 
 
-# Both state backends share the marker commit protocol: "dir" is
-# parquet-with-directory-partitioning; "table" goes through the
-# DataFrameWriterV2 catalog path (Iceberg when such a catalog is
-# configured — the session catalog's parquet tables in this sandbox).
-@pytest.mark.parametrize("backend", ["dir", "table"])
+# State checkpoints have one backend, parquet with directory
+# partitioning; the id keeps the name test histories know it by.
+@pytest.mark.parametrize("backend", ["dir"])
 def test_pagerank_resume_equivalence(spark, tmp_path, backend):
-    import uuid
-
-    # unique per run: the in-memory catalog forgets tables between
-    # sessions but their managed locations persist in spark-warehouse
-    table_kw = (
-        {"checkpoint_table": f"ckpt_state_{uuid.uuid4().hex[:10]}"}
-        if backend == "table"
-        else {}
-    )
     g = make_graph(spark, PRWCC_EDGES, PRWCC_VERTEX_IDS)
     full = _rank_dict(
         pagerank(g, checkpoint_dir=str(tmp_path / "full"), run_id="full", max_supersteps=8)
     )
     # interrupted run: budget of 3 supersteps, then resume to completion
-    pagerank(
-        g, checkpoint_dir=str(tmp_path / "resumed"), run_id="r1", max_supersteps=3, **table_kw
-    )
-    ck = CheckpointManager(
-        str(tmp_path / "resumed"), "r1", state_table=table_kw.get("checkpoint_table")
-    )
-    assert ck.latest_complete() == 3
-    if backend == "table":
-        # the table really holds the state, partitioned by (run_id, step)
-        tbl = spark.table(table_kw["checkpoint_table"])
-        assert {"run_id", "superstep", "partition_id"} <= set(tbl.columns)
-        assert tbl.where("run_id = 'r1' AND superstep = 3").count() == len(PRWCC_VERTEX_IDS)
-        # lineage rows came from the table path (rows exact, bytes n/a)
-        lineage = ck.metrics()[-1]["partitions"]
-        assert sum(p["rows"] for p in lineage) == len(PRWCC_VERTEX_IDS)
+    pagerank(g, checkpoint_dir=str(tmp_path / "resumed"), run_id="r1", max_supersteps=3)
+    assert CheckpointManager(str(tmp_path / "resumed"), "r1").latest_complete() == 3
     resumed = _rank_dict(
         pagerank(
             g,
@@ -58,10 +34,33 @@ def test_pagerank_resume_equivalence(spark, tmp_path, backend):
             run_id="r1",
             max_supersteps=8,
             resume=True,
-            **table_kw,
         )
     )
     assert resumed == full
+
+
+@pytest.mark.parametrize("removed", ["wcc_shortcut", "checkpoint_table", "job_flags"])
+def test_removed_options_fail_loudly(spark, tmp_path, removed):
+    """Retired physical methods and the table checkpoint backend are
+    rejected, not silently ignored or swallowed by ``**engine_kwargs``."""
+    if removed == "wcc_shortcut":
+        g = make_graph(spark, PRWCC_EDGES, PRWCC_VERTEX_IDS)
+        with pytest.raises(ValueError) as err:
+            wcc(g, method="shortcut")
+        for method in ("propagate", "stride", "contract"):
+            assert repr(method) in str(err.value)
+    elif removed == "checkpoint_table":
+        g = make_graph(spark, PRWCC_EDGES, PRWCC_VERTEX_IDS)
+        with pytest.raises(TypeError, match="checkpoint_table"):
+            pagerank(g, checkpoint_dir=str(tmp_path / "c"), checkpoint_table="t")
+    else:
+        from incubator_hugegraph_computer_spark.job import build_parser
+
+        base = ["--algorithm", "wcc", "--generate", "10", "--output", str(tmp_path / "o")]
+        build_parser().parse_args(base)  # the base command line is valid
+        for extra in (["--wcc-method", "shortcut"], ["--checkpoint-table", "t"]):
+            with pytest.raises(SystemExit):
+                build_parser().parse_args(base + extra)
 
 
 def test_wcc_resume_equivalence(spark, tmp_path):

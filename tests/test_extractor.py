@@ -150,7 +150,7 @@ def test_catalog_hash_ids_unique(spark, files):
 
 
 def test_graph_has_power_law_structure(spark, files):
-    """Sanity: hubs exist (salting has something to bite on) and some
+    """Sanity: hubs exist (power-law out-degrees) and some
     files are dangling."""
     _, edges = extract_edges(files, verify=False)
     outdeg = edges.groupBy("src").count()

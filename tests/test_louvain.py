@@ -63,18 +63,15 @@ def test_louvain_weighted_changes_partition(spark):
     assert got[0] != got[2]
 
 
-def test_louvain_frontier_pruning_exact(spark, monkeypatch):
-    """The exact frontier-pruning path only arms on levels with > 2M
-    adjacency rows, so gates never exercise it — force it on (and force
-    the broadcast fast path off, its production complement at scale) and
-    pin hash-identical assignments vs the unpruned schedule on a graph
-    whose move phase needs several cooling steps."""
+def test_louvain_shuffle_planned_matches_broadcast(spark, monkeypatch):
+    """With ``_BCAST_V = 0`` every V-row join of the move phase takes
+    Spark's shuffle planning, the path levels above the broadcast bound
+    run at scale. Its assignments must be hash-identical to the default
+    broadcast path on a graph whose move phase needs several steps."""
     import incubator_hugegraph_computer_spark.operators.louvain as L
     from incubator_hugegraph_computer_spark.graph import Graph
-    from pyspark.sql import functions as F
 
-    # two ring-of-cliques communities bridged sparsely: move counts cool
-    # over the inner steps, so late steps run with a small frontier
+    # a ring of six 5-cliques: move counts cool over the inner steps
     rows = []
     for c in range(6):  # 6 cliques of 5
         base = c * 5
@@ -85,9 +82,8 @@ def test_louvain_frontier_pruning_exact(spark, monkeypatch):
     edges = spark.createDataFrame(rows, "src long, dst long")
     g = Graph.from_edges(edges, num_partitions=4)
 
-    plain = {(r["id"], r["community"]) for r in L.louvain(g, max_levels=3, max_inner=6).collect()}
+    bcast = {(r["id"], r["community"]) for r in L.louvain(g, max_levels=3, max_inner=6).collect()}
 
-    monkeypatch.setattr(L, "_PRUNE_MIN_E", 0)
     monkeypatch.setattr(L, "_BCAST_V", 0)
-    pruned = {(r["id"], r["community"]) for r in L.louvain(g, max_levels=3, max_inner=6).collect()}
-    assert pruned == plain
+    shuffled = {(r["id"], r["community"]) for r in L.louvain(g, max_levels=3, max_inner=6).collect()}
+    assert shuffled == bcast

@@ -21,15 +21,6 @@ def fixture_graph(spark):
     return make_graph(spark, PRWCC_EDGES, PRWCC_VERTEX_IDS).cache()
 
 
-@pytest.fixture(scope="module")
-def classic10_bsp(fixture_graph):
-    """10 fixed pagerank_classic iterations on BspEngine's plain edge
-    join, shared by the CSR and salted message-pass comparisons."""
-    with pytest.MonkeyPatch.context() as mp:
-        mp.setattr(local, "LOCAL_EDGES", 0)
-        return _as_dict(pagerank_classic(fixture_graph, max_iterations=10, tol=0.0))
-
-
 def test_classic_matches_numpy_oracle(spark, fixture_graph):
     got = _as_dict(pagerank_classic(fixture_graph, max_iterations=100, tol=1e-12))
     ids = sorted(PRWCC_VERTEX_IDS)
@@ -93,43 +84,6 @@ def test_classic_bsp_matches_numpy_oracle(spark, fixture_graph, monkeypatch, gra
     index = {v: i for i, v in enumerate(ids)}
     want = pagerank_classic_oracle(len(ids), edges, index, tol=0.0, max_iter=10)
     assert max(abs(got[v] - want[index[v]]) for v in ids) <= 1e-12
-
-
-def test_salting_equivalence(spark, fixture_graph):
-    """Hub salting is a physical rewrite only — identical results."""
-    from pyspark.sql import functions as F
-
-    salted = fixture_graph.salted_edges(hub_threshold=3, salt_factor=4)
-    # a salted message pass must deliver the same (dst, count) multiset
-    plain = fixture_graph.edges.groupBy("dst").count()
-    via_salt = (
-        salted.groupBy("dst", "salt").count().groupBy("dst").agg(F.sum("count").alias("count"))
-    )
-    assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, via_salt.collect()))
-
-
-def test_csr_message_pass_equivalence(spark, fixture_graph, classic10_bsp, monkeypatch):
-    """CSR explode pass and edge-join pass produce identical ranks."""
-    from incubator_hugegraph_computer_spark.graph import Graph
-
-    monkeypatch.setattr(local, "LOCAL_EDGES", 0)  # BspEngine's message passes
-    g2 = Graph(fixture_graph.vertices, fixture_graph.edges, 4).cache().with_csr()
-    via_csr = _as_dict(pagerank_classic(g2, max_iterations=10, tol=0.0))
-    assert classic10_bsp == via_csr
-
-
-def test_salted_message_pass_equivalence(spark, fixture_graph, classic10_bsp, monkeypatch):
-    """Hub-salted pass (threshold low enough to salt the hub vertex 0)
-    yields identical PageRank results."""
-    from incubator_hugegraph_computer_spark.graph import Graph
-
-    monkeypatch.setattr(local, "LOCAL_EDGES", 0)  # BspEngine's message passes
-    g3 = Graph(fixture_graph.vertices, fixture_graph.edges, 4).cache().with_salting(
-        hub_threshold=3, salt_factor=4
-    )
-    assert g3.hubs_df.count() >= 1  # vertex 0 (out-degree 5) is a hub
-    via_salt = _as_dict(pagerank_classic(g3, max_iterations=10, tol=0.0))
-    assert classic10_bsp == via_salt
 
 
 def test_pagerank_warm_start(spark, fixture_graph):

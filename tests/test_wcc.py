@@ -70,33 +70,6 @@ def test_wcc_string_id_bytesid_order_parity(spark):
     }
 
 
-def test_wcc_shortcut_matches_propagate(spark):
-    """Pointer-jumping WCC must equal plain min-propagation everywhere."""
-    for edges, ids in [
-        (PRWCC_EDGES, PRWCC_VERTEX_IDS),
-        (random_graph(80, 120, seed=11), list(range(80))),
-        ([(i, i + 1) for i in range(40)], list(range(41))),  # 40-chain
-    ]:
-        g = make_graph(spark, edges, vertex_ids=ids)
-        a = {r["id"]: r["comp"] for r in wcc(g).collect()}
-        b = {r["id"]: r["comp"] for r in wcc(g, method="shortcut").collect()}
-        assert a == b
-
-
-def test_wcc_shortcut_log_rounds(spark):
-    """A 40-chain needs ~40 propagation supersteps but only O(log)
-    shortcut rounds."""
-    from incubator_hugegraph_computer_spark.operators.wcc import WccShortcutProgram
-    from incubator_hugegraph_computer_spark.plans.bsp import BspEngine
-
-    edges = [(i, i + 1) for i in range(40)]
-    g = make_graph(spark, edges, vertex_ids=list(range(41))).symmetrized().cache()
-    engine = BspEngine(g, max_supersteps=100, count_messages=False)
-    state, ctx = engine.run(WccShortcutProgram())
-    assert {r["comp"] for r in state.select("comp").distinct().collect()} == {0}
-    assert ctx.superstep <= 10  # log2(41) ≈ 5.4 plus convergence-detect rounds
-
-
 def test_wcc_contract_matches_propagate(spark):
     """Large-star/small-star contraction must equal min-propagation on
     every graph shape — including an id-PERMUTED chain, the adversarial
