@@ -74,6 +74,12 @@ class Graph:
             self._cached = True
         return self
 
+    @property
+    def is_cached(self) -> bool:
+        """Whether :meth:`cache` holds the frames (and so their counts
+        are paid once)."""
+        return self._cached
+
     def unpersist(self) -> None:
         if self._cached:
             self.edges.unpersist()

@@ -97,7 +97,8 @@ def build_parser() -> argparse.ArgumentParser:
                    "that converges may do up to stride-1 extra iterations). "
                    "stride always runs on Spark; superstep pagerank runs on "
                    "the driver when the graph fits plans/local.LOCAL_EDGES "
-                   "and no --checkpoint-dir is given")
+                   "and no --checkpoint-dir is given (scc runs there too on "
+                   "a graph that fits)")
     p.add_argument("--stride", type=int, default=None,
                    help="iterations fused per action for --method stride "
                    "(default: pagerank 2, lpa 4)")

@@ -296,13 +296,21 @@ def _run(
 ) -> DataFrame:
     """(id, rank) after at most ``max_supersteps`` of ``program``: on the
     driver when the graph fits and the run is not checkpointed (durable
-    state and resume belong to BspEngine), else on BspEngine."""
-    if engine_kwargs.get("checkpoint_dir") is None and local.fits(graph.cache()):
-        return local.pagerank(graph, program, max_supersteps)[0]
-    resume = engine_kwargs.pop("resume", False)
-    engine = BspEngine(graph, max_supersteps=max_supersteps, **engine_kwargs)
-    state, _ = engine.run(program, resume=resume)
-    return state.select("id", "rank")
+    state and resume belong to BspEngine), else on BspEngine. Both cache
+    ``graph``; a graph the caller had not cached is released once the
+    answer is built (the driver's frame, or BspEngine's stored state)
+    or the run raises."""
+    cached = graph.is_cached
+    try:
+        if engine_kwargs.get("checkpoint_dir") is None and local.fits(graph.cache()):
+            return local.pagerank(graph, program, max_supersteps)[0]
+        resume = engine_kwargs.pop("resume", False)
+        engine = BspEngine(graph, max_supersteps=max_supersteps, **engine_kwargs)
+        state, _ = engine.run(program, resume=resume)
+        return state.select("id", "rank")
+    finally:
+        if not cached:
+            graph.unpersist()
 
 
 def pagerank(

@@ -32,15 +32,21 @@ OOM the driver near round 60 (PLANS.md "Lineage discipline"). The
 answer is stored once at the end and every round's frame is released,
 so a call leaves only its output stored.
 
-Regime split: each edge barrier's row is the live edge count, and the
-live vertex count is in hand too. Once both are at or below
-``plans/local.LOCAL_EDGES`` the loop stops and labels the live
-vertices and edges on the driver (numpy CSR + iterative Tarjan, min
-member id), since every Spark round left would be fixed cost; the
-labels join the answer's final barrier, or are the answer when no
-Spark round assigned anything. The constant comes from the
-measured Spark-vs-driver crossover (PLANS.md "Driver-finished tails").
-Above it this Spark loop runs unchanged: it is the scale path.
+Regime split: a cached graph that fits ``plans/local.LOCAL_EDGES``
+(``plans/local.fits``, which reads the counts the cached graph keeps)
+is labelled on the driver at entry (numpy CSR + iterative Tarjan, min
+member id), before any barrier. An uncached graph, such as one a
+caller derived, keeps the in-loop switch: a test at entry would
+compute it once per count and once per pull, where the first barriers
+store and count it once. From there each edge barrier's row is the
+live edge count, and the live vertex count is in hand too. Once both
+are at or below ``plans/local.LOCAL_EDGES`` the loop stops and labels the live
+vertices and edges on the driver, since every Spark round left would
+be fixed cost; the labels join the answer's final barrier, or are the
+answer when no Spark round assigned anything. The constant is a driver
+budget below the measured Spark-vs-driver crossover (PLANS.md
+"Driver-finished tails"). Above it this Spark loop runs unchanged: it
+is the scale path.
 """
 
 from __future__ import annotations
@@ -144,6 +150,8 @@ def _backward_sweep(
 def scc(graph: Graph, max_outer: int = 50, stride: int = 4) -> DataFrame:
     """(id, scc) with scc = min member id of the strongly connected
     component."""
+    if graph.is_cached and local.fits(graph):
+        return local.scc_labels(graph.vertices, graph.edges)
     spark = graph.spark
     assigned_parts: list[DataFrame] = []
     verts, (n_verts,) = barrier(None, graph.vertices.select("id"))

@@ -99,11 +99,19 @@ def spam_mass(
     High spam mass + high rank = spam candidate."""
     from incubator_hugegraph_computer_spark.operators.pagerank import pagerank_classic
 
-    pr = pagerank_classic(graph, max_iterations=max_iterations, tol=0.0, **engine_kwargs)
-    tr = trustrank(
-        graph, trusted_seeds, damping=damping, max_iterations=max_iterations,
-        tol=0.0, **engine_kwargs,
-    )
+    # both runs read the graph: cache it once around them, and release
+    # it after if the caller had not cached it
+    cached = graph.is_cached
+    graph.cache()
+    try:
+        pr = pagerank_classic(graph, max_iterations=max_iterations, tol=0.0, **engine_kwargs)
+        tr = trustrank(
+            graph, trusted_seeds, damping=damping, max_iterations=max_iterations,
+            tol=0.0, **engine_kwargs,
+        )
+    finally:
+        if not cached:
+            graph.unpersist()
     joined = pr.withColumnRenamed("rank", "pagerank").join(
         tr.withColumnRenamed("rank", "trust"), "id"
     )

@@ -11,8 +11,11 @@ This is how Vermeer, the reference's in-memory sibling, holds a graph
   each round. At or below :data:`LOCAL_EDGES` they stop and pull the
   live vertices and edges with Arrow ``toPandas()``. A numpy-CSR kernel
   labels them here, and the labels go back as a frame for the loop's
-  answer. Labels are min member ids, the same contract as the Spark
-  path, so the answer does not depend on where the switch happens.
+  answer. ``scc`` also tests :func:`fits` at entry on a cached graph,
+  whose counts are already kept, so the switch costs no job and a graph
+  that fits is labelled whole before the first barrier. Labels are min
+  member ids, the same contract as the Spark path, so the answer does
+  not depend on where the switch happens.
 - The PageRank family (``pagerank``, ``pagerank_classic``,
   ``pagerank_weighted``): a graph with at most :data:`LOCAL_EDGES`
   vertices and edges runs all its supersteps in :func:`pagerank`. The
@@ -40,9 +43,10 @@ LOCAL_EDGES = 1_000_000
 
 
 def fits(graph: Graph) -> bool:
-    """Whether ``graph`` (cached) has at most :data:`LOCAL_EDGES`
-    vertices and at most as many edges. The cached graph keeps both
-    counts, so BspEngine and the caller read them without a new job."""
+    """Whether ``graph`` has at most :data:`LOCAL_EDGES` vertices and at
+    most as many edges. A cached graph keeps both counts, so a second
+    call, and BspEngine after it, read them without a new job; on an
+    uncached graph each call counts both frames again."""
     return graph.num_vertices() <= LOCAL_EDGES and graph.num_edges() <= LOCAL_EDGES
 
 

@@ -44,11 +44,15 @@ BOTH_SQL = (
 
 
 def orders_graph(spark: SparkSession, sf_dir: str) -> Graph:
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    # the two columns the rule reads, declared: no job infers a schema
+    # from the file footers, and an int32 column widens to long
+    orders = spark.read.schema("o_orderkey long, o_custkey long").parquet(
+        f"{sf_dir}/orders.parquet"
+    )
     edges = (
         orders.select(
-            F.col("o_custkey").cast("long").alias("src"),
-            (F.col("o_orderkey") % DST_MOD).cast("long").alias("dst"),
+            F.col("o_custkey").alias("src"),
+            (F.col("o_orderkey") % DST_MOD).alias("dst"),
         )
         .where(F.col("src") != F.col("dst"))
         .distinct()

@@ -157,3 +157,45 @@ def test_graph_has_power_law_structure(spark, files):
     assert outdeg.agg(F.max("count")).first()[0] >= 10
     n_with_out = outdeg.count()
     assert n_with_out < V  # dangling files exist
+
+
+@pytest.mark.parametrize("vectorized", ["true", "false"])
+def test_orders_graph_reads_int32_columns(spark, tmp_path, vectorized):
+    """``orders_graph`` declares its two columns as longs: an orders file
+    with int32 keys gives the same graph as one with int64 keys, under
+    both Parquet readers, and an extra column is not read."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from incubator_hugegraph_computer_spark.sources.tpch_graph import DST_MOD, orders_graph
+
+    rng = np.random.default_rng(5)
+    orderkey = rng.integers(0, 50_000, 400)
+    custkey = rng.integers(0, 1500, 400)
+    graphs = {}
+    for t in (pa.int32(), pa.int64()):
+        d = tmp_path / str(t)
+        d.mkdir()
+        pq.write_table(
+            pa.table({
+                "o_orderkey": pa.array(orderkey, t),
+                "o_custkey": pa.array(custkey, t),
+                "o_comment": pa.array(["x"] * len(orderkey)),
+            }),
+            d / "orders.parquet",
+        )
+        spark.conf.set("spark.sql.parquet.enableVectorizedReader", vectorized)
+        try:
+            g = orders_graph(spark, str(d))
+            graphs[str(t)] = (
+                sorted(map(tuple, g.edges.collect())),
+                sorted(r["id"] for r in g.vertices.collect()),
+                [f.dataType.simpleString() for f in g.edges.schema],
+            )
+        finally:
+            spark.conf.unset("spark.sql.parquet.enableVectorizedReader")
+    want = sorted({(int(c), int(o) % DST_MOD) for o, c in zip(orderkey, custkey)
+                   if c != o % DST_MOD})
+    assert graphs["int32"] == graphs["int64"]
+    assert graphs["int64"][0] == want
+    assert graphs["int64"][2] == ["bigint", "bigint"]

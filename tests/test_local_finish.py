@@ -1,27 +1,35 @@
 """The driver kernels (``plans/local.py``) and the Spark path give the
 same answer. ``scc`` and ``wcc_contract`` run with ``LOCAL_EDGES`` at 0
 (the Spark path to the end), at its default, and one below the loop's
-first edge count (the switch happens after at least one Spark round).
+first edge count (the switch happens after at least one Spark round);
+on a cached graph that fits ``scc`` switches at entry, before any
+barrier.
 The PageRank family runs with ``LOCAL_EDGES`` at 0 (BspEngine) and at
 its default (the driver kernel)."""
 
+import uuid
+
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 import tests.test_advanced_ops as advanced_ops
 import tests.test_bsp_barrier as bsp_barrier
 import tests.test_wcc as wcc_tests
 from incubator_hugegraph_computer_spark.graph import Graph
+from incubator_hugegraph_computer_spark.operators import scc as scc_module
 from incubator_hugegraph_computer_spark.operators.pagerank import (
     pagerank,
     pagerank_classic,
     pagerank_weighted,
 )
+from incubator_hugegraph_computer_spark.operators.quotient import host_rank
 from incubator_hugegraph_computer_spark.operators.scc import scc
+from incubator_hugegraph_computer_spark.operators.trustrank import spam_mass
 from incubator_hugegraph_computer_spark.operators.wcc import wcc_contract
 from incubator_hugegraph_computer_spark.plans import local
 from incubator_hugegraph_computer_spark.plans.bsp import BspEngine
-from tests.conftest import PRWCC_VERTEX_IDS, make_graph
+from tests.conftest import PRWCC_EDGES, PRWCC_VERTEX_IDS, make_graph
 from tests.oracles import random_graph, wcc_oracle
 
 # Several SCCs ({10..13}, {14, 15, 16}, {18, 19}), a DAG tail into them,
@@ -61,6 +69,8 @@ def _first_edge_count(op, edges):
     ids=["mixed", "dag"],
 )
 def test_outputs_identical_across_thresholds(spark, monkeypatch, op, edges, ids):
+    """The graph is not cached, so the loop switches in-loop, off a
+    barrier's count: at ``first - 1`` only after a Spark round."""
     g = make_graph(spark, edges, vertex_ids=ids)
     finishes = []
     for name in ("scc_labels", "wcc_labels"):
@@ -88,6 +98,65 @@ def test_outputs_identical_across_thresholds(spark, monkeypatch, op, edges, ids)
         assert dict(runs[0]) == advanced_ops.scc_oracle(ids, in_vertices)
     elif edges is DAG_EDGES:
         assert dict(runs[0]) == wcc_oracle(ids, edges)
+
+
+def _group_jobs(spark, group, fn):
+    """``(fn(), job ids)``: run ``fn`` in the Spark job group ``group``."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    return out, sc.statusTracker().getJobIdsForGroup(group)
+
+
+# Jobs scc fires at entry on a cached, counted graph that fits
+# (local[4], AQE), answer collected, measured on the fixtures below:
+# one pull each of the vertices and the edges (the answer is a local
+# relation and collects with no job; the empty graph takes 3).
+ENTRY_JOBS = 2
+
+
+@pytest.mark.parametrize(
+    "edges,ids",
+    [(MIXED_EDGES, MIXED_IDS), (DAG_EDGES, list(range(30))), ([], [])],
+    ids=["mixed", "dag", "empty"],
+)
+def test_cached_graph_switches_at_entry(spark, monkeypatch, edges, ids):
+    """On a cached, counted graph at the default ``LOCAL_EDGES`` ``scc``
+    labels on the driver before any barrier, in at most its measured
+    job count + 2; the rows and schema equal the Spark path's
+    (``LOCAL_EDGES`` = 0) and the uncached graph's at both settings."""
+    barriers = []
+    real = scc_module.barrier
+    monkeypatch.setattr(
+        scc_module, "barrier", lambda *a, **k: barriers.append(1) or real(*a, **k)
+    )
+    g = make_graph(spark, edges, vertex_ids=ids).cache()
+    g.num_vertices()
+    g.num_edges()
+    group = f"test-entry-scc-{uuid.uuid4().hex}"
+    entry, jobs = _group_jobs(spark, group, lambda: scc(g).collect())
+    assert not barriers
+    assert len(jobs) <= ENTRY_JOBS + 2, len(jobs)
+    frames = {}
+    for threshold in (0, local.LOCAL_EDGES):
+        monkeypatch.setattr(local, "LOCAL_EDGES", threshold)
+        for cached in (True, False):
+            barriers.clear()
+            frames[threshold, cached] = scc(g if cached else make_graph(spark, edges, ids))
+            # only a cached graph that fits skips the barriers (an empty
+            # one fits at 0 too)
+            assert bool(barriers) == (not cached or (threshold == 0 and ids != []))
+    g.unpersist()
+    want = sorted(map(tuple, entry))
+    types = [(f.name, f.dataType) for f in frames[local.LOCAL_EDGES, True].schema]
+    for key, frame in frames.items():
+        assert sorted(map(tuple, frame.collect())) == want, key
+        assert [(f.name, f.dataType) for f in frame.schema] == types, key
 
 
 def test_kernels_match_oracles():
@@ -231,23 +300,38 @@ def test_pagerank_driver_kernel_costs(spark, monkeypatch):
     g = bsp_barrier._sql_graph(spark)
     g.num_vertices()
     g.edges.count()
-    sc = spark.sparkContext
-    group = "test-pagerank-driver-jobs"
-    sc.setJobGroup(group, "pagerank on the driver")
     ran = []
     real = local.pagerank
     monkeypatch.setattr(local, "pagerank", lambda *a: ran.append(1) or real(*a))
-    try:
-        out, added = bsp_barrier.persisted_rdds_added(
+    (out, added), jobs = _group_jobs(
+        spark,
+        "test-pagerank-driver-jobs",
+        lambda: bsp_barrier.persisted_rdds_added(
             spark, lambda: pagerank(g, max_supersteps=20, l1_threshold=0.0).collect()
-        )
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
+        ),
+    )
     assert ran
     assert len(out) == len(PRWCC_VERTEX_IDS)
     assert len(added) <= 1, added
     assert len(jobs) <= PAGERANK_DRIVER_JOBS + 2, len(jobs)
+    g.unpersist()
+
+
+def test_pagerank_releases_what_it_cached(spark):
+    """``host_rank`` hands ``pagerank_weighted`` a quotient graph it never
+    cached, and ``spam_mass`` runs PageRank and TrustRank on a graph the
+    caller never cached: neither leaves anything persisted. A graph the
+    caller cached stays cached."""
+    g = make_graph(spark, PRWCC_EDGES, PRWCC_VERTEX_IDS)
+    mapping = g.vertices.select("id", (F.col("id") % 3).alias("grp"))
+    for run in (
+        lambda: host_rank(g, mapping).collect(),
+        lambda: spam_mass(g, [PRWCC_VERTEX_IDS[0]], max_iterations=3).collect(),
+    ):
+        out, added = bsp_barrier.persisted_rdds_added(spark, run, collect_garbage=True)
+        assert out and not added, added
+        assert not g.is_cached
+    g.cache()
+    pagerank(g).collect()
+    assert g.is_cached and g.edges.is_cached and g.vertices.is_cached
     g.unpersist()
