@@ -92,15 +92,16 @@ def build_parser() -> argparse.ArgumentParser:
                    "on high-diameter graphs")
     p.add_argument("--method", default="superstep",
                    choices=["superstep", "stride"],
-                   help="pagerank/lpa schedule: per-superstep barriers or "
-                   "stride-fused actions (same per-iteration math; a run "
-                   "that converges may do up to stride-1 extra iterations). "
-                   "stride always runs on Spark; superstep pagerank runs on "
-                   "the driver when the graph fits plans/local.LOCAL_EDGES "
-                   "and no --checkpoint-dir is given (scc runs there too on "
-                   "a graph that fits)")
+                   help="pagerank/lpa schedule: one superstep per barrier, "
+                   "or --stride supersteps fused per barrier (same "
+                   "per-superstep math; --max-supersteps counts supersteps "
+                   "either way, and a run that converges may do up to "
+                   "stride-1 extra ones). stride > 1 always runs on Spark; "
+                   "superstep pagerank runs on the driver when the graph "
+                   "fits plans/local.LOCAL_EDGES and no --checkpoint-dir is "
+                   "given (scc runs there too on a graph that fits)")
     p.add_argument("--stride", type=int, default=None,
-                   help="iterations fused per action for --method stride "
+                   help="supersteps fused per barrier for --method stride "
                    "(default: pagerank 2, lpa 4)")
     p.add_argument("--initial-ranks", default=None,
                    help="parquet (id, rank) warm-start seed for pagerank — "

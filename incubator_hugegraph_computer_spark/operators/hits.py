@@ -19,7 +19,8 @@ forward pass (auth) rides the engine's combined message pass
 (SHUFFLE_HASH state⋈edges + map-side-combined groupBy(dst)); the
 backward pass (hub) and BOTH normalizations run *in-plan* inside the
 same superstep action — normalization sums are one-row aggregates
-broadcast-crossJoined back (the PageRankStrideProgram scalar pattern),
+broadcast-crossJoined back (the scalar pattern of BspEngine's fused
+supersteps),
 so each iteration is exactly ONE Spark action regardless of V and E.
 Nothing is collected; state stays (id, auth, hub) — V rows.
 """
@@ -53,12 +54,6 @@ class HitsProgram(BspProgram):
 
     def __init__(self, graph: Graph):
         self.graph = graph
-        self._scratch: list[DataFrame] = []
-
-    def cleanup(self) -> None:
-        for df in self._scratch:
-            df.unpersist()
-        self._scratch = []
 
     def initial_state(self, graph: Graph) -> DataFrame:
         # h_0 = 1 everywhere; the first normalization makes the initial
@@ -74,16 +69,13 @@ class HitsProgram(BspProgram):
         return messages.groupBy(F.col("dst").alias("id")).agg(F.sum("msg").alias("msg"))
 
     def update(self, state: DataFrame, inbox: DataFrame, ctx: SuperstepContext) -> DataFrame:
-        # Intermediates of the PREVIOUS superstep are materialized now.
-        self.cleanup()
         # auth: combined in-messages, 0 for vertices nobody links to.
         a_raw = state.select("id").join(inbox, "id", "left").select(
             "id", F.coalesce("msg", F.lit(0.0)).alias("a_raw")
         )
         # a_raw feeds both its normalization sum and the hub pass inside
-        # ONE action — persist once, released at the next superstep.
-        a_raw = a_raw.persist()
-        self._scratch.append(a_raw)
+        # ONE action — stored once, released after the barrier.
+        a_raw = ctx.persist(a_raw)
         auth = _normalized(a_raw, "a_raw", "auth")
         # hub: reverse pass h(u) = Σ_{u→v} auth(v) — join auth state to
         # the edge list on dst, aggregate by src (map-side combined).
@@ -98,18 +90,14 @@ class HitsProgram(BspProgram):
             .join(h_msgs.groupBy("id").agg(F.sum("m").alias("h_raw")), "id", "left")
             .select("id", F.coalesce("h_raw", F.lit(0.0)).alias("h_raw"))
         )
-        h_raw = h_raw.persist()
-        self._scratch.append(h_raw)
+        h_raw = ctx.persist(h_raw)
         hub = _normalized(h_raw, "h_raw", "hub")
         return auth.join(hub, "id")
 
 
 def hits(graph: Graph, iterations: int = 5, **engine_kwargs) -> DataFrame:
     """(id, auth, hub) after ``iterations`` sum-normalized HITS rounds."""
-    program = HitsProgram(graph)
     engine_kwargs.setdefault("count_messages", False)
     engine = BspEngine(graph, max_supersteps=iterations, **engine_kwargs)
-    state, _ = engine.run(program, resume=False)
-    out = state.select("id", "auth", "hub")
-    program.cleanup()
-    return out
+    state, _ = engine.run(HitsProgram(graph), resume=False)
+    return state.select("id", "auth", "hub")

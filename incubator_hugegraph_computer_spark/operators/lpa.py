@@ -88,42 +88,6 @@ class LpaProgram(BspProgram):
         )
 
 
-class LpaStrideProgram(LpaProgram):
-    """Java LPA with ``stride`` propagation rounds unrolled per superstep
-    (one Spark action per ``stride`` rounds — the WCC-stride schedule,
-    ``operators/wcc.py``). Per-round semantics identical to
-    ``LpaProgram``: each inner hop filters to changed vertices, runs the
-    same two-level frequency/argmax aggregation, and flags changes for
-    the next hop. No scalar subqueries nest (unlike stride PageRank), so
-    deeper strides are safe. A converging run may execute up to
-    ``stride-1`` extra rounds past quiescence — no-ops, since silent
-    vertices send nothing and absent inboxes keep labels unchanged."""
-
-    def __init__(self, graph: Graph, stride: int = 4, total_supersteps: int = 10):
-        self.graph = graph
-        self.stride = max(1, stride)
-        self.total = total_supersteps
-        self._scratch: list[DataFrame] = []
-
-    def cleanup(self) -> None:
-        for df in self._scratch:
-            df.unpersist()
-        self._scratch = []
-
-    def update(self, state: DataFrame, inbox: DataFrame, ctx: SuperstepContext) -> DataFrame:
-        self.cleanup()  # previous superstep's intermediates are materialized
-        done_before = (ctx.superstep - 1) * self.stride
-        rounds_this = max(1, min(self.stride, self.total - done_before))
-        cur = super().update(state, inbox, ctx)
-        for _ in range(rounds_this - 1):
-            # cur feeds the message pass AND the update join — persist
-            # once, populated lazily inside this superstep's action.
-            cur = cur.persist()
-            self._scratch.append(cur)
-            cur = super().update(cur, self.combine(self.messages(cur, self.graph, ctx)), ctx)
-        return cur
-
-
 class LpaSyncProgram(BspProgram):
     """Vermeer semantics: full recompute + oscillation guard. Expects the
     graph's edges to already be the both-direction multiset.
@@ -181,24 +145,25 @@ def lpa(
 ) -> DataFrame:
     """(id, label) — Java-semantics deterministic LPA (directed).
 
-    ``method="stride"`` fuses ``stride`` rounds per Spark action (same
-    per-round math; parity pinned by test_lpa_stride_parity)."""
-    resume = engine_kwargs.pop("resume", False)
-    if method == "superstep":
-        engine = BspEngine(graph, max_supersteps=max_supersteps, **engine_kwargs)
-        state, _ = engine.run(LpaProgram(), resume=resume)
-        return state.select("id", "label")
-    if method != "stride":
+    ``method="stride"`` runs ``stride`` rounds per barrier (BspEngine's
+    fused schedule: same per-round math, parity pinned by
+    test_lpa_stride_parity); ``max_supersteps`` counts rounds under both
+    methods. A stride run halts on the changed-vertex count alone: a
+    round in which no label changed sends nothing, so the rounds after
+    it are no-ops and need no message count."""
+    if method not in ("superstep", "stride"):
         raise ValueError("lpa method must be 'superstep' or 'stride'")
-    program = LpaStrideProgram(graph, stride=stride, total_supersteps=max_supersteps)
-    engine_kwargs.setdefault("count_messages", False)
+    resume = engine_kwargs.pop("resume", False)
+    if method == "stride":
+        engine_kwargs.setdefault("count_messages", False)
     engine = BspEngine(
-        graph, max_supersteps=-(-max_supersteps // program.stride), **engine_kwargs
+        graph,
+        max_supersteps=max_supersteps,
+        stride=stride if method == "stride" else 1,
+        **engine_kwargs,
     )
-    state, _ = engine.run(program, resume=resume)
-    out = state.select("id", "label")
-    program.cleanup()
-    return out
+    state, _ = engine.run(LpaProgram(), resume=resume)
+    return state.select("id", "label")
 
 
 def lpa_sync(

@@ -109,18 +109,13 @@ class _PageRankBase(BspProgram):
         raise NotImplementedError
 
     def update(self, state: DataFrame, inbox: DataFrame, ctx: SuperstepContext) -> DataFrame:
-        # the previous superstep's aggregators enter the plan as literals
-        return self._rank_step(
-            state,
-            inbox,
-            float(ctx.prev_aggs["dangling"]),
-            float(ctx.prev_aggs["cum"]),
-            ctx.num_vertices,
-        )
-
-    def _rank_step(self, state: DataFrame, inbox: DataFrame, dangling, cum, n: int) -> DataFrame:
+        # the previous superstep's aggregators: literals at a barrier's
+        # first superstep, in-plan columns at the fused ones after it
         msg = F.coalesce(F.col("msg"), F.lit(0.0))
-        return self._next_state(state, inbox, self.rank(msg, dangling, cum, n))
+        new_rank = self.rank(
+            msg, ctx.prev_aggs["dangling"], ctx.prev_aggs["cum"], ctx.num_vertices
+        )
+        return self._next_state(state, inbox, new_rank)
 
     @staticmethod
     def _next_state(state: DataFrame, inbox: DataFrame, new_rank: Column) -> DataFrame:
@@ -158,90 +153,6 @@ class PageRankProgram(_PageRankBase):
 
     def halt(self, ctx: SuperstepContext) -> bool:
         return ctx.superstep > 1 and ctx.aggs["l1"] <= self.l1_threshold
-
-
-class PageRankStrideProgram(PageRankProgram):
-    """Java PageRank with ``stride`` iterations unrolled per superstep.
-
-    Identical per-iteration semantics to ``PageRankProgram`` — the only
-    change is where the two driver scalars (dangling mass, cumulative
-    rank) come from. The first unrolled hop reads them from the previous
-    superstep's aggregators as usual; each further hop computes them
-    IN-PLAN as a one-row aggregate over the intermediate state and
-    broadcast-crossJoins it back, so ``stride`` full PageRank iterations
-    execute inside ONE Spark action. The fixed per-superstep serial cost
-    (driver planning + scheduling + the aggregator collect) is the
-    Amdahl term that caps N→4N scaling efficiency (measured on WCC:
-    stride=4 moved efficiency 0.706 → 0.968); this applies the same
-    schedule to PageRank, whose supersteps are all-vertices-active and
-    therefore pay the barrier cost on every one of the fixed 10
-    iterations (bsp.max_super_step=10, AlgorithmTestBase.java:69-70).
-
-    Convergence (L1 ≤ threshold, PageRank4Master.java:94-99) is checked
-    at stride boundaries only, so a converging run may execute up to
-    ``stride-1`` extra iterations — extra iterations only tighten the
-    fixpoint, and fixed-budget runs split the budget exactly
-    (``total_supersteps`` caps the unrolled count of the last stride).
-
-    Default stride=2, NOT 4, on measurement: unlike WCC (whose hops
-    nest no subqueries), every unrolled PageRank hop adds a broadcast
-    scalar subquery, and those chains pay superlinearly — paired trials
-    at 2.5M edges/local[8]: stride=2 beat per-superstep by ~35%
-    (37.0s vs 58.5s, 47.1 vs 61.3, 14.0 vs 23.5) while stride=4 was
-    consistently SLOWER than per-superstep (93.3, 57.4, 33.2). One
-    nesting level per action captures the barrier savings; deeper
-    unrolls drown them in broadcast-future scheduling."""
-
-    def __init__(
-        self,
-        graph: Graph,
-        alpha: float = ALPHA_DEFAULT,
-        l1_threshold: float = L1_THRESHOLD_DEFAULT,
-        stride: int = 2,
-        total_supersteps: int = 10,
-    ):
-        super().__init__(alpha, l1_threshold)
-        self.graph = graph
-        self.stride = max(1, stride)
-        self.total = total_supersteps
-        self._scratch: list[DataFrame] = []
-
-    def cleanup(self) -> None:
-        for df in self._scratch:
-            df.unpersist()
-        self._scratch = []
-
-    def update(self, state: DataFrame, inbox: DataFrame, ctx: SuperstepContext) -> DataFrame:
-        # Previous superstep's intermediates are materialized by now.
-        self.cleanup()
-        n = ctx.num_vertices
-        done_before = (ctx.superstep - 1) * self.stride
-        iters_this = max(1, min(self.stride, self.total - done_before))
-        cur = super().update(state, inbox, ctx)  # hop 1: driver scalars
-        for _ in range(iters_this - 1):
-            # cur feeds three consumers (scalar agg, message pass, the
-            # update join) inside one action — persist once, lazily.
-            cur = cur.persist()
-            self._scratch.append(cur)
-            aggs = self.agg_exprs(ctx)
-            scal = cur.agg(
-                aggs["dangling"].alias("_dangling"), aggs["cum"].alias("_cum")
-            )
-            inbox2 = self.combine(self.messages(cur, self.graph, ctx))
-            cur = self._rank_step(
-                cur.crossJoin(F.broadcast(scal)),
-                inbox2,
-                F.col("_dangling"),
-                F.col("_cum"),
-                n,
-            )
-        return cur
-
-    def halt(self, ctx: SuperstepContext) -> bool:
-        iters_done = min(ctx.superstep * self.stride, self.total)
-        return iters_done > 1 and (
-            ctx.aggs["l1"] <= self.l1_threshold or iters_done >= self.total
-        )
 
 
 class PageRankClassicProgram(_PageRankBase):
@@ -292,20 +203,29 @@ class PageRankWeightedProgram(PageRankClassicProgram):
 
 
 def _run(
-    graph: Graph, program: _PageRankBase, max_supersteps: int, **engine_kwargs
+    graph: Graph,
+    program: _PageRankBase,
+    max_supersteps: int,
+    stride: int = 1,
+    **engine_kwargs,
 ) -> DataFrame:
     """(id, rank) after at most ``max_supersteps`` of ``program``: on the
-    driver when the graph fits and the run is not checkpointed (durable
-    state and resume belong to BspEngine), else on BspEngine. Both cache
+    driver when the graph fits, the run is not checkpointed (durable
+    state and resume belong to BspEngine) and ``stride`` is 1, else on
+    BspEngine with ``stride`` supersteps per barrier. Both cache
     ``graph``; a graph the caller had not cached is released once the
     answer is built (the driver's frame, or BspEngine's stored state)
     or the run raises."""
     cached = graph.is_cached
     try:
-        if engine_kwargs.get("checkpoint_dir") is None and local.fits(graph.cache()):
+        if (
+            stride == 1
+            and engine_kwargs.get("checkpoint_dir") is None
+            and local.fits(graph.cache())
+        ):
             return local.pagerank(graph, program, max_supersteps)[0]
         resume = engine_kwargs.pop("resume", False)
-        engine = BspEngine(graph, max_supersteps=max_supersteps, **engine_kwargs)
+        engine = BspEngine(graph, max_supersteps=max_supersteps, stride=stride, **engine_kwargs)
         state, _ = engine.run(program, resume=resume)
         return state.select("id", "rank")
     finally:
@@ -325,41 +245,35 @@ def pagerank(
 ) -> DataFrame:
     """(id, rank) under exact HugeGraph Computer semantics.
 
-    ``method="stride"`` runs the same per-iteration math with ``stride``
-    iterations fused into each Spark action (scalars computed in-plan) —
-    the scaling-efficiency schedule; it always runs on BspEngine, while
-    ``method="superstep"`` runs on the driver when the graph fits
-    ``plans/local.LOCAL_EDGES``. Output parity between the two is pinned
-    by test_pagerank_stride_parity.
+    ``method="stride"`` runs BspEngine with ``stride`` supersteps fused
+    into each barrier (same per-superstep math, the later supersteps'
+    scalars computed in-plan) — the scaling-efficiency schedule; with
+    ``stride > 1`` it always runs on Spark, while ``method="superstep"``
+    runs on the driver when the graph fits ``plans/local.LOCAL_EDGES``.
+    ``max_supersteps`` counts supersteps under both methods; convergence
+    is read at barriers, so a converging stride run may do up to
+    ``stride - 1`` more supersteps. Output parity between the two is
+    pinned by test_pagerank_stride_parity. The default stride is 2 on
+    measurement: at 2.5M edges (local[8]) stride 2 beat one superstep
+    per barrier by ~35% and stride 4, whose every fused superstep adds
+    a broadcast scalar subquery, was slower than both.
 
     ``initial_ranks``: optional (id, rank) warm-start seed (must be
     positive) — with ``l1_threshold`` convergence this is the delta-
     ingest path: re-rank after an edge batch from the previous ranks in
     a handful of supersteps instead of from scratch (tested:
     test_pagerank_warm_start)."""
-    if method == "superstep":
-        program = PageRankProgram(alpha, l1_threshold)
-        program.initial_ranks = initial_ranks
-        return _run(
-            graph,
-            program,
-            max_supersteps=max_supersteps,
-            **engine_kwargs,
-        )
-    if method != "stride":
+    if method not in ("superstep", "stride"):
         raise ValueError("pagerank method must be 'superstep' or 'stride'")
-    program = PageRankStrideProgram(
-        graph, alpha, l1_threshold, stride=stride, total_supersteps=max_supersteps
-    )
+    program = PageRankProgram(alpha, l1_threshold)
     program.initial_ranks = initial_ranks
-    engine_steps = -(-max_supersteps // program.stride)  # ceil
-    resume = engine_kwargs.pop("resume", False)
-    engine_kwargs.setdefault("count_messages", False)
-    engine = BspEngine(graph, max_supersteps=engine_steps, **engine_kwargs)
-    state, _ = engine.run(program, resume=resume)
-    out = state.select("id", "rank")
-    program.cleanup()
-    return out
+    return _run(
+        graph,
+        program,
+        max_supersteps=max_supersteps,
+        stride=stride if method == "stride" else 1,
+        **engine_kwargs,
+    )
 
 
 def pagerank_classic(

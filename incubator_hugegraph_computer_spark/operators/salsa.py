@@ -52,16 +52,6 @@ class SalsaProgram(BspProgram):
         self.edges = (
             e.join(odeg, "src").join(ideg, "dst").persist()
         )
-        self._scratch: list[DataFrame] = []
-
-    def cleanup(self) -> None:
-        for df in self._scratch:
-            df.unpersist()
-        self._scratch = []
-
-    def release(self) -> None:
-        self.cleanup()
-        self.edges.unpersist()
 
     def initial_state(self, graph: Graph) -> DataFrame:
         return graph.vertices.select(
@@ -81,11 +71,11 @@ class SalsaProgram(BspProgram):
         return messages.groupBy(F.col("dst").alias("id")).agg(F.sum("msg").alias("msg"))
 
     def update(self, state: DataFrame, inbox: DataFrame, ctx: SuperstepContext) -> DataFrame:
-        self.cleanup()
-        a_raw = state.select("id").join(inbox, "id", "left").select(
-            "id", F.coalesce("msg", F.lit(0.0)).alias("a_raw")
-        ).persist()
-        self._scratch.append(a_raw)
+        a_raw = ctx.persist(
+            state.select("id").join(inbox, "id", "left").select(
+                "id", F.coalesce("msg", F.lit(0.0)).alias("a_raw")
+            )
+        )
         auth = _normalized(a_raw, "a_raw", "auth")
         # Backward: a(v)/indeg(v) delivered to each in-neighbor.
         h_msgs = (
@@ -97,12 +87,11 @@ class SalsaProgram(BspProgram):
                 (F.col("auth") / F.col("indeg")).alias("m"),
             )
         )
-        h_raw = (
+        h_raw = ctx.persist(
             state.select("id")
             .join(h_msgs.groupBy("id").agg(F.sum("m").alias("h_raw")), "id", "left")
             .select("id", F.coalesce("h_raw", F.lit(0.0)).alias("h_raw"))
-        ).persist()
-        self._scratch.append(h_raw)
+        )
         hub = _normalized(h_raw, "h_raw", "hub")
         return auth.join(hub, "id")
 
@@ -114,5 +103,5 @@ def salsa(graph: Graph, iterations: int = 5, **engine_kwargs) -> DataFrame:
     engine = BspEngine(graph, max_supersteps=iterations, **engine_kwargs)
     state, _ = engine.run(program, resume=False)
     out = state.select("id", "auth", "hub")
-    program.release()
+    program.edges.unpersist()
     return out

@@ -19,7 +19,7 @@ Spark formulation (the standard distributed ColorSCC):
      is in SCC(r) (it reaches r, and r reaches it by construction).
   3. remove assigned vertices, repeat.
 
-Round compression (same trick as ``wcc.py`` WccStrideProgram): both
+Round compression (the trick of BspEngine's ``stride``): both
 inner loops unroll ``stride`` propagation hops per materialization
 barrier — the shuffle count per hop is unchanged, but driver
 round-trips, convergence probes and lineage checkpoints drop by the

@@ -60,54 +60,6 @@ class WccProgram(BspProgram):
         )
 
 
-class WccStrideProgram(WccProgram):
-    """Min-propagation with ``stride`` passes unrolled per superstep.
-
-    Same total join/aggregate work as ``WccProgram``, but ``stride``
-    message passes execute inside ONE superstep job — one Spark action,
-    one barrier, one driver round-trip per ``stride`` propagation hops.
-    The fixed per-superstep serial cost (planning + scheduling + the
-    collect) is the Amdahl term that caps N→4N scaling efficiency on
-    converged WCC, so dividing the barrier count by ``stride`` raises
-    scaling efficiency without touching per-hop semantics: output is
-    identical to the reference's min-label loop. It adds no join keyed
-    on the label value — labels collapse to few distinct values as
-    components merge, which makes a label-keyed shuffle pathologically
-    skewed; here every join stays keyed on vertex id (uniform)."""
-
-    def __init__(self, graph: Graph, stride: int = 2):
-        self.graph = graph
-        self.stride = max(1, stride)
-        self._scratch: list[DataFrame] = []
-
-    def update(self, state: DataFrame, inbox: DataFrame, ctx: SuperstepContext) -> DataFrame:
-        # Intermediate states from the PREVIOUS superstep are safe to
-        # drop now (that superstep's action has completed).
-        for df in self._scratch:
-            df.unpersist()
-        self._scratch = []
-
-        def merge(s: DataFrame, ib: DataFrame) -> DataFrame:
-            new_comp = F.least(F.col("comp"), F.coalesce(F.col("msg"), F.col("comp")))
-            return s.join(ib, "id", "left").select(
-                "id", new_comp.alias("comp"), (new_comp < F.col("comp")).alias("active")
-            )
-
-        cur = merge(state, inbox)
-        for _ in range(self.stride - 1):
-            # Each inner state feeds BOTH the next message pass and the
-            # next merge join; without persist the two consumers each
-            # recompute it, doubling work per unrolled level —
-            # 2^(stride-1) blowup (measured 3.4x at stride=4). The
-            # persist is populated lazily inside the superstep's single
-            # action and read by the second consumer.
-            cur = cur.persist()
-            self._scratch.append(cur)
-            msgs = self.messages(cur, self.graph, ctx)
-            cur = merge(cur, self.combine(msgs))
-        return cur
-
-
 def wcc(
     graph: Graph,
     max_supersteps: int = 100,
@@ -125,13 +77,18 @@ def wcc(
 
     ``method`` selects the physical strategy (identical output in all
     three): ``"propagate"`` (default) is the reference-shaped min-label
-    loop, one hop per barrier; ``"stride"`` unrolls ``stride`` hops per
-    barrier (the scale path — same work, 1/stride the serial barrier
-    cost); ``"contract"`` is the alternating large-star/small-star edge
+    loop, one hop per barrier; ``"stride"`` runs the same loop with
+    ``stride`` hops per barrier (BspEngine's fused schedule — same work,
+    1/stride the serial barrier cost; every join stays keyed on the
+    uniform vertex id, none on the skewed label value);
+    ``"contract"`` is the alternating large-star/small-star edge
     contraction (Kiveris et al., SoCC'14) — O(log n) rounds regardless
     of diameter (8 rounds where propagate needs 98 on the sf0.1
     percolation edge graph), the right choice for high-diameter /
-    chain-heavy graphs."""
+    chain-heavy graphs. ``max_supersteps`` counts hops under
+    ``propagate`` and ``stride`` alike (rounds under ``contract``), so
+    a budget-truncated stride run returns, and warns about, the same
+    labels as propagate."""
     resume = engine_kwargs.pop("resume", False)
     method = engine_kwargs.pop("method", "propagate")
     stride = engine_kwargs.pop("stride", 4)
@@ -143,12 +100,13 @@ def wcc(
         engine_kwargs.pop("count_messages", None)
         return wcc_contract(graph, max_rounds=max_supersteps)
     g = graph if presymmetrized else graph.symmetrized().cache()
-    engine = BspEngine(g, max_supersteps=max_supersteps, **engine_kwargs)
-    if method == "stride":
-        program = WccStrideProgram(g, stride=stride)
-    else:
-        program = WccProgram()
-    state, ctx = engine.run(program, resume=resume)
+    engine = BspEngine(
+        g,
+        max_supersteps=max_supersteps,
+        stride=stride if method == "stride" else 1,
+        **engine_kwargs,
+    )
+    state, ctx = engine.run(WccProgram(), resume=resume)
     if ctx.active_vertices > 0:
         # the run stopped at max_supersteps, not at convergence — the
         # labels are an under-merged partition (more components than the
@@ -160,12 +118,6 @@ def wcc(
             stacklevel=2,
         )
     result = state.select("id", "comp")
-    if isinstance(program, WccStrideProgram):
-        # drop the final superstep's persisted stride intermediates —
-        # the run is over, nothing reads them again
-        for df in program._scratch:
-            df.unpersist()
-        program._scratch = []
     if not presymmetrized:
         # the final state is persisted/truncated by the engine, so the
         # symmetrized-edge cache this call created is no longer needed —

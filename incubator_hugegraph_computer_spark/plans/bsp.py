@@ -42,6 +42,25 @@ released once the new state has materialized. The combined inbox is
 counted (one more job) only when something reads the count: a durable
 CheckpointManager is attached (metrics.jsonl), the caller asks for it,
 or no vertex is active — the one case the termination rule reads it.
+
+Schedule: ``BspEngine(stride=k)`` runs up to ``k`` supersteps per
+barrier, for any program; the default ``k = 1`` is one superstep per
+barrier. The barrier's first superstep reads the previous barrier's
+aggregators as literals. Each later one reads the state of the
+superstep before it, stored once (``SuperstepContext.persist``) for its
+several consumers inside the one action, and that state's
+``agg_exprs`` computed in-plan: a one-row aggregate broadcast-
+crossJoined onto the state, so ``update`` sees ``ctx.prev_aggs`` as
+``Column``s there and must use them as column arithmetic. Fused
+intermediates are released as soon as the barrier has materialized.
+``ctx.superstep`` and ``max_supersteps`` count supersteps, not
+barriers, under every stride: the last barrier runs only the
+supersteps the budget has left, and ``halt`` and the termination rule
+are read at barriers. The fixed per-barrier cost (planning, scheduling,
+the aggregator collect) is what a stride divides; BENCH.md measured
+PageRank stride 2 ~35% faster at 2.5M edges and WCC stride 4 as the
+scaling-protocol win, while deeper PageRank strides, whose every hop
+adds a broadcast scalar subquery, measured slower.
 """
 
 from __future__ import annotations
@@ -79,6 +98,20 @@ class SuperstepContext:
     aggs: dict[str, Any] = field(default_factory=dict)
     prev_aggs: dict[str, Any] = field(default_factory=dict)
     stats: list[dict[str, Any]] = field(default_factory=list)
+    intermediates: list[DataFrame] = field(default_factory=list, repr=False)
+
+    def persist(self, df: DataFrame) -> DataFrame:
+        """``df`` stored for the barrier being built, where it feeds
+        several consumers inside one action; the engine releases it once
+        that barrier has materialized."""
+        df = df.persist()
+        self.intermediates.append(df)
+        return df
+
+    def release_intermediates(self) -> None:
+        for df in self.intermediates:
+            df.unpersist()
+        self.intermediates.clear()
 
 
 def shuffle_bytes_since(spark, after_stage_id: int = -1) -> tuple[int, int, int | None]:
@@ -192,6 +225,18 @@ class FilterProgram(ReduceProgram):
 
 
 class BspEngine:
+    """Runs a ``BspProgram`` to its termination rule or ``max_supersteps``.
+
+    ``stride`` is the number of supersteps fused into one barrier (module
+    docstring, "Schedule"). With a ``checkpoint_dir``, only barrier states
+    are stored: a barrier is checkpointed, under the number of its last
+    superstep, when any superstep it runs is a multiple of
+    ``checkpoint_every``, and resume continues from the superstep after
+    the latest one stored. Shuffle counters are kept exactly when a
+    ``checkpoint_dir`` is given, since only then is the metrics row
+    persisted. The engine caches the graph for the run and releases it
+    afterwards if the caller had not cached it."""
+
     def __init__(
         self,
         graph: Graph,
@@ -200,26 +245,25 @@ class BspEngine:
         checkpoint_every: int = 1,
         run_id: str | None = None,
         count_messages: bool | None = None,
-        track_shuffle: bool | None = None,
         checkpoint_messages: bool = False,
+        stride: int = 1,
     ):
         self.graph = graph
         self.max_supersteps = max_supersteps
+        self.stride = max(1, stride)
         # Also snapshot the combined inbox each checkpointed superstep
         # (SnapshotManager snapshots message files alongside vertex
         # state) — lets step k's update be REPLAYED from load(k-1) +
         # load_messages(k). Opt-in: one extra write job per superstep.
+        # Under stride > 1 it is the barrier's last superstep's inbox.
         self.checkpoint_messages = checkpoint_messages
-        # Shuffle-volume counters read the AppStatusStore over py4j —
-        # a per-stage round trip, so only on by default for durable
-        # (checkpointed) runs where the metrics row is persisted anyway.
-        self.track_shuffle = (checkpoint_dir is not None) if track_shuffle is None else track_shuffle
-        # messages_sent costs one job per counted superstep. None (the
-        # default) counts only when it is read: every superstep of a
-        # checkpointed run (metrics.jsonl), and any superstep that ends
+        # messages_sent costs one job per counted barrier. None (the
+        # default) counts only when it is read: every barrier of a
+        # checkpointed run (metrics.jsonl), and any barrier that ends
         # with no active vertex (the termination rule's no-messages
-        # half). True counts every superstep; False never does, and the
-        # run then halts on the active count alone.
+        # half). True counts every barrier; False never does, and the
+        # run then halts on the active count alone. The count is of the
+        # barrier's last superstep's inbox.
         self.count_messages = count_messages
         self.ckpt = (
             CheckpointManager(checkpoint_dir, run_id or uuid.uuid4().hex, checkpoint_every)
@@ -242,8 +286,19 @@ class BspEngine:
         return state
 
     def run(self, program: BspProgram, resume: bool = False) -> tuple[DataFrame, SuperstepContext]:
-        g = self.graph.cache()
-        ctx = SuperstepContext(num_vertices=g.num_vertices())
+        cached = self.graph.is_cached
+        ctx = SuperstepContext()
+        try:
+            return self._run(program, self.graph.cache(), ctx, resume), ctx
+        finally:
+            ctx.release_intermediates()
+            if not cached:
+                self.graph.unpersist()
+
+    def _run(
+        self, program: BspProgram, g: Graph, ctx: SuperstepContext, resume: bool
+    ) -> DataFrame:
+        ctx.num_vertices = g.num_vertices()
         count_every_step = self.count_messages or (
             self.count_messages is None and self.ckpt is not None
         )
@@ -261,42 +316,63 @@ class BspEngine:
                 self.ckpt.save(0, state, ctx.aggs, self._metrics(ctx, wall_ms=0))
             start_step = 1
 
-        for step in range(start_step, self.max_supersteps + 1):
+        step = start_step
+        while step <= self.max_supersteps:
+            last = min(step + self.stride - 1, self.max_supersteps)
             t0 = time.monotonic()
             stage_mark = (
                 shuffle_bytes_since(g.spark, after_stage_id=2**62)[2]
-                if self.track_shuffle
+                if self.ckpt is not None
                 else -1
             )
             ctx.prev_aggs = ctx.aggs
-            ctx.superstep = step
-
-            inbox = program.combine(program.messages(state, g, ctx))
             ctx.messages_sent = -1
-            if count_every_step:
-                # counted up front so the update job reuses the cache
-                inbox = inbox.persist()
-                ctx.messages_sent = inbox.count()
+            cur = state
+            for hop in range(step, last + 1):
+                scalars = None
+                if hop > step:
+                    # a fused superstep: the previous one's state feeds
+                    # its aggregators, the message pass and the update
+                    cur = ctx.persist(cur)
+                    exprs = program.agg_exprs(ctx)
+                    if exprs:
+                        scalars = cur.agg(*[c.alias(f"__agg_{n}") for n, c in exprs.items()])
+                    ctx.prev_aggs = {n: F.col(f"__agg_{n}") for n in exprs}
+                ctx.superstep = hop
+                inbox = program.combine(program.messages(cur, g, ctx))
+                if count_every_step and hop == last:
+                    # counted up front so the update job reuses the cache
+                    inbox = ctx.persist(inbox)
+                    ctx.messages_sent = inbox.count()
+                if scalars is None:
+                    cur = program.update(cur, inbox, ctx)
+                else:
+                    cur = program.update(cur.crossJoin(F.broadcast(scalars)), inbox, ctx)
+                    cur = cur.drop(*[c for c in scalars.columns if c in cur.columns])
 
-            # The barrier's lazy local checkpoint is the superstep's one
+            # The barrier's lazy local checkpoint is the barrier's one
             # stored copy: its aggregator action materializes it AND
             # truncates lineage in a single job. Without truncation each
             # superstep's plan nests the previous one's and Catalyst
             # re-analysis blows up 5-10x by step 4 (SURVEY §7 hard parts).
-            # ``state`` is released below, after the inbox recount.
-            new_state = self._barrier(program, program.update(state, inbox, ctx), ctx)
+            # ``state`` and the fused intermediates are released below,
+            # after the inbox recount and the checkpoint write.
+            new_state = self._barrier(program, cur, ctx)
             if ctx.active_vertices == 0 and ctx.messages_sent < 0 and self.count_messages is None:
-                # recomputes the inbox from ``state``, so before its release
+                # recomputes the inbox from what the barrier read, so
+                # before its release
                 ctx.messages_sent = inbox.count()
 
-            if self.track_shuffle and stage_mark is not None:
+            if self.ckpt is not None and stage_mark is not None:
                 read, write, _ = shuffle_bytes_since(g.spark, stage_mark)
                 ctx.shuffle_read_bytes = read
                 ctx.shuffle_write_bytes = write
             wall_ms = int((time.monotonic() - t0) * 1000)
-            if self.ckpt is not None and self.ckpt.should_checkpoint(step):
+            if self.ckpt is not None and any(
+                self.ckpt.should_checkpoint(s) for s in range(step, last + 1)
+            ):
                 self.ckpt.save(
-                    step,
+                    last,
                     new_state,
                     ctx.aggs,
                     self._metrics(ctx, wall_ms),
@@ -304,8 +380,7 @@ class BspEngine:
                 )
 
             release(state)
-            if count_every_step:
-                inbox.unpersist()
+            ctx.release_intermediates()
             state = new_state
             ctx.stats.append(self._metrics(ctx, wall_ms))
 
@@ -314,7 +389,8 @@ class BspEngine:
                 break
             if ctx.active_vertices == 0 and ctx.messages_sent <= 0:
                 break
-        return state, ctx
+            step = last + 1
+        return state
 
     @staticmethod
     def _metrics(ctx: SuperstepContext, wall_ms: int) -> dict[str, Any]:

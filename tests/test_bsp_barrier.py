@@ -10,10 +10,12 @@ import pytest
 from incubator_hugegraph_computer_spark.graph import Graph
 from incubator_hugegraph_computer_spark.operators.betweenness import betweenness
 from incubator_hugegraph_computer_spark.operators.ktruss import trussness
+from incubator_hugegraph_computer_spark.operators.lpa import lpa
 from incubator_hugegraph_computer_spark.operators.pagerank import pagerank
 from incubator_hugegraph_computer_spark.operators.scc import scc
+from incubator_hugegraph_computer_spark.operators.sssp import sssp
 from incubator_hugegraph_computer_spark.operators.wcc import WccProgram, wcc
-from incubator_hugegraph_computer_spark.plans import local
+from incubator_hugegraph_computer_spark.plans import bsp, local
 from incubator_hugegraph_computer_spark.plans.bsp import BspEngine
 from tests.conftest import PRWCC_EDGES, PRWCC_VERTEX_IDS, make_graph
 from tests.test_templates import CappedMaxLabel, _components_graph
@@ -75,6 +77,23 @@ def test_wcc_leaves_only_its_state(spark, prwcc):
     out, added = persisted_rdds_added(spark, lambda: wcc(prwcc).collect())
     assert len(out) == len(PRWCC_VERTEX_IDS)
     assert len(added) <= 1, added
+
+
+@pytest.mark.parametrize("algo", ["lpa", "sssp", "pagerank_stride"])
+def test_uncached_graph_is_released(spark, algo):
+    """BspEngine caches the graph for the run; a graph the caller had not
+    cached is released after it, with the fused schedule's intermediates,
+    so nothing stays stored once the answer is collected."""
+    g = make_graph(spark, PRWCC_EDGES, PRWCC_VERTEX_IDS)
+    run = {
+        "lpa": lambda: lpa(g),
+        "sssp": lambda: sssp(g, source=0),
+        "pagerank_stride": lambda: pagerank(g, method="stride", stride=2),
+    }[algo]
+    out, added = persisted_rdds_added(spark, lambda: run().collect(), collect_garbage=True)
+    assert out
+    assert not added, added
+    assert not g.is_cached
 
 
 # A directed 4-cycle with both chords (an undirected K4), a directed
@@ -166,7 +185,11 @@ def test_on_demand_count_keeps_termination(spark, program):
 
 # Jobs a 5-superstep pagerank fires on the PageRank/WCC fixture (local[4],
 # 4 shuffle partitions), measured; it repeats exactly for a fixed input.
+# The stride=2 count is the same run in 3 barriers (2 + 2 + 1
+# supersteps), measured when the fused schedule lived in the programs;
+# each fused superstep adds a broadcast aggregate, so it is not lower.
 PAGERANK_5_STEP_JOBS = 36
+PAGERANK_5_STEP_STRIDE2_JOBS = 36
 
 
 def _sql_graph(spark):
@@ -181,11 +204,11 @@ def _sql_graph(spark):
     ).cache()
 
 
-def test_pagerank_superstep_job_budget(spark, monkeypatch):
-    """A 5-superstep pagerank fires at most the measured job count + 1
-    per superstep, and no stage evaluates Python: the aggregator scalars
-    ride the plan as literals, not as a one-row Python-built frame."""
-    monkeypatch.setattr(local, "LOCAL_EDGES", 0)  # BspEngine, not the driver kernel
+def _pagerank_job_ids(spark, steps, group, **kwargs):
+    """Ids of the Spark jobs a ``steps``-superstep BspEngine pagerank on
+    the SQL fixture fires, after checking that no stage evaluates
+    Python: the aggregator scalars ride the plan as literals or in-plan
+    aggregates, not as a one-row Python-built frame."""
     sc = spark.sparkContext
     jsc = sc._jsc.sc()
     store = jsc.statusStore()
@@ -193,18 +216,15 @@ def test_pagerank_superstep_job_budget(spark, monkeypatch):
     g = _sql_graph(spark)
     g.num_vertices()
     g.edges.count()
-    steps = 5
-    group = "test-pagerank-job-budget"
-    sc.setJobGroup(group, "pagerank job budget")
+    sc.setJobGroup(group, group)
     try:
-        pagerank(g, max_supersteps=steps, l1_threshold=0.0).collect()
+        pagerank(g, max_supersteps=steps, l1_threshold=0.0, **kwargs).collect()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     jsc.listenerBus().waitUntilEmpty(60_000)
     tracker = sc.statusTracker()
     job_ids = tracker.getJobIdsForGroup(group)
-    assert len(job_ids) <= PAGERANK_5_STEP_JOBS + steps, len(job_ids)
     for job_id in job_ids:
         for stage_id in tracker.getJobInfo(job_id).stageIds:
             # a stage the store no longer holds did not run here: the
@@ -214,3 +234,33 @@ def test_pagerank_superstep_job_budget(spark, monkeypatch):
             dot = graph_of.makeDotFile(store.operationGraphForStage(stage_id))
             assert "PythonRDD" not in dot, f"job {job_id} evaluates Python"
     g.unpersist()
+    return job_ids
+
+
+def test_pagerank_superstep_job_budget(spark, monkeypatch):
+    """A 5-superstep pagerank fires at most the measured job count + 1
+    per superstep, and no stage evaluates Python."""
+    monkeypatch.setattr(local, "LOCAL_EDGES", 0)  # BspEngine, not the driver kernel
+    steps = 5
+    job_ids = _pagerank_job_ids(spark, steps, "test-pagerank-job-budget")
+    assert len(job_ids) <= PAGERANK_5_STEP_JOBS + steps, len(job_ids)
+
+
+def test_pagerank_stride_job_budget(spark, monkeypatch):
+    """The fused schedule keeps its cost: a 5-superstep stride=2 pagerank
+    runs 3 barriers after the initial one, not one per superstep, and
+    fires at most the measured job count + 1 per superstep."""
+    barriers = []
+    real_barrier = bsp.barrier
+
+    def counted(*args, **kwargs):
+        barriers.append(1)
+        return real_barrier(*args, **kwargs)
+
+    monkeypatch.setattr(bsp, "barrier", counted)
+    steps = 5
+    job_ids = _pagerank_job_ids(
+        spark, steps, "test-pagerank-stride-job-budget", method="stride", stride=2
+    )
+    assert len(barriers) == 1 + 3, len(barriers)
+    assert len(job_ids) <= PAGERANK_5_STEP_STRIDE2_JOBS + steps, len(job_ids)

@@ -17,15 +17,26 @@ def _rank_dict(df):
 
 
 # State checkpoints have one backend, parquet with directory
-# partitioning; the id keeps the name test histories know it by.
-@pytest.mark.parametrize("backend", ["dir"])
-def test_pagerank_resume_equivalence(spark, tmp_path, backend):
+# partitioning; the "dir" id keeps the name test histories know the
+# one-superstep-per-barrier case by. The stride case interrupts inside
+# the fused schedule, so its checkpoint keys must count supersteps.
+@pytest.mark.parametrize(
+    "schedule",
+    [pytest.param({}, id="dir"), pytest.param({"method": "stride", "stride": 2}, id="stride2")],
+)
+def test_pagerank_resume_equivalence(spark, tmp_path, schedule):
     g = make_graph(spark, PRWCC_EDGES, PRWCC_VERTEX_IDS)
     full = _rank_dict(
-        pagerank(g, checkpoint_dir=str(tmp_path / "full"), run_id="full", max_supersteps=8)
+        pagerank(
+            g, checkpoint_dir=str(tmp_path / "full"), run_id="full", max_supersteps=8,
+            **schedule,
+        )
     )
     # interrupted run: budget of 3 supersteps, then resume to completion
-    pagerank(g, checkpoint_dir=str(tmp_path / "resumed"), run_id="r1", max_supersteps=3)
+    pagerank(
+        g, checkpoint_dir=str(tmp_path / "resumed"), run_id="r1", max_supersteps=3,
+        **schedule,
+    )
     assert CheckpointManager(str(tmp_path / "resumed"), "r1").latest_complete() == 3
     resumed = _rank_dict(
         pagerank(
@@ -34,6 +45,7 @@ def test_pagerank_resume_equivalence(spark, tmp_path, backend):
             run_id="r1",
             max_supersteps=8,
             resume=True,
+            **schedule,
         )
     )
     assert resumed == full

@@ -1,7 +1,9 @@
+import warnings
+
 from tests.conftest import PRWCC_EDGES, PRWCC_VERTEX_IDS, make_graph
 from tests.oracles import random_graph, wcc_oracle
 
-from incubator_hugegraph_computer_spark.operators.wcc import wcc
+from incubator_hugegraph_computer_spark.operators.wcc import WccProgram, wcc
 
 
 def _as_dict(df):
@@ -92,27 +94,36 @@ def test_wcc_contract_matches_propagate(spark):
 
 
 def test_wcc_stride_matches_propagate(spark):
-    """Stride-unrolled WCC must equal plain min-propagation, and a
-    40-chain must need ~1/stride the barriers."""
-    from incubator_hugegraph_computer_spark.operators.wcc import WccStrideProgram
+    """Stride-fused WCC must equal plain min-propagation, also when the
+    superstep budget truncates both runs, and a 40-chain must need
+    ~1/stride the barriers."""
     from incubator_hugegraph_computer_spark.plans.bsp import BspEngine
 
-    for edges, ids in [
-        (PRWCC_EDGES, PRWCC_VERTEX_IDS),
-        (random_graph(80, 120, seed=11), list(range(80))),
-        ([(i, i + 1) for i in range(40)], list(range(41))),
+    chain_edges, chain_ids = [(i, i + 1) for i in range(40)], list(range(41))
+    for edges, ids, budget in [
+        (PRWCC_EDGES, PRWCC_VERTEX_IDS, 100),
+        (random_graph(80, 120, seed=11), list(range(80)), 100),
+        (chain_edges, chain_ids, 100),
+        # 5 hops leave the chain unmerged: both methods stop at the same
+        # superstep, return the same partial labels and warn
+        (chain_edges, chain_ids, 5),
     ]:
         g = make_graph(spark, edges, vertex_ids=ids)
-        a = {r["id"]: r["comp"] for r in wcc(g).collect()}
-        b = {r["id"]: r["comp"] for r in wcc(g, method="stride", stride=4).collect()}
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            a = {r["id"]: r["comp"] for r in wcc(g, max_supersteps=budget).collect()}
+            b = {
+                r["id"]: r["comp"]
+                for r in wcc(g, max_supersteps=budget, method="stride", stride=4).collect()
+            }
         assert a == b
+        warned = [w for w in caught if "not converged" in str(w.message)]
+        assert len(warned) == (2 if budget == 5 else 0), [str(w.message) for w in caught]
 
-    chain = make_graph(
-        spark, [(i, i + 1) for i in range(40)], vertex_ids=list(range(41))
-    ).symmetrized().cache()
-    engine = BspEngine(chain, max_supersteps=100, count_messages=False)
-    _, ctx = engine.run(WccStrideProgram(chain, stride=4))
-    assert ctx.superstep <= 12  # 40 hops / 4 per barrier + convergence detect
+    chain = make_graph(spark, chain_edges, vertex_ids=chain_ids).symmetrized().cache()
+    engine = BspEngine(chain, max_supersteps=100, count_messages=False, stride=4)
+    _, ctx = engine.run(WccProgram())
+    assert len(ctx.stats) <= 12  # 40 hops / 4 per barrier + convergence detect
 
 
 def test_uuid_id_bytesid_order(spark):
