@@ -28,6 +28,17 @@ from pyspark.sql import DataFrame, functions as F
 # EdgeFrequency.java:26-29): at most one edge per (src, dst).
 
 
+def stored_rdd(df: DataFrame):
+    """The RDD whose blocks hold ``df`` when ``df`` is a local checkpoint
+    (a ``LogicalRDD`` scan of a stored RDD, as ``plans/lineage.barrier``
+    returns), else None. A frame built from local Python rows is a
+    ``LogicalRDD`` too, over an RDD that stores nothing."""
+    plan = df._jdf.queryExecution().logical()
+    if plan.getClass().getSimpleName() == "LogicalRDD" and plan.rdd().getStorageLevel().isValid():
+        return plan.rdd()
+    return None
+
+
 class Graph:
     """Immutable graph handle: partitioned edges + vertex dimension."""
 
@@ -68,9 +79,14 @@ class Graph:
         return cls(verts, edges, num_partitions)
 
     def cache(self) -> "Graph":
+        """Store both frames once and keep their counts. A frame that is
+        already a local checkpoint stays as it is: its blocks hold it,
+        and caching it would store it a second time."""
         if not self._cached:
-            self.edges = self.edges.persist()
-            self.vertices = self.vertices.persist()
+            if stored_rdd(self.edges) is None:
+                self.edges = self.edges.persist()
+            if stored_rdd(self.vertices) is None:
+                self.vertices = self.vertices.persist()
             self._cached = True
         return self
 

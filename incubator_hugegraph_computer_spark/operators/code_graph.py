@@ -10,8 +10,11 @@ queries a build/refactoring pipeline asks of that graph:
   the condensation DAG. Everything in layer k can compile concurrently
   once layers < k are done. Reference parity: composes the engine's SCC
   (``vermeer/algorithms/scc.go`` semantics, scc = min member id) with a
-  max-propagation BSP loop — the same join-aggregate superstep shape as
-  SSSP with (max, +1) instead of (min, +w).
+  max-plus ``ReduceProgram`` on ``BspEngine`` over the condensation —
+  the same join-aggregate superstep shape as SSSP with (max, +1)
+  instead of (min, +w); ``critical_path`` runs the same program with
+  the component cost as the weight. A chain deeper than the superstep
+  budget warns rather than returning cut-short layers.
 * ``coupling_metrics`` — Martin's afferent/efferent coupling per module
   (Ca = distinct dependents, Ce = distinct dependencies) and the
   instability ratio I = Ce / (Ca + Ce). Pure one-pass aggregates.
@@ -30,10 +33,13 @@ changed-set size (a CI batch, not the corpus), not V.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+import warnings
+
+from pyspark.sql import Column, DataFrame, functions as F
 
 from incubator_hugegraph_computer_spark.graph import Graph
 from incubator_hugegraph_computer_spark.operators.scc import scc
+from incubator_hugegraph_computer_spark.plans.bsp import BspEngine, ReduceProgram, SuperstepContext
 from incubator_hugegraph_computer_spark.plans.lineage import barrier, release
 
 
@@ -49,49 +55,79 @@ def condensation_edges(graph: Graph, labels: DataFrame) -> DataFrame:
     )
 
 
+class _LongestPath(ReduceProgram):
+    """Max-plus propagation over the condensation DAG: ``value =
+    max(value, max(msg) + w)``, where ``w`` is the receiving component's
+    weight. Every component starts active; afterwards only those whose
+    value rose last superstep send."""
+
+    name = "longest_path"
+
+    def initial_state(self, graph: Graph) -> DataFrame:
+        return graph.vertices.select("id", "value", "w", F.lit(True).alias("active"))
+
+    def message_col(self, ctx: SuperstepContext) -> Column:
+        return F.col("value")
+
+    def reduce_agg(self, col: Column) -> Column:
+        return F.max(col)
+
+    def merge(self, state: DataFrame, inbox: DataFrame, ctx: SuperstepContext) -> DataFrame:
+        new = F.greatest(F.col("value"), F.coalesce(F.col("msg") + F.col("w"), F.col("value")))
+        return state.join(inbox, "id", "left").select(
+            "id", new.alias("value"), "w", (new > F.col("value")).alias("active")
+        )
+
+
+def _longest_paths(
+    graph: Graph, labels: DataFrame, comps: DataFrame, max_depth: int, op: str
+) -> DataFrame:
+    """(id, value, w, active) over the components ``comps`` (id, value,
+    w) of ``labels``, after ``_LongestPath`` has run on ``BspEngine`` over
+    the condensation to its fixpoint or ``max_depth`` supersteps. A
+    chain deeper than the budget warns: its values are cut short."""
+    dag = Graph(comps, condensation_edges(graph, labels), graph.num_partitions)
+    state, ctx = BspEngine(dag, max_supersteps=max_depth, count_messages=False).run(
+        _LongestPath()
+    )
+    if ctx.active_vertices > 0:
+        warnings.warn(
+            f"{op} hit max_depth={max_depth} with {ctx.active_vertices} "
+            "components still active: the condensation has a deeper chain "
+            "and the answer is truncated; raise max_depth",
+            stacklevel=3,
+        )
+    return state
+
+
 def build_layers(graph: Graph, max_depth: int = 200) -> DataFrame:
     """(id, scc, layer): layer = longest path (in condensation-DAG hops)
     ending at the vertex's component; layer-0 components have no
     dependencies outside their own cycle.
 
-    Longest-path-to-fixpoint: start every component at 0 and propagate
-    ``layer[dst] = max(layer[dst], layer[src] + 1)`` until no change —
-    on a DAG this terminates in (longest path length) supersteps, and
-    seeding ALL nodes at 0 is equivalent to seeding sources only (any
-    maximal path extends backwards to an in-degree-0 component).
-    Frontier-pruned: only components whose layer rose last round send.
+    Longest path to fixpoint: every component starts at 0 and
+    ``_LongestPath`` with weight 1 runs ``layer[dst] = max(layer[dst],
+    layer[src] + 1)`` until no change. On a DAG that takes (longest path
+    length) supersteps, and seeding ALL components at 0 is equivalent to
+    seeding sources only (any maximal path extends backwards to an
+    in-degree-0 component). ``max_depth`` bounds the supersteps; a
+    deeper chain warns. The answer is stored once, and the labels and
+    the loop's frames are released.
     """
-    labels = scc(graph).persist()
-    cedges = condensation_edges(graph, labels).persist()
-    state = (
-        labels.select(F.col("scc").alias("cid"))
+    labels = scc(graph)
+    comps = (
+        labels.select(F.col("scc").alias("id"))
         .distinct()
-        .select("cid", F.lit(0).cast("long").alias("layer"), F.lit(True).alias("chg"))
-        .persist()
+        .select("id", F.lit(0).cast("long").alias("value"), F.lit(1).cast("long").alias("w"))
     )
-    for _ in range(max_depth):
-        msgs = (
-            state.where("chg")
-            .select(F.col("cid").alias("src"), "layer")
-            .join(cedges, "src")
-            .groupBy(F.col("dst").alias("cid"))
-            .agg((F.max("layer") + F.lit(1)).alias("m"))
-        )
-        state, chg = barrier(
-            state,
-            state.join(msgs, "cid", "left").select(
-                "cid",
-                F.greatest(F.col("layer"), F.coalesce(F.col("m"), F.col("layer"))).alias("layer"),
-                (F.coalesce(F.col("m"), F.lit(-1)) > F.col("layer")).alias("chg"),
-            ),
-            F.sum(F.col("chg").cast("int")),
-        )
-        if (chg[0] or 0) == 0:
-            break
-    out = labels.join(
-        state.select(F.col("cid").alias("scc"), "layer"), "scc"
-    ).select("id", "scc", "layer")
-    cedges.unpersist()
+    state = _longest_paths(graph, labels, comps, max_depth, "build_layers")
+    out, _ = barrier(
+        None,
+        labels.join(state.select(F.col("id").alias("scc"), F.col("value").alias("layer")), "scc")
+        .select("id", "scc", "layer"),
+    )
+    release(state)
+    release(labels)
     return out
 
 
@@ -109,71 +145,40 @@ def critical_path(
     compile seconds, or bytes as a proxy); defaults to the
     SQL-replayable ``(id % 7) + 1`` synthetic cost so the schedule is
     oracle-checkable. Component cost = sum of member costs (a cycle
-    must build together). Same max-plus superstep loop as
-    :func:`build_layers` with (+ component cost) instead of (+1);
-    integer arithmetic throughout, so the oracle match is exact.
+    must build together). The same ``_LongestPath`` loop as
+    :func:`build_layers`, with every component starting at its cost and
+    the component cost as the weight; integer arithmetic throughout, so
+    the oracle match is exact. ``max_depth`` bounds the supersteps; a
+    deeper chain warns.
 
     100 TB shape: identical to build_layers — the loop runs on the
     condensation; the only full-width work is the final label join.
     """
-    labels = scc(graph).persist()
+    labels = scc(graph)
     if costs is None:
         costs = graph.vertices.select(
             "id", ((F.col("id") % 7) + 1).cast("long").alias("cost")
         )
-    csum = (
+    comps = (
         labels.join(costs, "id")
-        .groupBy("scc")
+        .groupBy(F.col("scc").alias("id"))
         .agg(F.sum("cost").alias("w"))
-        .withColumnRenamed("scc", "cid")
-        .persist()
+        .select("id", F.col("w").alias("value"), "w")
     )
-    cedges = condensation_edges(graph, labels).persist()
-    state = csum.select(
-        "cid", F.col("w").alias("finish"), F.lit(True).alias("chg")
-    ).persist()
-    for _ in range(max_depth):
-        msgs = (
-            state.where("chg")
-            .select(F.col("cid").alias("src"), "finish")
-            .join(cedges, "src")
-            .groupBy(F.col("dst").alias("cid"))
-            .agg(F.max("finish").alias("m"))
-        )
-        state, chg = barrier(
-            state,
-            state.join(msgs, "cid", "left")
-            .join(csum, "cid")
-            .select(
-                "cid",
-                F.greatest(
-                    F.col("finish"), F.coalesce(F.col("m") + F.col("w"), F.col("finish"))
-                ).alias("finish"),
-                (
-                    F.coalesce(F.col("m") + F.col("w"), F.lit(-1)) > F.col("finish")
-                ).alias("chg"),
-            ),
-            F.sum(F.col("chg").cast("int")),
-        )
-        if (chg[0] or 0) == 0:
-            break
-    # materialize before releasing labels/csum — out's lazy checkpoint
-    # still reads them until its first action
+    state = _longest_paths(graph, labels, comps, max_depth, "critical_path")
     out, _ = barrier(
         None,
-        labels.join(state.select(F.col("cid").alias("scc"), "finish"), "scc")
-        .join(csum.select(F.col("cid").alias("scc"), "w"), "scc")
-        .select(
-            "id",
+        labels.join(
+            state.select(
+                F.col("id").alias("scc"),
+                (F.col("value") - F.col("w")).alias("est"),
+                F.col("value").alias("finish"),
+            ),
             "scc",
-            (F.col("finish") - F.col("w")).alias("est"),
-            "finish",
-        ),
+        ).select("id", "scc", "est", "finish"),
     )
     release(state)
-    cedges.unpersist()
-    csum.unpersist()
-    labels.unpersist()
+    release(labels)
     return out
 
 

@@ -55,7 +55,6 @@ class EigenvectorProgram(BspProgram):
 
 def eigenvector(graph: Graph, iterations: int = 5, **engine_kwargs) -> DataFrame:
     """(id, x) after ``iterations`` sum-normalized power steps."""
-    engine_kwargs.setdefault("count_messages", False)
     engine = BspEngine(graph, max_supersteps=iterations, **engine_kwargs)
     state, _ = engine.run(EigenvectorProgram(), resume=False)
     return state.select("id", "x")

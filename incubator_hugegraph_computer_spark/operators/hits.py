@@ -97,7 +97,6 @@ class HitsProgram(BspProgram):
 
 def hits(graph: Graph, iterations: int = 5, **engine_kwargs) -> DataFrame:
     """(id, auth, hub) after ``iterations`` sum-normalized HITS rounds."""
-    engine_kwargs.setdefault("count_messages", False)
     engine = BspEngine(graph, max_supersteps=iterations, **engine_kwargs)
     state, _ = engine.run(HitsProgram(graph), resume=False)
     return state.select("id", "auth", "hub")

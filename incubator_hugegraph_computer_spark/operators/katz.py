@@ -14,7 +14,7 @@ scalars: every superstep runs the same plan with α as its one literal.
 Each superstep is the engine's standard combined message pass
 (SHUFFLE_HASH state⋈edges on src + map-side-combined groupBy(dst)) —
 one shuffle whose volume is bounded by distinct targets, V-row state,
-no driver scalars at all (count_messages=False ⇒ one action/step).
+no driver scalars at all.
 
 Truncation at K is the deterministic fixed-iteration mode the DuckDB
 oracle mirrors; for convergence α must be < 1/λ_max — callers picking
@@ -63,7 +63,6 @@ class KatzProgram(BspProgram):
 
 def katz(graph: Graph, alpha: float = ALPHA_DEFAULT, iterations: int = 4, **engine_kwargs) -> DataFrame:
     """(id, katz) — attenuated-walk centrality truncated at ``iterations`` hops."""
-    engine_kwargs.setdefault("count_messages", False)
     engine = BspEngine(graph, max_supersteps=iterations, **engine_kwargs)
     state, _ = engine.run(KatzProgram(alpha), resume=False)
     return state.select("id", "katz")

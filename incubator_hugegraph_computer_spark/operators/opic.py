@@ -89,7 +89,6 @@ class OpicProgram(BspProgram):
 def opic(graph: Graph, iterations: int = 5, **engine_kwargs) -> DataFrame:
     """(id, opic) — the OPIC importance estimate ``(H+C)/(T+1)`` after
     exactly ``iterations`` synchronous cash-distribution steps."""
-    engine_kwargs.setdefault("count_messages", False)
     engine = BspEngine(graph, max_supersteps=iterations, **engine_kwargs)
     state, _ = engine.run(OpicProgram(), resume=False)
     out = state.select(

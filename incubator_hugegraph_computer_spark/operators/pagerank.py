@@ -319,7 +319,7 @@ def pagerank_classic_trace(
     the aggregators themselves are value-checked, not just the final
     ranks. Floats rounded to 6 dp on both sides."""
     program = PageRankClassicProgram(damping, tol=0.0)
-    engine = BspEngine(graph, max_supersteps=iterations, count_messages=False)
+    engine = BspEngine(graph, max_supersteps=iterations)
     state, ctx = engine.run(program)
     rows = [
         (

@@ -99,7 +99,6 @@ class SalsaProgram(BspProgram):
 def salsa(graph: Graph, iterations: int = 5, **engine_kwargs) -> DataFrame:
     """(id, auth, hub) after ``iterations`` sum-normalized SALSA rounds."""
     program = SalsaProgram(graph)
-    engine_kwargs.setdefault("count_messages", False)
     engine = BspEngine(graph, max_supersteps=iterations, **engine_kwargs)
     state, _ = engine.run(program, resume=False)
     out = state.select("id", "auth", "hub")

@@ -19,11 +19,17 @@ Spark formulation (the standard distributed ColorSCC):
      is in SCC(r) (it reaches r, and r reaches it by construction).
   3. remove assigned vertices, repeat.
 
-Round compression (the trick of BspEngine's ``stride``): both
-inner loops unroll ``stride`` propagation hops per materialization
-barrier — the shuffle count per hop is unchanged, but driver
-round-trips, convergence probes and lineage checkpoints drop by the
-stride factor, which is what dominates on high-diameter color classes.
+Both phases are ``WccProgram`` runs on ``BspEngine(stride=stride,
+count_messages=False)`` over the live graph: coloring over its edges,
+the sweep over the reverse edges kept within a color class, seeded with
+the roots' ids and a sentinel above any id elsewhere (the members are
+the rows a root's label reached). The engine's stride fuses ``stride``
+hops per barrier, so driver round-trips, convergence probes and lineage
+checkpoints drop by that factor, which is what dominates on
+high-diameter color classes. Each run's budget is the live vertex
+count: no min label crosses more edges than that, so both reach their
+fixpoint, however long a cycle is.
+
 Every per-round state passes ``plans/lineage.barrier``: one stored
 copy (a lazy localCheckpoint materialized by the round's one action),
 then the previous round's state is released — chained eager
@@ -56,95 +62,32 @@ from functools import reduce
 from pyspark.sql import DataFrame, functions as F
 
 from incubator_hugegraph_computer_spark.graph import Graph
+from incubator_hugegraph_computer_spark.operators.wcc import WccProgram
 from incubator_hugegraph_computer_spark.plans import local
+from incubator_hugegraph_computer_spark.plans.bsp import BspEngine
 from incubator_hugegraph_computer_spark.plans.lineage import barrier, release
 
 
-def _propagate_min(
-    vertices: DataFrame, edges: DataFrame, max_iter: int = 100, stride: int = 4
-) -> DataFrame:
-    """(id, color): min source id reaching each vertex along edges.
-
-    ``stride`` forward hops run per barrier; convergence is probed per
-    barrier (at most ``stride - 1`` no-op hops after the true fixpoint,
-    each a cheap empty-frontier join)."""
-    state, _ = barrier(
-        None,
-        vertices.select("id", F.col("id").alias("color"), F.lit(True).alias("chg")),
-    )
-    for _ in range(0, max_iter, stride):
-        cur = state
-        for _hop in range(stride):
-            # delta propagation: only vertices whose color changed in
-            # the previous hop send — late hops touch a shrinking
-            # frontier instead of re-joining every vertex to E
-            msgs = (
-                cur.where("chg")
-                .select(F.col("id").alias("src"), "color")
-                .join(edges, "src")
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.min("color").alias("m"))
-            )
-            cur = cur.join(msgs, "id", "left").select(
-                "id",
-                F.least(
-                    F.col("color"), F.coalesce(F.col("m"), F.col("color"))
-                ).alias("color"),
-                F.coalesce(F.col("m") < F.col("color"), F.lit(False)).alias("chg"),
-            )
-        # one action: materializes the new state AND probes convergence
-        # (a barrier whose frontier produced no change is a fixpoint —
-        # min propagation only triggers from prior changes)
-        state, row = barrier(state, cur, F.sum(F.col("chg").cast("int")))
-        if (row[0] or 0) == 0:
-            break
-    # hand back a materialized 2-col frame and release the internal
-    # state — callers own (and must release) the returned frame
-    return barrier(state, state.select("id", "color"))[0]
+# The sweep's seed for a vertex that is not a root: above any id, so
+# every label below it is a root's.
+_UNREACHED = 2**63 - 1
 
 
-def _backward_sweep(
-    roots: DataFrame, colored_rev: DataFrame, stride: int = 4
-) -> DataFrame:
-    """All (id, scc) reached from ``roots`` along ``colored_rev``
-    (reverse edges already restricted to equal color classes), as one
-    stored frame. ``stride`` frontier expansions per barrier."""
-    seed, _ = barrier(None, roots)
-    # members = lazy union over the barrier-materialized frontier
-    # frames: each leaf is a flat checkpoint scan, so the anti-join pays no
-    # nested lineage and the member set is never re-materialized per
-    # round (the same shape as betweenness's visited set)
-    parts = [seed]
-    members = seed
-    frontier = seed
-    while True:
-        cur = frontier
-        hops = []
-        for _hop in range(stride):
-            cur = (
-                cur.select(F.col("id").alias("src"), "scc")
-                .join(colored_rev, "src")
-                .select(F.col("dst").alias("id"), "scc")
-                .distinct()
-            )
-            hops.append(cur)
-        grown = hops[0]
-        for h in hops[1:]:
-            grown = grown.unionAll(h)
-        nxt, (n,) = barrier(
-            None,
-            grown.distinct().join(members.select("id"), "id", "left_anti"),
+class _RootSweep(WccProgram):
+    """The backward sweep as min-label propagation over reverse edges kept
+    within one color class: a root (``comp == id`` in the coloring) starts
+    at its own id and every other vertex at ``_UNREACHED``, so a vertex
+    ends at its class root's id exactly when it reaches the root."""
+
+    name = "scc_sweep"
+
+    def initial_state(self, graph: Graph) -> DataFrame:
+        root = F.col("comp") == F.col("id")
+        return graph.vertices.select(
+            "id",
+            F.when(root, F.col("id")).otherwise(F.lit(_UNREACHED)).alias("comp"),
+            root.alias("active"),
         )
-        if n == 0:
-            release(nxt)
-            break
-        parts.append(nxt)
-        members = members.unionAll(nxt)
-        frontier = nxt
-    members, _ = barrier(None, members)
-    for p in parts:
-        release(p)
-    return members
 
 
 def scc(graph: Graph, max_outer: int = 50, stride: int = 4) -> DataFrame:
@@ -153,6 +96,7 @@ def scc(graph: Graph, max_outer: int = 50, stride: int = 4) -> DataFrame:
     if graph.is_cached and local.fits(graph):
         return local.scc_labels(graph.vertices, graph.edges)
     spark = graph.spark
+    id_type = graph.vertices.schema["id"].dataType
     assigned_parts: list[DataFrame] = []
     verts, (n_verts,) = barrier(None, graph.vertices.select("id"))
     edges, (n_edges,) = barrier(
@@ -201,50 +145,53 @@ def scc(graph: Graph, max_outer: int = 50, stride: int = 4) -> DataFrame:
         # the input (DAG mass is gone) while the cached edge frame still
         # carries full-width partitioning — every propagate barrier then
         # pays full task scheduling on a tiny graph. Re-bucket the core
-        # by src once per outer round; src is the propagate/sweep join
+        # by src once per outer round; src is the coloring/sweep join
         # key, so the cached layout feeds every hop without reshuffling
         # the edge side.
         parts = min(graph.num_partitions, max(4, n_verts // 25_000 + 1))
         if parts < graph.num_partitions:
             edges, _ = barrier(edges, edges.repartition(parts, "src"))
 
-        # ---- color forward (min id), then sweep backward within color
-        color = _propagate_min(verts, edges, stride=stride)
+        # ---- color forward (min id reaching each vertex), then sweep
+        # backward from each root within its color class. A min label
+        # crosses at most n_verts - 1 edges, so a budget of n_verts
+        # supersteps ends each run with a superstep that changes nothing.
+        min_labels = dict(max_supersteps=n_verts, stride=stride, count_messages=False)
+        color, _ = BspEngine(
+            Graph(verts, edges, parts, prepartitioned=True), **min_labels
+        ).run(WccProgram())
         rev = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        # backward frontier from roots, constrained to same color
         colored_rev, _ = barrier(
             None,
             rev.join(
-                color.withColumnRenamed("id", "src").withColumnRenamed(
-                    "color", "c_src"
-                ),
-                "src",
+                color.select(F.col("id").alias("src"), F.col("comp").alias("c_src")), "src"
             )
-            .join(
-                color.withColumnRenamed("id", "dst").withColumnRenamed(
-                    "color", "c_dst"
-                ),
-                "dst",
-            )
+            .join(color.select(F.col("id").alias("dst"), F.col("comp").alias("c_dst")), "dst")
             .where(F.col("c_src") == F.col("c_dst"))
             .select("src", "dst")
             .repartition(parts, "src"),
         )
-        roots = color.where(F.col("color") == F.col("id")).select(
-            "id", F.col("color").alias("scc")
-        )
-        members = _backward_sweep(roots, colored_rev, stride=stride)
+        swept, _ = BspEngine(
+            Graph(color, colored_rev, parts, prepartitioned=True), **min_labels
+        ).run(_RootSweep())
         release(color)
+        release(colored_rev)
+        members, _ = barrier(
+            None,
+            swept.where(F.col("comp") != _UNREACHED).select(
+                "id", F.col("comp").cast(id_type).alias("scc")
+            ),
+        )
         assigned_parts.append(members)
         verts, (n_verts,) = barrier(
-            verts, verts.join(members.select("id"), "id", "left_anti")
+            verts, swept.where(F.col("comp") == _UNREACHED).select("id")
         )
+        release(swept)
         edges, (n_edges,) = barrier(
             edges,
             edges.join(verts.withColumnRenamed("id", "src"), "src", "left_semi")
             .join(verts.withColumnRenamed("id", "dst"), "dst", "left_semi"),
         )
-        release(colored_rev)
     driver_part: list[DataFrame] = []
     if n_verts != 0 and max(n_verts, n_edges) <= local.LOCAL_EDGES:
         # a small live graph: the rounds left are fixed cost, finish here

@@ -20,6 +20,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Row, functions as F
 
+from incubator_hugegraph_computer_spark.graph import stored_rdd
+
 
 def release(df: DataFrame) -> None:
     """Free what ``df`` stores: its cache entry and, when ``df`` is a
@@ -27,9 +29,9 @@ def release(df: DataFrame) -> None:
     leaves to the JVM garbage collector. Call it only once every
     consumer of ``df`` has materialized."""
     df.unpersist()
-    plan = df._jdf.queryExecution().logical()
-    if plan.getClass().getSimpleName() == "LogicalRDD":
-        plan.rdd().unpersist(False)
+    rdd = stored_rdd(df)
+    if rdd is not None:
+        rdd.unpersist(False)
 
 
 def barrier(

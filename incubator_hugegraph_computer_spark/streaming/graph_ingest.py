@@ -111,7 +111,6 @@ def run_pagerank_stream(
             damping=damping,
             max_iterations=max_iterations,
             tol=tol,
-            count_messages=False,
             initial_ranks=warm,
         )
         ranks.write.mode("overwrite").parquet(f"{ranks_dir}/batch-{batch_id}")

@@ -6,9 +6,11 @@ import gc
 import time
 
 import pytest
+from pyspark.sql import functions as F
 
 from incubator_hugegraph_computer_spark.graph import Graph
 from incubator_hugegraph_computer_spark.operators.betweenness import betweenness
+from incubator_hugegraph_computer_spark.operators.code_graph import build_layers, critical_path
 from incubator_hugegraph_computer_spark.operators.ktruss import trussness
 from incubator_hugegraph_computer_spark.operators.lpa import lpa
 from incubator_hugegraph_computer_spark.operators.pagerank import pagerank
@@ -17,6 +19,7 @@ from incubator_hugegraph_computer_spark.operators.sssp import sssp
 from incubator_hugegraph_computer_spark.operators.wcc import WccProgram, wcc
 from incubator_hugegraph_computer_spark.plans import bsp, local
 from incubator_hugegraph_computer_spark.plans.bsp import BspEngine
+from incubator_hugegraph_computer_spark.plans.lineage import barrier, release
 from tests.conftest import PRWCC_EDGES, PRWCC_VERTEX_IDS, make_graph
 from tests.test_templates import CappedMaxLabel, _components_graph
 
@@ -156,6 +159,44 @@ def test_betweenness_leaves_only_its_answer(spark, per_edge):
     want = (n - 1) * (n - 2) / 2 if not per_edge else n * (n - 1) / 2
     assert len(rows) == n and all(r["betweenness"] == want for r in rows)
     assert len(added) <= 1, added
+
+
+@pytest.mark.parametrize("op", [build_layers, critical_path], ids=lambda f: f.__name__)
+def test_code_graph_leaves_only_its_answer(spark, cyclic, monkeypatch, op):
+    """The answer is stored once before the SCC labels (a stored frame on
+    the Spark path), the condensation and the loop's state go."""
+    monkeypatch.setattr(local, "LOCAL_EDGES", 0)
+    out, added = persisted_rdds_added(spark, lambda: op(cyclic))
+    rows = out.collect()  # ``out`` is still referenced while the count is read
+    comp = {0: 0, 1: 0, 2: 0, 3: 0, 4: 4, 5: 4, 6: 4, 7: 7}
+    # condensation 0 -> 4 -> 7; costs (id % 7) + 1 sum to 10, 18 and 1
+    if op is build_layers:
+        want = {0: 0, 4: 1, 7: 2}
+        got = {r["id"]: r["layer"] for r in rows}
+    else:
+        want = {0: (0, 10), 4: (10, 28), 7: (28, 29)}
+        got = {r["id"]: (r["est"], r["finish"]) for r in rows}
+    assert got == {v: want[c] for v, c in comp.items()}
+    assert len(added) <= 1, added
+
+
+def test_graph_cache_keeps_checkpoints_single(spark):
+    """A graph over two barrier frames caches nothing more: their blocks
+    hold them already. The counts are still kept."""
+    verts, _ = barrier(None, spark.range(5))
+    edges, _ = barrier(
+        None, spark.range(5).select(F.col("id").alias("src"), ((F.col("id") + 1) % 5).alias("dst"))
+    )
+    g = Graph(verts, edges, num_partitions=4, prepartitioned=True)
+    counts, added = persisted_rdds_added(
+        spark, lambda: (g.cache().num_vertices(), g.num_edges())
+    )
+    assert counts == (5, 5)
+    assert not added, added
+    assert g.is_cached and g._counts == {"vertices": 5, "edges": 5}
+    g.unpersist()
+    release(verts)
+    release(edges)
 
 
 @pytest.mark.parametrize("program", [WccProgram, CappedMaxLabel])

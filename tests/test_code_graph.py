@@ -1,13 +1,18 @@
 """Build layering, coupling metrics, change-impact — hand-checked fixtures."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from incubator_hugegraph_computer_spark.graph import Graph
 from incubator_hugegraph_computer_spark.operators.code_graph import (
     build_layers,
     coupling_metrics,
+    critical_path,
     impact_set,
 )
+
+# A budget-truncated layering warns; no fixture here may trip it.
+pytestmark = pytest.mark.filterwarnings("error:.*hit max_depth")
 
 
 def _g(spark, edges):
@@ -40,8 +45,6 @@ def test_critical_path_weighted_schedule(spark):
     """PERT over the condensation: cycle builds as one unit (summed
     cost), est = max finish over dependency chains, and a heavier long
     chain must beat a shorter direct edge."""
-    from incubator_hugegraph_computer_spark.operators.code_graph import critical_path
-
     # costs (id%7)+1: 1->2, 2->3, 3->4, 4->5, 5->6
     # cycle {1,2} (cost 2+3=5) -> 3 (4) -> 4 (5); also 1->4 direct;
     # 5 isolated (cost 6)
@@ -57,6 +60,17 @@ def test_critical_path_weighted_schedule(spark):
     assert rows[3] == (3, 5, 9)          # starts after the cycle
     assert rows[4] == (4, 9, 14)         # chain (9) beats direct edge (5)
     assert rows[5] == (5, 0, 6)          # no deps: est 0
+
+
+@pytest.mark.parametrize("run", [build_layers, critical_path], ids=lambda f: f.__name__)
+def test_longest_path_budget_warns(spark, run):
+    """A condensation chain deeper than ``max_depth`` warns with the count
+    of components still active; a budget that covers it does not."""
+    g = _g(spark, [(i, i + 1) for i in range(6)])
+    with pytest.warns(UserWarning, match=r"hit max_depth=3 with \d+ components still active"):
+        run(g, max_depth=3).collect()
+    rows = run(g, max_depth=7).collect()
+    assert len(rows) == 7
 
 
 def test_coupling_metrics(spark):

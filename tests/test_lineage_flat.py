@@ -3,11 +3,11 @@
 PLANS.md ("Lineage discipline") measured that a loop chaining eager
 ``localCheckpoint(eager=True)`` per round doubles per-round wall time
 from ~round 16 and OOMs the driver near round 60. Every iterative
-operator loop now routes state through ``plans/lineage.barrier``; this
-test drives the heaviest converted loop (scc's nested
-propagate + backward sweep) through 45+ barriers on a long
-directed cycle and asserts per-barrier wall time does NOT grow — the
-cliff signature (2x per round) would blow the bound by orders of
+operator loop now routes state through ``plans/lineage.barrier``; these
+tests drive ``BspEngine``'s barriers through 45+ rounds (scc's coloring
+and backward sweep on a long directed cycle, build_layers' longest-path
+loop on a deep chain) and assert per-barrier wall time does NOT grow —
+the cliff signature (2x per round) would blow the bound by orders of
 magnitude long before round 45.
 """
 
@@ -20,10 +20,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from incubator_hugegraph_computer_spark.graph import Graph
-from incubator_hugegraph_computer_spark.operators import scc as scc_mod
-from incubator_hugegraph_computer_spark.plans.lineage import barrier
+from incubator_hugegraph_computer_spark.operators.scc import scc
+from incubator_hugegraph_computer_spark.plans import bsp, local
 
-N = 100  # directed cycle length -> one SCC, ~2N/stride barriers
+N = 120  # directed cycle length -> one SCC, ~2N/stride engine barriers
 
 
 @pytest.fixture()
@@ -49,25 +49,14 @@ def timed_barrier(module, monkeypatch) -> list[float]:
 
 
 def test_scc_long_cycle_flat_rounds(spark, cycle_graph, monkeypatch):
-    stamps = timed_barrier(scc_mod, monkeypatch)
-    # drive the two inner loops directly with a budget covering the
-    # cycle's N-1 propagation hops
-    color = scc_mod._propagate_min(
-        cycle_graph.vertices.select("id"),
-        cycle_graph.edges.select("src", "dst"),
-        max_iter=128,
-        stride=4,
-    )
-    roots = color.where(F.col("color") == F.col("id")).select(
-        "id", F.col("color").alias("scc")
-    )
-    rev = cycle_graph.edges.select(
-        F.col("dst").alias("src"), F.col("src").alias("dst")
-    )
-    members = scc_mod._backward_sweep(roots, barrier(None, rev)[0], stride=4)
+    # the Spark rounds to the end: the coloring must cross all N - 1 hops
+    # of the cycle, which a fixed 100-hop budget cut short (the cycle then
+    # split into N singleton components)
+    monkeypatch.setattr(local, "LOCAL_EDGES", 0)
+    stamps = timed_barrier(bsp, monkeypatch)
+    rows = scc(cycle_graph).collect()
 
     # correctness: the whole cycle is one SCC rooted at 0
-    rows = members.collect()
     assert len(rows) == N
     assert {r["scc"] for r in rows} == {0}
     assert {r["id"] for r in rows} == set(range(N))
@@ -86,12 +75,12 @@ def test_scc_long_cycle_flat_rounds(spark, cycle_graph, monkeypatch):
 
 def test_build_layers_deep_chain_flat(spark, monkeypatch):
     """build_layers on a 50-deep path: the longest-path loop runs ~50
-    barriers (one per condensation level). Before the r5
+    engine barriers (one per condensation level). Before the r5
     conversion this loop chained eager localCheckpoints with a
     max_depth=200 budget — the measured cliff doubles per-round cost
     from ~16 and OOMs near 60, so a flat 50-round run is exactly the
     regression this pins."""
-    from incubator_hugegraph_computer_spark.operators import code_graph as cg
+    from incubator_hugegraph_computer_spark.operators.code_graph import build_layers
 
     depth = 50
     edges = spark.range(depth).select(
@@ -99,8 +88,8 @@ def test_build_layers_deep_chain_flat(spark, monkeypatch):
     )
     g = Graph.from_edges(edges, num_partitions=4)
 
-    stamps = timed_barrier(cg, monkeypatch)
-    rows = cg.build_layers(g, max_depth=depth + 5).collect()
+    stamps = timed_barrier(bsp, monkeypatch)
+    rows = build_layers(g, max_depth=depth + 5).collect()
 
     # correctness: a path graph layers each vertex at its depth
     assert {(r["id"], r["layer"]) for r in rows} == {(i, i) for i in range(depth + 1)}
